@@ -18,6 +18,7 @@ FSDataInputStream — never the whole object — with incremental gzip decode.
 from __future__ import annotations
 
 import io
+import os
 import shutil
 import zlib
 from pathlib import Path
@@ -170,6 +171,21 @@ class FS:
         self._jvm().org.apache.hadoop.fs.FileUtil.copy(
             src_fs, self._jpath(src), dst_fs, self._jpath(dst), True, True, self._hconf()
         )
+
+    def rename(self, src: str, dst: str) -> None:
+        """Atomic same-filesystem rename that never nests ``src`` inside an
+        existing ``dst`` directory (``move`` does): it raises instead."""
+        if not is_uri(src) and not is_uri(dst):
+            os.rename(src, dst)
+            return
+        jvm = self._jvm()
+        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            self._jpath(dst).toUri(), self._hconf()
+        )
+        no_overwrite = self.spark.sparkContext._gateway.new_array(
+            jvm.org.apache.hadoop.fs.Options.Rename, 0
+        )
+        fc.rename(self._jpath(src), self._jpath(dst), no_overwrite)
 
     def delete(self, path: str) -> None:
         if not is_uri(path):

@@ -1389,27 +1389,13 @@ class NearDupIndex:
             self._pending = None
         self._state.release()
 
-    def save(
-        self,
-        path: str,
-        bucket_by: list[str] | None = None,
-        n_buckets: int = 32,
-    ) -> None:
+    def save(self, path: str) -> None:
         """Write the band index durably (parquet state + JSON config) —
         the persisted artifact the class docstring promises: resume
         ingest in a later session without re-signing a single absorbed
         doc. Confluence makes the boundary safe anywhere: flags after a
         save/load are identical to an uninterrupted run (the suite's
-        near_dedup_index_stream crosses one to prove it).
-
-        ``bucket_by=["band_idx", "band_hash"]`` (BOTH probe-join keys —
-        Spark's default requireAllClusterKeysForCoPartition rejects
-        subset bucketing) publishes through saveAsTable so a restore in
-        a catalog-sharing session keeps the index's hash partitioning on
-        disk: flag()'s probe join then shuffles ONLY the arriving batch
-        (measured: the index-side Exchange disappears from the plan,
-        ``Bucketed: true`` on the scan) — the recurring cost at a 100 TB
-        corpus where the index side dwarfs every batch."""
+        near_dedup_index_stream crosses one to prove it)."""
         from etl_file_loader_spark.operators.persist import save_index_state
 
         save_index_state(
@@ -1423,8 +1409,6 @@ class NearDupIndex:
                 "rows_per_band": self.rows_per_band,
             },
             path,
-            bucket_by=bucket_by,
-            n_buckets=n_buckets,
         )
 
     @classmethod
@@ -2107,19 +2091,11 @@ class LinkageIndex:
             self._extra.release()
             self._extra = None
 
-    def save(
-        self,
-        path: str,
-        bucket_by: list[str] | None = None,
-        n_buckets: int = 32,
-    ) -> None:
-        """Write the lowered PassJoin base once, durably — the "written
-        once (bucketed parquet)" sentence from the class docstring as
-        code: the master is scanned/lowered exactly once per master
-        version, across sessions, not once per process (absorbed
-        extension tiers are folded into the written base). ``bucket_by``
-        publishes via saveAsTable for a co-located restore-side probe
-        join (see NearDupIndex.save)."""
+    def save(self, path: str) -> None:
+        """Write the lowered PassJoin base once, durably: the master is
+        scanned/lowered exactly once per master version, across sessions,
+        not once per process (absorbed extension tiers are folded into the
+        written base)."""
         from etl_file_loader_spark.operators.persist import save_index_state
 
         save_index_state(
@@ -2130,8 +2106,6 @@ class LinkageIndex:
                 "max_distance": self.max_distance,
             },
             path,
-            bucket_by=bucket_by,
-            n_buckets=n_buckets,
         )
 
     @classmethod

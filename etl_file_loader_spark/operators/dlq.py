@@ -6,9 +6,12 @@ list (JSON), 1-based file row number, filename, log id, timestamp.
 
 Cleanup-on-reprocess (delete/base.py:32-77): remove DLQ rows for the same
 filename from *earlier* runs (file_load_log_id < current). The reference
-deletes in LIMIT-batches against a DB; in Spark this is a partition-pruned
-filter — store the DLQ partitioned by source_filename so the rewrite touches
-one partition.
+deletes in LIMIT-batches against a DB. Here the DLQ is an unpartitioned
+warehouse table to which each load appends its invalid rows as one file,
+so it grows by one file per load like the run log. The pipeline first
+checks whether it holds any such rows and, only if it does, rewrites the
+whole table as a new snapshot without them. A file loaded for the first
+time leaves the DLQ untouched.
 """
 
 from __future__ import annotations
@@ -62,11 +65,13 @@ def build_dlq(
     )
 
 
+def stale_rows(filename: str, current_log_id: int) -> Column:
+    """True for this file's DLQ rows from earlier runs."""
+    return (F.col("source_filename") == filename) & (
+        F.col("file_load_log_id") < F.lit(current_log_id)
+    )
+
+
 def cleanup_dlq(dlq: DataFrame, filename: str, current_log_id: int) -> DataFrame:
     """Drop this file's DLQ rows from earlier runs (reference delete/base.py:32-77)."""
-    return dlq.filter(
-        ~(
-            (F.col("source_filename") == filename)
-            & (F.col("file_load_log_id") < F.lit(current_log_id))
-        )
-    )
+    return dlq.filter(~stale_rows(filename, current_log_id))

@@ -112,11 +112,6 @@ _C = np.sqrt(2.0 / 8.0) * np.cos((2 * _X + 1) * _K * np.pi / 16.0)
 _C[0, :] = np.sqrt(1.0 / 8.0)
 
 
-def _idct2(coef: np.ndarray) -> np.ndarray:
-    """2-D inverse DCT of an 8x8 coefficient block."""
-    return _C.T @ coef @ _C
-
-
 def _fdct2(block: np.ndarray) -> np.ndarray:
     """2-D forward DCT of an 8x8 sample block."""
     return _C @ block @ _C.T

@@ -1,61 +1,36 @@
-"""Durable state for the maintained-index family (round 12; hardened
-round 13).
+"""Durable state for the maintained-index family.
 
-LinkageIndex / NearDupIndex / HLLIndex kept their state in-session only
-(pinned / localCheckpointed frames); their 100 TB story always said the
-base "would be written once (bucketed parquet)" — this module is that
-sentence as code. State is plain parquet (any Hadoop-FS URI the session
-can reach, same as the source scanners); config rides alongside as a
-one-row JSON parquet, so a restored index is byte-equivalent to the
-in-session one without re-signing / re-lowering / re-sketching anything.
+LinkageIndex / NearDupIndex / HLLIndex and the other maintained indexes keep
+their state in-session (pinned / localCheckpointed frames); ``save`` writes
+it durably so a later session resumes without re-signing, re-lowering or
+re-sketching anything. State is plain parquet on any path or Hadoop-FS URI
+the session can reach; config rides alongside as a one-row JSON parquet.
+The artifact stays engine-portable: DuckDB reads the registers/bands
+directly, which the suite oracles exploit.
 
-Publish discipline (ADVICE r12): both parts are written under one
-staging dir, gated on a ``_SUCCESS`` marker, and adopted with a single
-rename — the same temp-write + marker + move recipe cdc_stream and
-_fold_quantile_epoch use. A crash mid-save leaves either the previous
-complete snapshot or an ignorable husk, never new-state-with-old-meta;
-``load_index_state`` refuses torn or half-written layouts with a clear
-message instead of an opaque path error.
-
-Layout: ``path/snapshot/state`` (the index frame) + ``path/snapshot/
-meta`` (one JSON row) + ``path/snapshot/_SUCCESS``. Pre-round-13 saves
-(``path/state`` + ``path/meta``) still load.
-
-Bucketed variant (round 13 — persist.py's old "a bucketed saveAsTable
-would additionally co-locate the probe join" prose as code): pass
-``bucket_by=[cols], n_buckets=n`` and the state is published through
-``saveAsTable`` so a SAME-SESSION (or shared-metastore) restore returns
-a bucket-aware frame — the restore-side probe join reads the index with
-its hash partitioning already on disk and only the (small) probe side
-shuffles. The parquet files are valid without the catalog entry, so a
-session without the table metadata falls back to a plain read — correct,
-just re-shuffled. Plain parquet stays the default because the artifact
-is engine-portable (DuckDB reads the registers/bands directly, which
-the suite oracles exploit — and still can: bucketed parquet is parquet).
+Layout: each save is one versioned snapshot ``path/snapshot_v<N>`` holding
+``state/`` (the index frame) and ``meta/`` (one JSON row), published by
+:func:`etl_file_loader_spark.snapshots.commit`. ``load_index_state`` reads
+the latest committed snapshot, so a crash at any step of a save leaves the
+previous save loadable; older snapshots are deleted after the commit.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_file_loader_spark import snapshots
+from etl_file_loader_spark.fs import FS
 
-def _bucket_table_name(path: str) -> str:
-    return "efls_idx_" + hashlib.md5(path.encode("utf-8")).hexdigest()[:12]
+PREFIX = "snapshot_v"
 
 
 def _write_meta(spark: SparkSession, meta: dict, path: str) -> None:
-    """One-row meta parquet, built JVM-side (optimization round 14).
-
-    The old ``createDataFrame([(json,)], ...).coalesce(1)`` put the row in
-    a defaultParallelism-partition PYTHON RDD and the coalesce chained all
-    its partitions into one task that paid one Python-worker round trip
-    EACH — measured 5-6 s per save at local[32] (guide §4: eliminate the
-    Python boundary). A ``range(1).select(lit(...))`` plan writes the
-    identical one-row/one-column parquet in one JVM task, ~0.3 s.
-    """
+    """One-row meta parquet, built JVM-side: a ``range(1).select(lit(...))``
+    plan writes it in one JVM task, where ``createDataFrame`` would pay a
+    Python-worker round trip per partition."""
     from pyspark.sql import functions as F
 
     spark.range(1).select(F.lit(json.dumps(meta)).alias("meta")).write.mode(
@@ -63,86 +38,31 @@ def _write_meta(spark: SparkSession, meta: dict, path: str) -> None:
     ).parquet(path)
 
 
-def save_index_state(
-    state: DataFrame,
-    meta: dict,
-    path: str,
-    bucket_by: list[str] | None = None,
-    n_buckets: int = 32,
-) -> None:
-    from etl_file_loader_spark.fs import FS
-
+def save_index_state(state: DataFrame, meta: dict, path: str) -> None:
     spark = state.sparkSession
     fs = FS(spark)
     base = path.rstrip("/")
-    tmp = f"{base}/_tmp_snapshot"
-    final = f"{base}/snapshot"
-    meta = dict(meta)
-    if bucket_by:
-        # bucketing metadata lives in the catalog, which owns the data
-        # location — the table IS the publish for the state part. The
-        # staging discipline still gates ADOPTION: meta + marker land in
-        # the snapshot dir only after the table write committed, and the
-        # state path is recorded so a catalog-less session can fall back.
-        table = _bucket_table_name(base)
-        state_path = f"{base}/state_bucketed"
-        (
-            state.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_by)
-            .sortBy(*bucket_by)
-            .option("path", state_path)
-            .saveAsTable(table)
-        )
-        meta["_bucket"] = {
-            "table": table,
-            "bucket_by": list(bucket_by),
-            "n_buckets": n_buckets,
-            "state_path": state_path,
-        }
-        fs.rmtree(tmp) if fs.exists(tmp) else None
-        _write_meta(spark, meta, f"{tmp}/meta")
-    else:
-        state.write.mode("overwrite").parquet(f"{tmp}/state")
-        _write_meta(spark, meta, f"{tmp}/meta")
-    if not fs.exists(f"{tmp}/_SUCCESS"):
-        fs.write_text(f"{tmp}/_SUCCESS", "")
-    if fs.exists(final):
-        fs.rmtree(final)
-    fs.move(tmp, final)
+    versions = snapshots.committed(fs, base, PREFIX)
+
+    def write(staging: str) -> None:
+        state.write.mode("overwrite").parquet(f"{staging}/state")
+        _write_meta(spark, meta, f"{staging}/meta")
+
+    snapshots.commit(fs, base, PREFIX, versions[-1] + 1 if versions else 0, write)
+    for v in versions:
+        fs.rmtree(f"{base}/{PREFIX}{v}")
 
 
 def load_index_state(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
-    from etl_file_loader_spark.fs import FS
-
     fs = FS(spark)
     base = path.rstrip("/")
-    snap = f"{base}/snapshot"
-    if fs.exists(snap):
-        if not fs.exists(f"{snap}/_SUCCESS"):
-            raise FileNotFoundError(
-                f"index snapshot at {snap} has no _SUCCESS marker — a "
-                "save crashed mid-publish; re-save the index (the "
-                "staging discipline guarantees the previous complete "
-                "snapshot was never destroyed before this one committed)"
-            )
-        meta = json.loads(spark.read.parquet(f"{snap}/meta").head().meta)
-        bucket = meta.pop("_bucket", None)
-        if bucket is not None:
-            table = bucket["table"]
-            if spark.catalog.tableExists(table):
-                return spark.table(table), meta
-            # catalog entry gone (fresh session, no shared metastore):
-            # the parquet is valid, just without bucket metadata
-            return spark.read.parquet(bucket["state_path"]), meta
-        return spark.read.parquet(f"{snap}/state"), meta
-    # pre-round-13 layout
-    if not fs.exists(f"{base}/meta"):
+    versions = snapshots.committed(fs, base, PREFIX)
+    if not versions:
         raise FileNotFoundError(
-            f"no index state at {base}: neither a snapshot/ publish nor "
-            "a legacy state/+meta/ pair (is the path right, and did the "
-            "save complete?)"
+            f"no index state at {base}: no {PREFIX}<N> directory holds a "
+            f"{snapshots.MARKER} marker (is the path right, and did a save "
+            "complete?)"
         )
-    state = spark.read.parquet(f"{base}/state")
-    meta = json.loads(spark.read.parquet(f"{base}/meta").head().meta)
-    return state, meta
+    snap = f"{base}/{PREFIX}{versions[-1]}"
+    meta = json.loads(spark.read.parquet(f"{snap}/meta").head().meta)
+    return spark.read.parquet(f"{snap}/state"), meta

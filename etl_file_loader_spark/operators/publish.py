@@ -200,7 +200,7 @@ def cdc_apply(
     batch (batch-sized, not target-sized) + ONE full-outer equi-join
     against the target (AQE broadcasts small deduped batches). No
     target-side window, no second pass. Pair with the bounded
-    bucket-rewrite writer (``plans.merge_backend``) to publish only
+    bucket-rewrite writer (``Warehouse.merge_overwrite``) to publish only
     touched buckets. Cross-engine: window + join + case logic only,
     DuckDB-oracle-checked (suite ``cdc_apply``).
     """
@@ -384,7 +384,7 @@ def scd2_apply(
     batches); history is a pass-through union — no shuffle touches it.
     Output is the complete new SCD2 state; to publish incrementally, pair
     with the bounded bucket-rewrite writer (``merge_upsert`` /
-    ``plans.merge_backend``) so only touched buckets rewrite on disk.
+    ``Warehouse.merge_overwrite``) so only touched buckets rewrite on disk.
     Cross-engine: hash + case logic only, DuckDB-oracle-checked
     (suite ``scd2_merge``).
     """

@@ -525,16 +525,17 @@ class VersionedCorpus:
     delta-vs-corpus dedup via the index-reducing incremental operators
     (``incremental_dedup`` + ``incremental_near_dedup``: the corpus side
     collapses to a fingerprint / band index ∝ distinct content, never a
-    rescan of old docs), then within-delta near-dedup — and writes ONE new
-    immutable delta directory plus a `_versions` registry row. Old deltas
+    rescan of old docs), then within-delta near-dedup — and commits ONE new
+    immutable delta directory. Old deltas
     are never rewritten (at 100 TB a version bump touches only the new
     batch), shard layouts of prior versions are stable by construction,
     and the held-out split is stable under growth because ``hash_split``
     is a pure function of the doc id.
 
-    Layout under ``root``::
+    Layout under ``root`` (each ``delta_v{N}`` published by
+    :func:`etl_file_loader_spark.snapshots.commit`; the committed deltas
+    are the versions)::
 
-        _versions/           registry: (version, delta_path, docs, tokens)
         delta_v{N}/docs/     curated delta (id, ..., split, n_tokens, shard_id)
         delta_v{N}/shards/   training shard layout for the delta
 
@@ -551,32 +552,23 @@ class VersionedCorpus:
     # -- registry ----------------------------------------------------------
 
     def versions(self) -> list[int]:
-        from pyspark.errors import AnalysisException
+        from etl_file_loader_spark import snapshots
+        from etl_file_loader_spark.fs import FS
 
-        try:
-            reg = self.spark.read.parquet(f"{self.root}/_versions")
-        except AnalysisException as exc:
-            # ONLY missing-registry means "no versions"; corrupt footers,
-            # permission errors etc. must surface, not read as empty.
-            if "PATH_NOT_FOUND" in str(exc) or "does not exist" in str(exc):
-                return []
-            raise
-        return sorted(r["version"] for r in reg.select("version").collect())
+        fs = FS(self.spark)
+        if fs.exists(f"{self.root}/_versions"):
+            # older layout: deltas registered in a _versions table, with no
+            # marker; reading it as marker-less would drop and overwrite them
+            raise RuntimeError(
+                f"{self.root} uses the _versions registry layout; migrate it "
+                f"by writing an empty {snapshots.MARKER} file into each "
+                "registered delta_v<N> directory, then removing _versions"
+            )
+        return snapshots.committed(fs, self.root, "delta_v")
 
     def latest_version(self) -> int:
         vs = self.versions()
         return vs[-1] if vs else 0
-
-    def _register(self, version: int, docs: int, tokens: int) -> None:
-        from etl_file_loader_spark.functions import local_rows_df
-
-        # LocalRelation, not a Python RDD (guide §4, optimization r14)
-        row = local_rows_df(
-            self.spark,
-            [(version, f"{self.root}/delta_v{version}", docs, tokens)],
-            "version int, delta_path string, docs long, tokens long",
-        )
-        row.write.mode("append").parquet(f"{self.root}/_versions")
 
     # -- reads -------------------------------------------------------------
 
@@ -678,32 +670,22 @@ class VersionedCorpus:
             order_col="_sk",
         ).drop("_sk")
 
-        # Atomic publish: build the whole delta under a staging dir, rename
-        # into place, register LAST. A crash mid-build leaves only staging
-        # garbage (cleared on the next attempt), never a half-delta that
-        # poisons retries with errorifexists; a crash between the rename and
-        # _register leaves an unregistered delta_v{N} that the next ingest's
-        # overwrite-tolerant cleanup removes (versions() is the source of
-        # truth, so an unregistered directory is invisible to readers).
+        # the whole delta (docs + shard layout) commits as one snapshot: a
+        # crash at any step leaves the corpus at prior_v
+        from etl_file_loader_spark import snapshots
         from etl_file_loader_spark.fs import FS
 
-        fs = FS(self.spark)
-        version = prior_v + 1
-        delta = f"{self.root}/delta_v{version}"
-        staging = f"{self.root}/_staging/delta_v{version}"
-        fs.rmtree(staging)  # orphan from a prior failed attempt
-        fs.rmtree(delta)  # unregistered half-publish from a prior crash
         docs_out = with_tokens.join(
             packed.select(F.col(did), F.col("shard_id")), did, "left"
         )
-        docs_out.write.mode("errorifexists").parquet(f"{staging}/docs")
-        sampling_ops.write_training_shards(
-            packed, f"{staging}/shards", "n_tokens", c.partition_cols
-        )
-        written = self.spark.read.parquet(f"{staging}/docs").agg(
-            F.count(F.lit(1)).alias("d"), F.sum("n_tokens").alias("t")
-        ).collect()[0]
-        fs.move(staging, delta)
-        counts["delta_docs"] = int(written["d"])
-        self._register(version, int(written["d"]), int(written["t"] or 0))
+
+        def write(staging: str) -> None:
+            docs_out.write.parquet(f"{staging}/docs")
+            sampling_ops.write_training_shards(
+                packed, f"{staging}/shards", "n_tokens", c.partition_cols
+            )
+
+        version = prior_v + 1
+        delta = snapshots.commit(FS(self.spark), self.root, "delta_v", version, write)
+        counts["delta_docs"] = self.spark.read.parquet(f"{delta}/docs").count()
         return IngestResult(version=version, stage_counts=counts)

@@ -73,23 +73,11 @@ class PipelineRunner:
         delete_source: bool = False,
         duplicate_dir: str | None = None,
         on_stage=None,
-        merge_backend=None,
     ):
         self.spark = spark
         self.warehouse = warehouse
         self.config = config
         self.path = path
-        # MERGE execution seam (plans/merge_backend.py): default is the
-        # pure-Spark bounded bucket rewrite — identical behavior to the
-        # pre-seam inline calls; a DeltaMergeBackend (or custom) can own
-        # the merge+persist step instead.
-        if merge_backend is None:
-            from etl_file_loader_spark.plans.merge_backend import (
-                SparkRewriteMergeBackend,
-            )
-
-            merge_backend = SparkRewriteMergeBackend()
-        self.merge_backend = merge_backend
         from etl_file_loader_spark.fs import basename
 
         self.filename = basename(path)
@@ -185,7 +173,11 @@ class PipelineRunner:
                     dlq_records = dlq_ops.build_dlq(
                         invalid, cfg, self.filename, self.log.log_id
                     )
-                    self.warehouse.append(DLQ_TABLE, dlq_records)
+                    # one file per load, so the DLQ grows like the run log
+                    # and needs no compaction; repartition rather than
+                    # coalesce keeps the filter over the cached file parallel
+                    # and shuffles only the invalid rows
+                    self.warehouse.append(DLQ_TABLE, dlq_records.repartition(1))
                 st.row_count = n_invalid
                 stats = audit_ops.ValidationStats(
                     total_rows=n_valid + n_invalid, error_rows=n_invalid
@@ -236,10 +228,10 @@ class PipelineRunner:
                             touched_buckets=None,
                             partition_by=cfg.target_partition_by,
                         )
+                        # check_grain rejected duplicate grains, so every
+                        # valid row is one insert
                         pub_counts = PublishCounts(
-                            inserts=self.warehouse.read_table(cfg.target_table).count(),
-                            updates=0,
-                            unchanged=0,
+                            inserts=n_valid, updates=0, unchanged=0
                         )
                     else:
                         # bounded rewrite: only the grain-hash buckets the
@@ -290,16 +282,17 @@ class PipelineRunner:
                                     f.name, F.lit(None).cast(f.dtype)
                                 )
                         pub_counts = publish_ops.publish_counts(target, stage, cfg.grain)
-                        self.merge_backend.merge(
-                            self.warehouse,
-                            cfg.target_table,
+                        merged = publish_ops.merge_upsert(
                             target,
                             stage,
                             cfg.grain,
                             cfg.business_columns,
-                            bucket,
-                            touched_buckets=touched,
                             salt_buckets=cfg.merge_salt_buckets,
+                        )
+                        self.warehouse.merge_overwrite(
+                            cfg.target_table,
+                            merged.withColumn(BUCKET_COL, bucket),
+                            touched_buckets=touched,
                             partition_by=cfg.target_partition_by,
                         )
                 st.row_count = pub_counts.inserts + pub_counts.updates
@@ -307,12 +300,11 @@ class PipelineRunner:
             with self.log.stage("cleanup_dlq_records"):
                 with self.warehouse.mutate(DLQ_TABLE):
                     if self.warehouse.exists(DLQ_TABLE):
-                        cleaned = dlq_ops.cleanup_dlq(
-                            self.warehouse.read_table(DLQ_TABLE),
-                            self.filename,
-                            self.log.log_id,
-                        )
-                        self.warehouse.overwrite(DLQ_TABLE, cleaned)
+                        dlq = self.warehouse.read_table(DLQ_TABLE)
+                        stale = dlq_ops.stale_rows(self.filename, self.log.log_id)
+                        # rewrite only when an earlier run left rows behind
+                        if not dlq.filter(stale).isEmpty():
+                            self.warehouse.overwrite(DLQ_TABLE, dlq.filter(~stale))
 
             return RunResult(True, self.filename, counts=pub_counts)
         finally:
@@ -323,17 +315,6 @@ class PipelineRunner:
                 from etl_file_loader_spark.fs import FS
 
                 FS(self.spark).delete(self.path)
-
-
-def _empty_target(stage):
-    """Zero-row target with full system-column schema, for first loads."""
-    from etl_file_loader_spark.operators.publish import CREATED_COL, UPDATED_COL
-
-    return (
-        stage.limit(0)
-        .withColumn(CREATED_COL, F.current_timestamp())
-        .withColumn(UPDATED_COL, F.lit(None).cast("timestamp"))
-    )
 
 
 @dataclass

@@ -1,57 +1,52 @@
 """Copy-on-write parquet warehouse.
 
 The reference's targets are DB tables (reference process/db.py:92-213). Here a
-table is a directory of versioned parquet snapshots ``<table>/_v<N>`` with the
-highest N current — a minimal copy-on-write format (Delta-without-the-log):
-a MERGE writes the *new* snapshot by executing a plan that reads the old one,
-then flips the version; readers never see a partial write and the "read your
-own input while overwriting it" parquet hazard is avoided by construction.
+table is a directory of versioned parquet snapshots ``<table>/_v<N>``; the
+highest committed N is current. Every new snapshot (overwrite, merge,
+compaction, rebucketing) is built in a staging directory and published by
+:func:`etl_file_loader_spark.snapshots.commit`: one rename after the
+commit marker is in place. Readers list committed snapshots only, so a
+crash at any step of a write leaves the previous snapshot current, and a
+re-run of the same write reaches the result a run without the crash would
+have. Older snapshots are pruned to ``keep_versions`` only after the commit.
+A MERGE builds its snapshot from a plan that reads the previous one, so the
+"read your own input while overwriting it" parquet hazard cannot arise.
+
+``append`` (run log, DLQ) still adds part files to the current snapshot in
+place; readers list files at plan time and see the old or the new file set.
 
 Bounded-rewrite merges: tables written through the grain-bucket API are
-hive-partitioned on ``_grain_bucket = pmod(hash(grain), n_buckets)``. A merge
-then reads ONLY the buckets the stage rows hash into (partition pruning),
-rewrites those, and carries the untouched bucket directories from the
-previous snapshot into the new one — O(stage-touched buckets) I/O per load
-instead of O(target), the COW-filesystem analogue of Delta/Iceberg's
-file-level rewrite.
-
-Carry-over modes (``carry_mode``):
-  ``link``  hard-link untouched bucket dirs (O(1) per file, refcounted by
-            the filesystem) — local-FS only.
-  ``copy``  recursive copy through the Hadoop FileSystem API — works on any
-            scheme the cluster carries a connector for (``s3a:``, ``abfss:``,
-            ``gs:``, ``hdfs:``, ``file:``). Still O(untouched bytes) per
-            merge; object-store deployments wanting true O(1) carry-over
-            swap this class for Delta/Iceberg (the engine only uses the
-            read/merge/append surface, so the swap is local).
-  ``auto``  (default) ``link`` for plain OS paths, ``copy`` for URIs.
-
-All filesystem metadata operations (version listing, prune, bucket-count
-meta) route through :class:`etl_file_loader_spark.fs.FS`, so a warehouse
-rooted at an object-store URI works end-to-end; plain OS paths keep the
-pure-Python fast path (no JVM round-trips).
-
-Scale: snapshot writes are fully parallel; old versions are pruned to
-``keep_versions`` (link refcounts keep shared files alive).
+hive-partitioned on ``_grain_bucket = pmod(hash(grain), n_buckets)``, and the
+snapshot records its bucket count in ``_buckets.json``. A merge reads only
+the buckets the stage rows hash into (partition pruning), rewrites those,
+and carries the untouched bucket directories of the previous snapshot into
+the staged one: by hard link for plain OS paths (O(1) per file), by Hadoop
+FileSystem copy for URIs (``s3a:``, ``abfss:``, ``gs:``, ``hdfs:``,
+``file:``; O(untouched bytes)). Metadata operations route through
+:class:`etl_file_loader_spark.fs.FS`, so a warehouse rooted at a URI works
+end to end.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import threading
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_file_loader_spark import snapshots
 from etl_file_loader_spark.fs import FS, is_uri
 
 # internal hive-partition column carrying the grain-hash bucket
 BUCKET_COL = "_grain_bucket"
+# per-snapshot record of the bucket count its layout was hashed with
+BUCKETS_META = "_buckets.json"
 
 
 def grain_bucket(grain: list[str], n_buckets: int) -> Column:
@@ -60,8 +55,8 @@ def grain_bucket(grain: list[str], n_buckets: int) -> Column:
     Spark's ``hash`` is fixed-seed Murmur3 — stable across sessions, so a
     later load's stage rows hash into the same bucket directories the target
     was written with. Changing ``n_buckets`` on an existing table would break
-    that mapping; the per-table bucket count is therefore persisted at first
-    write and reused by every later merge.
+    that mapping; each snapshot therefore records its bucket count and every
+    later merge reuses it (``Warehouse.rebucket`` changes it).
     """
     return F.pmod(F.hash(*[F.col(g) for g in grain]), F.lit(n_buckets))
 
@@ -73,7 +68,6 @@ class Warehouse:
         path: str,
         keep_versions: int = 2,
         n_buckets: int | None = None,
-        carry_mode: str = "auto",
     ):
         self.spark = spark
         self._root = str(path).rstrip("/")
@@ -82,21 +76,11 @@ class Warehouse:
         # table names onto it); URI warehouses expose the string instead.
         self.path = self._root if self._is_uri else Path(path)
         self._fs = FS(spark)
-        if carry_mode not in ("auto", "link", "copy"):
-            raise ValueError(f"carry_mode must be auto|link|copy, got {carry_mode!r}")
-        if carry_mode == "auto":
-            carry_mode = "copy" if self._is_uri else "link"
-        if carry_mode == "link" and self._is_uri:
-            raise ValueError(
-                "carry_mode='link' requires a plain OS warehouse path; "
-                "object-store URIs need carry_mode='copy'"
-            )
-        self.carry_mode = carry_mode
         self.keep_versions = keep_versions
         # default bucket count = the session's shuffle parallelism: one
         # bucket per write task locally, ~thousands on a big cluster — merge
-        # rewrite granularity then tracks cluster scale. Persisted per table
-        # at first write, so later sessions keep the original mapping.
+        # rewrite granularity then tracks cluster scale. Recorded in each
+        # snapshot, so later sessions keep the table's mapping.
         self.n_buckets = n_buckets or max(
             16, int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
         )
@@ -118,12 +102,17 @@ class Warehouse:
             return self._locks.setdefault(table, threading.RLock())
 
     def _versions(self, table: str) -> list[int]:
-        out = []
-        for name in self._fs.list_names(self._p(table)):
-            m = re.fullmatch(r"_v(\d+)", name)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+        return snapshots.committed(self._fs, self._p(table), "_v")
+
+    def _commit(
+        self, table: str, versions: list[int], write: Callable[[str], None]
+    ) -> None:
+        """Publish the snapshot after ``versions[-1]`` that ``write`` builds
+        in its staging directory, then prune to ``keep_versions``."""
+        new_v = versions[-1] + 1 if versions else 0
+        snapshots.commit(self._fs, self._p(table), "_v", new_v, write)
+        for v in [*versions, new_v][: -max(self.keep_versions, 1)]:
+            self._fs.rmtree(self._p(table, f"_v{v}"))
 
     def exists(self, table: str) -> bool:
         return bool(self._versions(table))
@@ -166,9 +155,20 @@ class Warehouse:
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
     def table_buckets(self, table: str) -> int | None:
-        """Bucket count the table was written with, or None if unbucketed."""
-        meta = self._p(table, "_buckets.json")
+        """Bucket count of the current snapshot, or None if unbucketed."""
+        versions = self._versions(table)
+        if not versions:
+            return None
+        meta = self._p(table, f"_v{versions[-1]}", BUCKETS_META)
         if not self._fs.exists(meta):
+            if self._fs.exists(self._p(table, BUCKETS_META)):
+                # older layout kept the count at the table root; guessing
+                # a count here would hash updated rows into wrong buckets
+                raise RuntimeError(
+                    f"table {table!r} keeps its bucket count in "
+                    f"{table}/{BUCKETS_META}; migrate it by moving that file "
+                    f"into {table}/_v{versions[-1]}/"
+                )
             return None
         return int(json.loads(self._fs.read_text(meta))["n_buckets"])
 
@@ -205,41 +205,44 @@ class Warehouse:
         """Write a new snapshot rewriting ONLY the touched grain-hash buckets.
 
         ``df`` must carry ``BUCKET_COL`` and contain the complete new contents
-        of the touched buckets; every other bucket directory is carried over
-        from the previous snapshot — hard-linked in ``link`` mode (O(1) per
-        file), Hadoop-FS-copied in ``copy`` mode (object-store safe). With
+        of the touched buckets, hashed with ``table_buckets(table)`` (or
+        ``n_buckets`` for a new table); every other bucket directory is
+        carried over from the previous snapshot. With
         ``touched_buckets=None`` (first load / full rewrite) the whole frame
         is written. Rows are repartitioned on the bucket column first so file
-        count tracks bucket count, not tasks x buckets.
+        count tracks bucket count, not tasks x buckets. The write, the
+        carry-over and the bucket count all land in the staged snapshot.
         """
         with self._table_lock(table):
             versions = self._versions(table)
+            n_buckets = self.table_buckets(table) or self.n_buckets
             parts = [BUCKET_COL] + list(partition_by or [])
-            out_df = df.repartition(F.col(BUCKET_COL))
-            new_v = (versions[-1] + 1) if versions else 0
-            out = self._p(table, f"_v{new_v}")
-            out_df.write.mode("overwrite").partitionBy(*parts).parquet(out)
-            if versions and touched_buckets is not None:
-                touched_dirs = {f"{BUCKET_COL}={v}" for v in touched_buckets}
-                prev = self._p(table, f"_v{versions[-1]}")
-                for name in self._fs.list_names(prev):
-                    if name.startswith(f"{BUCKET_COL}=") and name not in touched_dirs:
-                        self._carry(f"{prev}/{name}", f"{out}/{name}")
-            meta = self._p(table, "_buckets.json")
-            if not self._fs.exists(meta):
-                self._fs.write_text(meta, json.dumps({"n_buckets": self.n_buckets}))
-            self._prune_versions(table, versions)
+
+            def write(out: str) -> None:
+                df.repartition(F.col(BUCKET_COL)).write.mode(
+                    "overwrite"
+                ).partitionBy(*parts).parquet(out)
+                if versions and touched_buckets is not None:
+                    touched_dirs = {f"{BUCKET_COL}={v}" for v in touched_buckets}
+                    prev = self._p(table, f"_v{versions[-1]}")
+                    for name in self._fs.list_names(prev):
+                        if name.startswith(f"{BUCKET_COL}=") and name not in touched_dirs:
+                            self._carry(f"{prev}/{name}", f"{out}/{name}")
+                self._write_buckets_meta(out, n_buckets)
+
+            self._commit(table, versions, write)
+
+    def _write_buckets_meta(self, out: str, n_buckets: int) -> None:
+        meta = json.dumps({"n_buckets": n_buckets})
+        self._fs.write_text(f"{out}/{BUCKETS_META}", meta)
 
     def _carry(self, src: str, dst: str) -> None:
-        """Carry one untouched bucket dir into the new snapshot."""
-        if self.carry_mode == "link":
-            _link_tree(Path(src), Path(dst))
-        else:
+        """Carry one untouched bucket dir into the staged snapshot: hard
+        links for plain OS paths, a Hadoop FileSystem copy for URIs."""
+        if self._is_uri:
             self._fs.copy_tree(src, dst)
-
-    def _prune_versions(self, table: str, versions: list[int]) -> None:
-        for v in versions[: -self.keep_versions + 1] if self.keep_versions > 0 else versions:
-            self._fs.rmtree(self._p(table, f"_v{v}"))
+        else:
+            _link_tree(Path(src), Path(dst))
 
     def overwrite(
         self, table: str, df: DataFrame, partition_by: list[str] | None = None
@@ -250,17 +253,13 @@ class Warehouse:
     def _overwrite_locked(
         self, table: str, df: DataFrame, partition_by: list[str] | None = None
     ) -> None:
-        versions = self._versions(table)
-        new_v = (versions[-1] + 1) if versions else 0
-        out = self._p(table, f"_v{new_v}")
         writer = df.write.mode("overwrite")
         if partition_by:
             # hive-style layout: readers filtering on these columns prune
             # whole directories at plan time (PartitionFilters, zero I/O for
             # excluded partitions) — the COW analogue of Delta partitioning
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
-        self._prune_versions(table, versions)
+        self._commit(table, self._versions(table), writer.parquet)
 
     def append(self, table: str, df: DataFrame) -> None:
         """True append: new part files into the current snapshot directory.
@@ -324,8 +323,8 @@ class Warehouse:
         merge rewrite granularity (O(table/n_buckets) per touched bucket)
         degrades with it. ``rebucket`` is the COW analogue of Delta
         ``OPTIMIZE`` + repartition: one full rewrite re-hashing every row
-        into ``n_buckets`` grain-hash buckets, the persisted count updated
-        atomically with the snapshot flip, after which merges prune and
+        into ``n_buckets`` grain-hash buckets, the new count committed in
+        the same snapshot as the new layout, after which merges prune and
         rewrite at the new granularity. O(table) — schedule it like any
         compaction, not per load.
         """
@@ -334,23 +333,19 @@ class Warehouse:
                 raise FileNotFoundError(f"table {table} does not exist")
             if self.table_buckets(table) is None:
                 raise ValueError(f"table {table!r} is not grain-bucketed")
-            df = self.read_table(table)
-            out = df.withColumn(BUCKET_COL, grain_bucket(grain, n_buckets))
             versions = self._versions(table)
-            new_v = versions[-1] + 1
-            out_path = self._p(table, f"_v{new_v}")
-            (
-                out.repartition(F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(out_path)
+            out = self.read_table(table).withColumn(
+                BUCKET_COL, grain_bucket(grain, n_buckets)
             )
-            self._fs.write_text(
-                self._p(table, "_buckets.json"),
-                json.dumps({"n_buckets": n_buckets}),
-            )
+
+            def write(path: str) -> None:
+                out.repartition(F.col(BUCKET_COL)).write.mode(
+                    "overwrite"
+                ).partitionBy(BUCKET_COL).parquet(path)
+                self._write_buckets_meta(path, n_buckets)
+
+            self._commit(table, versions, write)
             self.n_buckets = n_buckets
-            self._prune_versions(table, versions)
 
     def drop(self, table: str) -> None:
         self._fs.rmtree(self._p(table))

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_file_loader_spark.config import SourceConfig
-from etl_file_loader_spark.exceptions import MissingColumnsError, NoDataInFileError
+from etl_file_loader_spark.exceptions import MissingColumnsError
 
 
 def check_required_columns(columns: list[str], config: SourceConfig, filename: str | None = None) -> None:
@@ -18,12 +18,6 @@ def check_required_columns(columns: list[str], config: SourceConfig, filename: s
     ]
     if missing:
         raise MissingColumnsError(missing, filename)
-
-
-def check_not_empty(df: DataFrame, filename: str | None = None) -> None:
-    """Zero records -> NoDataInFileError (reference json.py:83-97 etc.)."""
-    if df.isEmpty():
-        raise NoDataInFileError("no data in file", filename)
 
 
 def read_source(spark: SparkSession, path: str, config: SourceConfig) -> DataFrame:

@@ -443,54 +443,41 @@ def cdc_stream(
     State = versioned parquet snapshots under ``state_dir``
     (``state_v{n}``: read latest, write next — never overwrite the input
     of a running plan). Seed ``state_v0`` with the initial snapshot plus
-    ``_deleted = 0`` before starting; the seed needs NO ``_SUCCESS``
-    marker (external tools often emit none — v0 is exempt from the
-    completeness gate because :func:`process` never writes it), while
-    snapshots v>=1 are adopted only with the marker, which the writer
-    guarantees even under
-    ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``. The visible table after any batch
-    is ``state.filter("_deleted = 0").drop("_deleted")``; tombstones make
+    ``_deleted = 0`` before starting; the seed needs no commit marker
+    (external tools often write none, and :func:`process` never writes
+    v0), while snapshots v>=1 are adopted only once committed. The
+    visible table after any batch is
+    ``state.filter("_deleted = 0").drop("_deleted")``; tombstones make
     batch-by-batch application CONFLUENT under out-of-order batches (a
     late stale change loses to an earlier-arrived higher-seq delete
     exactly as it would in one big batch) — pinned by the
     ``streaming_cdc_apply`` suite row, which replays the SAME DuckDB
     oracle as batch ``cdc_apply``.
 
-    Crash safety: a snapshot counts as published only once its directory
-    carries the committer's ``_SUCCESS`` marker, and each snapshot is
-    written to a hidden temp dir then atomically renamed into place — so
-    a micro-batch that dies mid-write leaves at worst a ``_tmp_state_v*``
-    husk (overwritten by the retry), never a partial ``state_v{n}`` that
-    a restart could silently adopt as its base. A restarted query resumes
-    from the last PUBLISHED snapshot; if the crash fell between the
-    rename and the checkpoint commit, the replayed batch re-applies the
-    same changes on top of the already-published version — confluent
+    Crash safety: each snapshot is published by
+    :func:`etl_file_loader_spark.snapshots.commit` (staged write, marker,
+    one rename), so a micro-batch that dies mid-write leaves at worst a
+    staging husk (removed by a later commit), never a partial
+    ``state_v{n}`` that a restart could adopt as its base. A restarted
+    query resumes from the last PUBLISHED snapshot; if the crash fell
+    between the rename and the checkpoint commit, the replayed batch
+    re-applies the same changes on top of the already-published
+    version — confluent
     ``cdc_apply_tombstoned`` makes that a content no-op (one redundant
     but identical version). At cluster scale the snapshot-chain becomes
     a Delta/Iceberg MERGE per batch — plan shape per batch is identical
     (one batch-sized window + one full-outer join against the state).
     """
-    import re
-
+    from etl_file_loader_spark import snapshots
     from etl_file_loader_spark.fs import FS
     from etl_file_loader_spark.operators import publish as publish_ops
 
     def _latest_version(fs: FS) -> int:
-        vs = [
-            int(m.group(1))
-            for name in fs.list_names(state_dir)
-            if (m := re.fullmatch(r"state_v(\d+)", name))
-            # only COMPLETE snapshots: a dir v>=1 without the committer's
-            # _SUCCESS marker is a mid-write casualty of OUR process(),
-            # not a base state. state_v0 is exempt — it is the USER'S
-            # seed, possibly written by an external tool that emits no
-            # marker; process() itself never writes v0, so a marker-less
-            # v0 cannot be one of our partial writes.
-            and (
-                m.group(1) == "0"
-                or fs.exists(f"{state_dir}/state_v{m.group(1)}/_SUCCESS")
-            )
-        ]
+        vs = snapshots.committed(fs, state_dir, "state_v")
+        # the user's seed may come from a tool that writes no marker;
+        # process() never writes v0, so a marker-less v0 is always the seed
+        if not vs and fs.exists(f"{state_dir}/state_v0"):
+            vs = [0]
         if not vs:
             raise FileNotFoundError(
                 f"cdc_stream: seed {state_dir}/state_v0 with the initial "
@@ -508,22 +495,7 @@ def cdc_stream(
         new_state = publish_ops.cdc_apply_tombstoned(
             state, batch_df, keys, tracked, seq_col, op_col
         )
-        # temp-write + atomic rename: overwrite mode absorbs a husk from
-        # a previously crashed attempt; the rename target can only exist
-        # as an incomplete (non-_SUCCESS) dir, which the retry replaces
-        tmp = f"{state_dir}/_tmp_state_v{v + 1}"
-        final = f"{state_dir}/state_v{v + 1}"
-        new_state.write.mode("overwrite").parquet(tmp)
-        # version adoption is gated on _SUCCESS: if the session runs with
-        # mapreduce.fileoutputcommitter.marksuccessfuljobs=false the
-        # committer emits none, _latest_version would stall at the seed,
-        # and every batch would silently re-apply against v0 — so write
-        # the marker ourselves when the committer did not
-        if not fs.exists(f"{tmp}/_SUCCESS"):
-            fs.write_text(f"{tmp}/_SUCCESS", "")
-        if fs.exists(final):
-            fs.rmtree(final)
-        fs.move(tmp, final)
+        snapshots.commit(fs, state_dir, "state_v", v + 1, new_state.write.parquet)
 
     return (
         changes.writeStream.foreachBatch(process)
@@ -550,8 +522,7 @@ def _quantile_identity_guard(spark, state_dir: str, checkpoint_dir: str) -> None
     original checkpoint, or start a fresh state_dir). Comparison is the
     literal string: two spellings of one location (file:/x vs /x) are
     treated as different owners, the safe direction."""
-    import re
-
+    from etl_file_loader_spark import snapshots
     from etl_file_loader_spark.fs import FS
 
     fs = FS(spark)
@@ -571,10 +542,7 @@ def _quantile_identity_guard(spark, state_dir: str, checkpoint_dir: str) -> None
                 "snapshot if its counts should carry over)."
             )
         return
-    has_state = fs.exists(state_dir) and any(
-        re.fullmatch(r"state_e(\d+)", n) for n in fs.list_names(state_dir)
-    )
-    if has_state:
+    if snapshots.committed(fs, state_dir, "state_e"):
         raise ValueError(
             f"quantile_stream state at {state_dir!r} has committed "
             "state_e{n} snapshots but no _stream_identity marker (a "
@@ -601,38 +569,25 @@ def _fold_quantile_epoch(
     chain; returns False if this epoch already folded (a replayed batch —
     the call is a no-op). Factored out of :func:`quantile_stream` so the
     idempotence guard is directly testable."""
-    import re
-
+    from etl_file_loader_spark import snapshots
     from etl_file_loader_spark.fs import FS
     from etl_file_loader_spark.operators import sketches
 
     fs = FS(spark)
-    final = f"{state_dir}/state_e{epoch_id}"
-    if fs.exists(f"{final}/_SUCCESS"):
+    committed = snapshots.committed(fs, state_dir, "state_e")
+    if epoch_id in committed:
         # this epoch committed its fold before a crash/restart replayed
         # it — folding again would double-count (sum-merge is not
         # confluent), so the guard IS the exactly-once
         return False
     h = sketches.quantile_histogram(batch_df, keys, col, sig_digits, unit_scale)
-    done = [
-        int(m.group(1))
-        for name in (fs.list_names(state_dir) if fs.exists(state_dir) else [])
-        if (m := re.fullmatch(r"state_e(\d+)", name))
-        and int(m.group(1)) < epoch_id
-        and fs.exists(f"{state_dir}/state_e{m.group(1)}/_SUCCESS")
-    ]
+    done = [e for e in committed if e < epoch_id]
     if done:
-        base = spark.read.parquet(f"{state_dir}/state_e{max(done)}")
+        base = spark.read.parquet(f"{state_dir}/state_e{done[-1]}")
         merged = sketches.quantile_hist_merge([base, h], keys)
     else:
         merged = h
-    tmp = f"{state_dir}/_tmp_state_e{epoch_id}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if not fs.exists(f"{tmp}/_SUCCESS"):
-        fs.write_text(f"{tmp}/_SUCCESS", "")
-    if fs.exists(final):
-        fs.rmtree(final)
-    fs.move(tmp, final)
+    snapshots.commit(fs, state_dir, "state_e", epoch_id, merged.write.parquet)
     return True
 
 
@@ -655,8 +610,8 @@ def quantile_stream(
     "re-applying is a content no-op" — does not hold for counts), so
     replay safety comes from the idempotent-sink recipe instead: foreach
     Batch's ``epoch_id`` is stable across retries of the same batch, the
-    snapshot is PUBLISHED under that epoch's name via temp-write +
-    marker + atomic rename (the cdc_stream discipline), and a replayed
+    snapshot is PUBLISHED under that epoch's name via
+    :func:`etl_file_loader_spark.snapshots.commit`, and a replayed
     epoch that finds its own committed snapshot folds nothing. Engine
     checkpointing guarantees each batch gets exactly one epoch_id;
     the name guard turns at-least-once side effects into exactly-once
@@ -693,17 +648,10 @@ def latest_quantile_state(spark, state_dir: str) -> DataFrame:
     """The most recent COMPLETE register snapshot of a
     :func:`quantile_stream` chain (feed to ``sketches.quantile_estimate``
     or load into a ``QuantileIndex`` via its parquet state)."""
-    import re
-
+    from etl_file_loader_spark import snapshots
     from etl_file_loader_spark.fs import FS
 
-    fs = FS(spark)
-    done = [
-        int(m.group(1))
-        for name in (fs.list_names(state_dir) if fs.exists(state_dir) else [])
-        if (m := re.fullmatch(r"state_e(\d+)", name))
-        and fs.exists(f"{state_dir}/state_e{m.group(1)}/_SUCCESS")
-    ]
+    done = snapshots.committed(FS(spark), state_dir, "state_e")
     if not done:
         raise FileNotFoundError(f"no complete quantile state under {state_dir}")
-    return spark.read.parquet(f"{state_dir}/state_e{max(done)}")
+    return spark.read.parquet(f"{state_dir}/state_e{done[-1]}")

@@ -149,7 +149,7 @@ def test_hll_saved_registers_are_engine_portable(spark, orders, tmp_path):
     path = str(tmp_path / "hllp")
     idx.save(path)
     duck = duckdb.sql(
-        f"SELECT o_orderstatus, bucket, rho FROM '{path}/snapshot/state/*.parquet' "
+        f"SELECT o_orderstatus, bucket, rho FROM '{path}/snapshot_v0/state/*.parquet' "
         f"ORDER BY 1, 2"
     ).fetchall()
     live = _rows(idx.registers())
@@ -217,91 +217,37 @@ def test_kmv_index_reload_and_confluence(spark, orders, tmp_path):
 
 
 def test_save_publishes_atomically_and_load_refuses_torn_state(spark, orders, tmp_path):
-    """ADVICE r12: state+meta used to be two independent overwrites — a
-    crash between them could pair NEW state with OLD meta, and a missing
-    meta died on an opaque path error. Round 13 publishes both parts
-    under one staging dir gated on _SUCCESS and adopted by a single
-    rename; load refuses torn layouts with a clear message."""
+    """State and meta of one save commit together as one snapshot
+    (staged, marked, renamed), so new state never pairs with old meta;
+    load refuses a torn or missing layout with a clear message."""
     import pytest as _pytest
 
     from etl_file_loader_spark.fs import FS
-    from etl_file_loader_spark.operators.persist import (
-        load_index_state,
-        save_index_state,
-    )
+    from etl_file_loader_spark.operators.persist import load_index_state
 
     fs = FS(spark)
     path = str(tmp_path / "atomic")
     idx = sketches.HLLIndex(orders.limit(50), ["o_orderstatus"], "o_custkey", p=6)
     idx.save(path)
-    assert fs.exists(f"{path}/snapshot/_SUCCESS")
+    assert fs.exists(f"{path}/snapshot_v0/_SUCCESS")
 
     # a second save replaces the snapshot in one adoption step and any
     # crashed staging husk is absorbed by the next attempt
-    fs.mkdirs(f"{path}/_tmp_snapshot")
-    fs.write_text(f"{path}/_tmp_snapshot/_SUCCESS", "")  # husk
+    fs.mkdirs(f"{path}/_tmp_snapshot_v1.deadbeef")
+    fs.write_text(f"{path}/_tmp_snapshot_v1.deadbeef/_SUCCESS", "")  # husk
     idx.save(path)
     state, meta = load_index_state(spark, path)
     assert meta["p"] == 6 and state.count() > 0
+    assert sorted(fs.list_names(path)) == ["snapshot_v1"]
 
     # torn publish (no _SUCCESS): clear refusal, not an opaque path error
-    fs.delete(f"{path}/snapshot/_SUCCESS")
+    fs.delete(f"{path}/snapshot_v1/_SUCCESS")
     with _pytest.raises(FileNotFoundError, match="_SUCCESS"):
         load_index_state(spark, path)
 
-    # nothing at all: clear message naming both layouts
+    # nothing at all: clear message
     with _pytest.raises(FileNotFoundError, match="no index state"):
         load_index_state(spark, str(tmp_path / "nowhere"))
-
-    # pre-round-13 layout still loads
-    legacy = str(tmp_path / "legacy")
-    idx.registers().write.parquet(f"{legacy}/state")
-    spark.createDataFrame(
-        [('{"keys": ["o_orderstatus"], "col": "o_custkey", "p": 6}',)],
-        "meta string",
-    ).write.parquet(f"{legacy}/meta")
-    back = sketches.HLLIndex.load(spark, legacy)
-    assert _rows(back.estimate()) == _rows(idx.estimate())
-
-
-def test_bucketed_save_colocates_probe_join(spark, tmp_path):
-    """Round 13: persist.py's 'a bucketed saveAsTable would additionally
-    co-locate the probe join' prose is now code. Bucketing on BOTH probe
-    join keys makes the restored index side read pre-partitioned: the
-    index-side Exchange disappears from flag()'s plan and results are
-    identical to the plain-parquet path."""
-    from etl_file_loader_spark.operators.dedup import NearDupIndex
-
-    docs = spark.range(300).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("shared words for doc "), (F.col("id") % 40).cast("string")
-        ).alias("text"),
-    )
-    idx = NearDupIndex(docs, "doc_id", "text")
-    bpath, ppath = str(tmp_path / "bidx"), str(tmp_path / "pidx")
-    idx.save(bpath, bucket_by=["band_idx", "band_hash"], n_buckets=4)
-    idx.save(ppath)
-    bucketed = NearDupIndex.load(spark, bpath)
-    plain = NearDupIndex.load(spark, ppath)
-
-    batch = spark.range(300, 320).select(
-        F.col("id").alias("doc_id"), F.lit("shared words for doc 7").alias("text")
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        bplan = bucketed.flag(batch)._jdf.queryExecution().executedPlan().toString()
-        pplan = plain.flag(batch)._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in bplan
-        assert bplan.count("Exchange hashpartitioning") < pplan.count(
-            "Exchange hashpartitioning"
-        )
-        assert sorted(map(tuple, bucketed.flag(batch).collect())) == sorted(
-            map(tuple, plain.flag(batch).collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
 
 
 def test_bm25_add_terms_equals_rebuild(spark, docs, tmp_path):

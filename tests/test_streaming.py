@@ -522,8 +522,8 @@ def test_cdc_stream_recovers_from_partial_snapshot(spark):
     os.makedirs(f"{root}/state/state_v1")
     with open(f"{root}/state/state_v1/part-00000.parquet", "wb") as fh:
         fh.write(b"\x00not-parquet")
-    os.makedirs(f"{root}/state/_tmp_state_v1")
-    with open(f"{root}/state/_tmp_state_v1/part-00000.parquet", "wb") as fh:
+    os.makedirs(f"{root}/state/_tmp_state_v1.deadbeef")
+    with open(f"{root}/state/_tmp_state_v1.deadbeef/part-00000.parquet", "wb") as fh:
         fh.write(b"\x00husk")
 
     schema = "k long, v string, seq long, op string"
@@ -540,7 +540,7 @@ def test_cdc_stream_recovers_from_partial_snapshot(spark):
     # the batch applied on top of v0 (NOT the garbage v1), and the retry
     # replaced the partial v1 with a complete, _SUCCESS-marked snapshot
     assert os.path.exists(f"{root}/state/state_v1/_SUCCESS")
-    assert not os.path.exists(f"{root}/state/_tmp_state_v1")
+    assert not os.path.exists(f"{root}/state/_tmp_state_v1.deadbeef")
     rows = {
         r["k"]: r for r in spark.read.parquet(f"{root}/state/state_v1").collect()
     }

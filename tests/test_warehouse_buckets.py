@@ -185,9 +185,9 @@ def test_compact_preserves_bucket_layout(spark, tmp_path):
 
 
 def test_copy_carry_mode_rewrites_only_touched_buckets(spark, tmp_path):
-    # Object-store-safe path: links disabled, untouched buckets carried by
+    # Object-store-safe path: a URI root carries untouched buckets by
     # recursive copy. Same bounded-rewrite semantics, no hard links anywhere.
-    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=8, carry_mode="copy")
+    wh = Warehouse(spark, f"file://{tmp_path}/wh", n_buckets=8)
     cfg = _cfg(tmp_path)
 
     f1 = tmp_path / "sales_1.csv"
@@ -224,7 +224,6 @@ def test_uri_warehouse_bounded_merge(spark, tmp_path):
     # versioned writes, bucket meta, copy carry-over, prune.
     root = f"file://{tmp_path}/uwh"
     wh = Warehouse(spark, root, n_buckets=4)
-    assert wh.carry_mode == "copy"  # auto-detected from the URI scheme
 
     df = spark.range(100).select(
         F.col("id"), F.col("id").cast("double").alias("amount")
@@ -251,10 +250,6 @@ def test_uri_warehouse_bounded_merge(spark, tmp_path):
     rows = {r["id"]: r["amount"] for r in wh.read_table("t").collect()}
     assert rows[1] == 999.0 and rows[2] == 2.0 and len(rows) == 100
     assert wh.table_versions("t") == [0, 1]
-
-    # link mode on a URI is a configuration error, caught at construction
-    with pytest.raises(ValueError, match="carry_mode"):
-        Warehouse(spark, root, carry_mode="link")
 
 
 def test_rebucket_changes_layout_and_later_merges_prune(spark, tmp_path):
