@@ -33,18 +33,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     distinct operator individually, plus four digest queries that fold the
     TPC-H sweep / analytics variants / scale-variant dedup demos / long-green
     ingestion-pipeline rows into one value-verified row per member (see
-    digest.py; window rotated rounds 5, 6, 8, 9, 10, 11 and 12 — the
-    round-12 rotation (#7) promoted the 9 round-11 digest-born rows
-    (linkage tiers/incremental, maintained indexes, URL ops, HLL family,
-    SemDeDup replay, weighted sampling) to direct rows, demoting 9 rows
-    green since round 9 into their family digests). The full per-query
-    registry stays in suite.QUERIES for bench
-    and interactive use. Since round 11 EVERY window entry carries a full
-    DuckDB value oracle — suite._ROWS_ONLY is empty (the md5-derived
-    hyperplanes, the deterministic KMeansDF quantizer and the md5-derived
-    clustered fixture gave the former approximate-demo rows exact
-    replays); the oracle-checked ``*_recall``/``*_check`` twins remain in
-    the window as semantic-behavior redundancy, not as substitutes."""
+    digest.py). The full per-query registry stays in suite.QUERIES for
+    bench and interactive use. Every window entry carries a full DuckDB
+    value oracle; the oracle-checked ``*_recall``/``*_check`` twins stay
+    in the window as semantic-behavior redundancy, not as substitutes."""
     return {k: suite.QUERIES[k] for k in suite.CHECKED_QUERIES}
 
 

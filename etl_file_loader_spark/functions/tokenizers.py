@@ -755,15 +755,11 @@ def fit_unigram_pieces(
         .limit(vocab_size * seed_multiplier)
         .select(F.lit(1).alias("_t"), "p", "c")
     )
-    word_df = counts.select(
-        F.lit(2).alias("_t"), F.col("w").alias("p"), "c"
-    )
-    if max_words is not None:
-        word_df = (
-            counts.orderBy(F.col("c").desc(), F.col("w"))
-            .limit(max_words + 1)
-            .select(F.lit(2).alias("_t"), F.col("w").alias("p"), "c")
-        )
+    if max_words is None:
+        words_kept = counts
+    else:
+        words_kept = counts.orderBy(F.col("c").desc(), F.col("w")).limit(max_words + 1)
+    word_df = words_kept.select(F.lit(2).alias("_t"), F.col("w").alias("p"), "c")
     all_rows = chars_df.unionByName(multi_df).unionByName(word_df).collect()
     chars = {r["p"]: int(r["c"]) for r in all_rows if r["_t"] == 0}
     multi = {r["p"]: int(r["c"]) for r in all_rows if r["_t"] == 1}

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 from etl_file_loader_spark.functions import token_hash32, token_hash_bits, tokens
 from etl_file_loader_spark.operators.cache import pin, pin_checkpoint
+from etl_file_loader_spark.operators.persist import MaintainedIndex
 
 logger = logging.getLogger(__name__)
 
@@ -1241,7 +1242,7 @@ def _band_fold(df: DataFrame) -> DataFrame:
     return df.groupBy("band_idx", "band_hash").agg(F.min("_cid").alias("_cid"))
 
 
-class NearDupIndex:
+class NearDupIndex(MaintainedIndex):
     """MAINTAINED MinHash band index over an ingested corpus — the
     executable form of :func:`incremental_near_dedup`'s "at scale that
     index IS the persisted artifact" note, which that one-shot operator
@@ -1259,16 +1260,17 @@ class NearDupIndex:
     dedup decisions (the suite oracle exploits this: it replays the
     final flags from the batch numbering alone).
 
-    Round 14 — absorb is O(batch), not O(state): the state is an
-    LSM-style :class:`~etl_file_loader_spark.operators.tiered.
-    TieredState` ladder whose fold is the per-bucket canonical-id
-    ``min``. An absorb signs and checkpoints ONLY the batch's band rows;
-    geometric cascade merges keep tier count O(log(state/batch)) and
-    re-copy each band row only O(log n) times over a stream's lifetime
-    (the round-13 shape re-min'd the FULL index per absorb — measured
-    per-absorb in tools/measure_absorb_release.py). :meth:`flag` takes
-    its per-doc ``min`` over the tier union, so tiering is invisible to
-    every answer.
+    Absorb is O(batch), not O(state): the state is an LSM-style
+    :class:`~etl_file_loader_spark.operators.tiered.TieredState` ladder
+    whose fold is the per-bucket canonical-id ``min``. An absorb signs
+    and checkpoints ONLY the batch's band rows; geometric cascade merges
+    keep tier count O(log(state/batch)) and re-copy each band row only
+    O(log n) times over a stream's lifetime (measured per-absorb in
+    tools/measure_absorb_release.py). :meth:`flag` takes its per-doc
+    ``min`` over the tier union, so tiering is invisible to every
+    answer. ``save``/``load`` (operators/persist.py) write the folded
+    index as one frame and resume from it as the single base tier;
+    confluence makes the boundary unobservable.
 
     Measured at sf10 (500k docs, 62.5k seed + 7 arriving batches, warm):
     17.0 s maintained vs 29.0 s calling incremental_near_dedup per batch
@@ -1276,6 +1278,8 @@ class NearDupIndex:
     one-shot re-signatures the whole corpus per batch, O(F^2) docs
     signed over F batches; the index signs each doc once).
     """
+
+    PARAMS = ("id_col", "text_col", "num_hashes", "n", "bands", "rows_per_band")
 
     def __init__(
         self,
@@ -1297,6 +1301,12 @@ class NearDupIndex:
         self.rows_per_band = rows_per_band
         self._pending = None  # (batch frame, its checkpointed band rows)
         self._state = TieredState.build(self._band_raw(corpus), _band_fold)
+
+    def _restore(self, frame: DataFrame) -> None:
+        from etl_file_loader_spark.operators.tiered import TieredState
+
+        self._pending = None
+        self._state = TieredState.restored(frame, _band_fold)
 
     def _band_raw(self, df: DataFrame) -> DataFrame:
         """(band_idx, band_hash, _cid) band rows of ``df`` — the raw
@@ -1359,8 +1369,7 @@ class NearDupIndex:
         """Fold the batch's band buckets into the index — O(batch): only
         the batch is signed, min-reduced, and checkpointed; the tiered
         state's geometric cascade bounds tier count and releases every
-        superseded checkpoint once its merge materialized (the round-13
-        leak fix, carried by TieredState for the whole ladder). Reuses
+        superseded checkpoint once its merge materialized. Reuses
         (and consumes) the band rows a preceding ``flag(new_df)`` on the
         same frame already materialized."""
         from etl_file_loader_spark.operators.cache import release_local_checkpoint
@@ -1377,60 +1386,18 @@ class NearDupIndex:
         per bucket across all tiers. Lazy; the save/export shape."""
         return self._state.compacted()
 
+    _frame = index_frame
+
     def release(self) -> None:
         """Free the index's block-manager state (all tiers, plus any
         pending batch bands a flag() left for its absorb); the object
-        is unusable afterwards. Call before rebinding to a loaded copy —
-        the suite's save/load-crossing stream discipline."""
+        is unusable afterwards."""
         from etl_file_loader_spark.operators.cache import release_local_checkpoint
 
         if self._pending is not None:
             release_local_checkpoint(self._pending[1])
             self._pending = None
         self._state.release()
-
-    def save(self, path: str) -> None:
-        """Write the band index durably (parquet state + JSON config) —
-        the persisted artifact the class docstring promises: resume
-        ingest in a later session without re-signing a single absorbed
-        doc. Confluence makes the boundary safe anywhere: flags after a
-        save/load are identical to an uninterrupted run (the suite's
-        near_dedup_index_stream crosses one to prove it)."""
-        from etl_file_loader_spark.operators.persist import save_index_state
-
-        save_index_state(
-            self.index_frame(),
-            {
-                "id_col": self.id_col,
-                "text_col": self.text_col,
-                "num_hashes": self.num_hashes,
-                "n": self.n,
-                "bands": self.bands,
-                "rows_per_band": self.rows_per_band,
-            },
-            path,
-        )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "NearDupIndex":
-        """Restore a saved index; no corpus re-scan — the parquet IS the
-        state, already durable, so no localCheckpoint either (absorb
-        checkpoints its merges as usual from here on)."""
-        from etl_file_loader_spark.operators.persist import load_index_state
-
-        from etl_file_loader_spark.operators.tiered import TieredState
-
-        state, meta = load_index_state(spark, path)
-        obj = cls.__new__(cls)
-        obj.id_col = meta["id_col"]
-        obj.text_col = meta["text_col"]
-        obj.num_hashes = meta["num_hashes"]
-        obj.n = meta["n"]
-        obj.bands = meta["bands"]
-        obj.rows_per_band = meta["rows_per_band"]
-        obj._pending = None
-        obj._state = TieredState.restored(state, _band_fold)
-        return obj
 
 
 def semantic_contamination(
@@ -1911,7 +1878,7 @@ def _rs_probe(
     )
 
 
-class LinkageIndex:
+class LinkageIndex(MaintainedIndex):
     """Standing-master incremental record linkage: build the master's
     lowered PassJoin base ONCE, then link every arriving feed against it
     without re-scanning, re-lowering, or re-spreading the master — the
@@ -1941,15 +1908,24 @@ class LinkageIndex:
     (identical to ``link_best_match(tiered=True)``), with every tier's
     master-side work served from the standing base.
 
-    Round 14 — the master can GROW without a rebuild: :meth:`absorb`
-    lowers ONLY the newly-arrived entities into TieredState extension
-    tiers (O(batch) per absorb, geometric cascade bounding tier count;
-    the seed base stays pinned untouched), and every link thereafter
-    probes seed ∪ extensions. Links after absorbing B equal links from
-    an index rebuilt over master ∪ B — pinned by test and by the
+    The master can GROW without a rebuild: :meth:`absorb` lowers ONLY
+    the newly-arrived entities into TieredState extension tiers
+    (O(batch) per absorb, geometric cascade bounding tier count; the
+    seed base stays pinned untouched), and every link thereafter probes
+    seed ∪ extensions. Links after absorbing B equal links from an index
+    rebuilt over master ∪ B — pinned by test and by the
     ``fuzzy_link_absorb`` suite oracle (the candidate structure is a
     pure function of the lowered rows, so absorption is unobservable).
+
+    ``save``/``load`` (operators/persist.py) write the lowered base with
+    the absorbed tiers folded in, so the master is scanned and lowered
+    once per master version across sessions. A restored base gets the
+    parallelism spread guard again (a single-file parquet would
+    otherwise enter the fan-out join on 1-2 partitions — the measured
+    136s-vs-19s hazard _pj_base exists to prevent) and is pinned.
     """
+
+    PARAMS = ("master_id", "master_col", "max_distance")
 
     def __init__(
         self,
@@ -1966,6 +1942,12 @@ class LinkageIndex:
         self._lbase = pin(_pj_base(master, master_id, master_col))
         self._extra = None  # TieredState of absorbed master additions
 
+    def _restore(self, frame: DataFrame) -> None:
+        from etl_file_loader_spark.operators.skew import fan_out_scan
+
+        self._lbase = pin(fan_out_scan(frame))
+        self._extra = None
+
     def _base_all(self) -> DataFrame:
         """The standing lowered base: the pinned seed master plus any
         absorbed extension tiers. Identical to ``self._lbase`` (same
@@ -1974,29 +1956,19 @@ class LinkageIndex:
             return self._lbase
         return self._lbase.unionByName(self._extra.view())
 
-    def absorb(self, new_master: DataFrame, master_col: str | None = None) -> None:
+    def absorb(self, new_master: DataFrame) -> None:
         """Extend the standing master with newly-arrived entities —
-        lowers ONLY the new rows (round 14, the maintained-index-family
-        O(batch) absorb via TieredState; lowered rows are append-only,
+        lowers ONLY the new rows (the maintained-index-family O(batch)
+        absorb via TieredState; lowered rows are append-only,
         so the fold is identity like BM25Index's postings). Absorption
         is invisible to answers: link/link_best after absorbing B
         equals rebuilding the index over master ∪ B (pinned by test —
         the candidate structure is a pure function of the lowered
         rows). Exactly-once per master row is the caller's contract
-        (a duplicated absorb duplicates its pairs).
-
-        ``master_col`` defaults to the build-time column name; pass it
-        explicitly when restoring from a pre-round-14 snapshot whose
-        meta predates the stored column."""
+        (a duplicated absorb duplicates its pairs)."""
         from etl_file_loader_spark.operators.tiered import TieredState
 
-        col = master_col or self.master_col
-        if col is None:
-            raise ValueError(
-                "master_col unknown (snapshot predates round 14) — pass "
-                "absorb(new_master, master_col=...)"
-            )
-        lowered = _pj_base(new_master, self.master_id, col)
+        lowered = _pj_base(new_master, self.master_id, self.master_col)
         if self._extra is None:
             self._extra = TieredState.build(lowered)
         else:
@@ -2091,44 +2063,7 @@ class LinkageIndex:
             self._extra.release()
             self._extra = None
 
-    def save(self, path: str) -> None:
-        """Write the lowered PassJoin base once, durably: the master is
-        scanned/lowered exactly once per master version, across sessions,
-        not once per process (absorbed extension tiers are folded into the
-        written base)."""
-        from etl_file_loader_spark.operators.persist import save_index_state
-
-        save_index_state(
-            self._base_all(),
-            {
-                "master_id": self.master_id,
-                "master_col": self.master_col,
-                "max_distance": self.max_distance,
-            },
-            path,
-        )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "LinkageIndex":
-        """Restore a saved base: read, re-apply the parallelism spread
-        guard (a single-file parquet would otherwise enter the fan-out
-        join on 1-2 partitions — the measured 136s-vs-19s hazard
-        _pj_base exists to prevent), and pin. Links after a load are
-        identical to links from the building session (same base rows;
-        segments are recomputed per link from the base by design)."""
-        from etl_file_loader_spark.operators.persist import load_index_state
-
-        from etl_file_loader_spark.operators.skew import fan_out_scan
-
-        state, meta = load_index_state(spark, path)
-        state = fan_out_scan(state)
-        obj = cls.__new__(cls)
-        obj.master_id = meta["master_id"]
-        obj.master_col = meta.get("master_col")  # None on pre-r14 snapshots
-        obj.max_distance = meta["max_distance"]
-        obj._lbase = pin(state)
-        obj._extra = None
-        return obj
+    _frame = _base_all
 
 
 def jaccard_pairs_auto(

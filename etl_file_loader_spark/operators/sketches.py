@@ -26,9 +26,13 @@ longs regardless of cardinality.
 
 from __future__ import annotations
 
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from etl_file_loader_spark.operators.cache import release_local_checkpoint
+from etl_file_loader_spark.operators.persist import MaintainedIndex
 
 # 15 hex digits = 60 bits: fits signed int64, dense enough that hash
 # collisions are ~n^2 / 2^60 — negligible at any verification scale
@@ -322,87 +326,85 @@ def hll_estimate(registers: DataFrame, keys: list[str], p: int = 10) -> DataFram
     return agg.withColumn("hll_est", est).drop("_s_present")
 
 
-class HLLIndex:
-    """MAINTAINED distinct-count registers over arriving batches — the
-    streaming form of the portable HLL (the NearDupIndex/LinkageIndex
-    house pattern applied to the cheapest possible state).
+class RegisterIndex(MaintainedIndex):
+    """A maintained sketch over arriving batches: build from a seed,
+    :meth:`absorb` each batch, read the sketch at any epoch.
 
-    Build once from the seed, :meth:`absorb` each arriving batch
-    (register-wise max merge), read :meth:`estimate` at any epoch. The
-    state is <= 2^p small ints per group FOREVER — it never grows with
-    data — and absorption is CONFLUENT (max is commutative/associative/
-    idempotent): any arrival order of the same batches yields the same
-    registers, so out-of-order or replayed ingest cannot corrupt the
-    count (the suite oracle replays every epoch's estimate from batch
-    numbering alone). Each absorb localCheckpoints the merged registers
-    so per-epoch lineage stays one union deep (the cdc_stream pattern);
-    at cluster scale the same frame is written per epoch and the merge
-    is a ~(groups x m)-row job regardless of batch size.
+    The state is one sketch frame whose size is bounded by the sketch
+    (registers, cells, k hashes per group), never by the data, so each
+    absorb merges the whole state with the batch's sketch and
+    localCheckpoints the result; per-epoch lineage stays one merge deep.
+    A subclass sets its ``PARAMS`` in its constructor, then calls
+    ``super().__init__(seed)``; it supplies ``_sketch(df)`` (one frame's
+    sketch), ``_merge(frames)`` (the sketch's merge) and its read method.
+    Durable via ``save(path)``/``load(spark, path)`` (operators/persist.py)."""
 
-    This is the 100 TB "distinct users/keys per day, all-time" shape:
-    sketch each partition/day once, fold forever, never recount.
-    """
+    def __init__(self, seed: DataFrame):
+        self._state = self._sketch(seed).localCheckpoint(eager=True)
 
-    def __init__(self, seed: DataFrame, keys: list[str], col: str, p: int = 10):
-        self.keys = keys
-        self.col = col
-        self.p = p
-        self._regs = hll_registers(seed, keys, col, p).localCheckpoint(eager=True)
+    def _sketch(self, df: DataFrame) -> DataFrame:
+        raise NotImplementedError
 
-    def registers(self) -> DataFrame:
-        return self._regs
+    def _merge(self, frames: list[DataFrame]) -> DataFrame:
+        raise NotImplementedError
 
-    def estimate(self) -> DataFrame:
-        return hll_estimate(self._regs, self.keys, self.p)
+    def state(self) -> DataFrame:
+        """The sketch frame. Valid until the next :meth:`absorb`, which
+        releases it."""
+        return self._state
 
-    def absorb(self, batch: DataFrame) -> "HLLIndex":
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
-
-        merged = hll_merge(
-            [self._regs, hll_registers(batch, self.keys, self.col, self.p)],
-            self.keys,
+    def absorb(self, batch: DataFrame) -> "RegisterIndex":
+        old = self._state
+        self._state = self._merge([old, self._sketch(batch)]).localCheckpoint(
+            eager=True
         )
-        old = self._regs
-        self._regs = merged.localCheckpoint(eager=True)
         # the new eager checkpoint is materialized, so the predecessor's
         # blocks are dead weight — release, don't accumulate per absorb
         release_local_checkpoint(old)
         return self
 
     def release(self) -> None:
-        """Free the state checkpoint (register-bounded — tiny, but the
-        suite's save/load-crossing streams rebind to a loaded copy and
-        the pre-save checkpoint should not outlive it)."""
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
+        """Free the state checkpoint; a parquet-restored state has none."""
+        release_local_checkpoint(self._state)
 
-        release_local_checkpoint(self._regs)
+    def _frame(self) -> DataFrame:
+        return self._state
 
-    def save(self, path: str) -> None:
-        """Write the registers durably — the "sketch each day once, fold
-        forever" shape needs the fold to survive the session. The state
-        is plain (keys, bucket, rho) rows: engine-portable (DuckDB reads
-        it directly — the registers are DATA, which is the whole point of
-        the portable HLL vs a binary native sketch)."""
-        from etl_file_loader_spark.operators.persist import save_index_state
+    def _restore(self, frame: DataFrame) -> None:
+        self._state = frame
 
-        save_index_state(
-            self._regs, {"keys": self.keys, "col": self.col, "p": self.p}, path
-        )
 
-    @classmethod
-    def load(cls, spark, path: str) -> "HLLIndex":
-        """Restore saved registers; estimates and further absorbs are
-        identical to an uninterrupted session (max-merge is confluent,
-        so the boundary cannot reorder anything observable)."""
-        from etl_file_loader_spark.operators.persist import load_index_state
+class HLLIndex(RegisterIndex):
+    """MAINTAINED distinct-count registers over arriving batches — the
+    streaming form of the portable HLL.
 
-        state, meta = load_index_state(spark, path)
-        obj = cls.__new__(cls)
-        obj.keys = list(meta["keys"])
-        obj.col = meta["col"]
-        obj.p = meta["p"]
-        obj._regs = state
-        return obj
+    Absorb is a register-wise max merge; :meth:`estimate` reads the
+    count at any epoch. The state is <= 2^p small ints per group FOREVER
+    — it never grows with data — and absorption is CONFLUENT (max is
+    commutative/associative/idempotent): any arrival order of the same
+    batches yields the same registers, so out-of-order or replayed
+    ingest cannot corrupt the count (the suite oracle replays every
+    epoch's estimate from batch numbering alone). The saved state is
+    plain (keys, bucket, rho) rows that DuckDB reads directly.
+
+    This is the 100 TB "distinct users/keys per day, all-time" shape:
+    sketch each partition/day once, fold forever, never recount.
+    """
+
+    PARAMS = ("keys", "col", "p")
+
+    def __init__(self, seed: DataFrame, keys: list[str], col: str, p: int = 10):
+        self.keys, self.col, self.p = keys, col, p
+        super().__init__(seed)
+
+    def _sketch(self, df: DataFrame) -> DataFrame:
+        return hll_registers(df, self.keys, self.col, self.p)
+
+    def _merge(self, frames: list[DataFrame]) -> DataFrame:
+        return hll_merge(frames, self.keys)
+
+    def estimate(self) -> DataFrame:
+        return hll_estimate(self._state, self.keys, self.p)
 
 
 # ---------------------------------------------------------------------------
@@ -849,18 +851,17 @@ def quantile_trim(
     return out.drop(*drop)
 
 
-class QuantileIndex:
-    """MAINTAINED quantile registers over arriving batches — the
-    NearDupIndex/HLLIndex house pattern applied to percentiles.
+class QuantileIndex(RegisterIndex):
+    """MAINTAINED quantile registers over arriving batches.
 
-    Build once from the seed, :meth:`absorb` each arriving batch
-    (sum-merge), read :meth:`estimate` at any epoch; state stays
-    register-bounded forever. Contract difference from the confluent
-    indexes, stated loudly: sum is NOT idempotent — each batch must be
-    absorbed EXACTLY ONCE (the contract every COUNT/SUM aggregation has;
-    the confluent max/min indexes tolerate replays, this one does not).
-    Durable via ``save(path)``/``load(spark, path)`` (operators/persist.py
-    plain-parquet state + config)."""
+    Absorb is a sum-merge; :meth:`estimate` reads quantiles at any epoch;
+    state stays register-bounded forever. Contract difference from the
+    confluent indexes, stated loudly: sum is NOT idempotent — each batch
+    must be absorbed EXACTLY ONCE (the contract every COUNT/SUM
+    aggregation has; the confluent max/min indexes tolerate replays,
+    this one does not)."""
+
+    PARAMS = ("keys", "col", "sig_digits", "unit_scale")
 
     def __init__(
         self,
@@ -870,207 +871,78 @@ class QuantileIndex:
         sig_digits: int = QUANTILE_SIG_DIGITS,
         unit_scale: int = 100,
     ):
-        self.keys = keys
-        self.col = col
-        self.sig_digits = sig_digits
-        self.unit_scale = unit_scale
-        self._hist = quantile_histogram(
-            seed, keys, col, sig_digits, unit_scale
-        ).localCheckpoint(eager=True)
+        self.keys, self.col = keys, col
+        self.sig_digits, self.unit_scale = sig_digits, unit_scale
+        super().__init__(seed)
 
-    def registers(self) -> DataFrame:
-        return self._hist
+    def _sketch(self, df: DataFrame) -> DataFrame:
+        return quantile_histogram(
+            df, self.keys, self.col, self.sig_digits, self.unit_scale
+        )
+
+    def _merge(self, frames: list[DataFrame]) -> DataFrame:
+        return quantile_hist_merge(frames, self.keys)
 
     def estimate(self, qs_milli: list[int]) -> DataFrame:
-        return quantile_estimate(
-            self._hist, self.keys, qs_milli, self.unit_scale
-        )
-
-    def absorb(self, batch: DataFrame) -> "QuantileIndex":
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
-
-        merged = quantile_hist_merge(
-            [
-                self._hist,
-                quantile_histogram(
-                    batch, self.keys, self.col, self.sig_digits, self.unit_scale
-                ),
-            ],
-            self.keys,
-        )
-        old = self._hist
-        self._hist = merged.localCheckpoint(eager=True)
-        release_local_checkpoint(old)
-        return self
-
-    def release(self) -> None:
-        """Free the state checkpoint (register-bounded — tiny, but the
-        suite's save/load-crossing streams rebind to a loaded copy and
-        the pre-save checkpoint should not outlive it)."""
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
-
-        release_local_checkpoint(self._hist)
-
-    def save(self, path: str) -> None:
-        from etl_file_loader_spark.operators.persist import save_index_state
-
-        save_index_state(
-            self._hist,
-            {
-                "keys": self.keys,
-                "col": self.col,
-                "sig_digits": self.sig_digits,
-                "unit_scale": self.unit_scale,
-            },
-            path,
-        )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "QuantileIndex":
-        from etl_file_loader_spark.operators.persist import load_index_state
-
-        state, meta = load_index_state(spark, path)
-        obj = cls.__new__(cls)
-        obj.keys = list(meta["keys"])
-        obj.col = meta["col"]
-        obj.sig_digits = meta["sig_digits"]
-        obj.unit_scale = meta["unit_scale"]
-        obj._hist = state
-        return obj
+        return quantile_estimate(self._state, self.keys, qs_milli, self.unit_scale)
 
 
-class CMSIndex:
+class CMSIndex(RegisterIndex):
     """MAINTAINED count-min sketch over arriving batches — the
-    heavy-hitter member of the maintained-index family (NearDup/Linkage =
-    min-confluent, HLL = max-confluent, Quantile/CMS = sum-merged with
-    the exactly-once absorb contract stated loudly: adding a batch twice
-    double-counts, same as any COUNT aggregate).
+    heavy-hitter member of the maintained-index family.
 
-    Build once from the seed, :meth:`absorb` each batch (cell-wise sum),
-    :meth:`query` point estimates at any epoch (never undercounting, the
-    CMS guarantee). State is depth x width cells FOREVER; durable via
-    ``save(path)``/``load(spark, path)`` — the "top talkers per day,
-    all-time" shape at 100 TB."""
+    Absorb is a cell-wise sum, with the exactly-once contract of
+    :class:`QuantileIndex` (adding a batch twice double-counts, same as
+    any COUNT aggregate); :meth:`query` returns point estimates at any
+    epoch (never undercounting, the CMS guarantee). State is depth x
+    width cells FOREVER — the "top talkers per day, all-time" shape at
+    100 TB."""
+
+    PARAMS = ("col", "depth", "width")
 
     def __init__(
         self, seed: DataFrame, col: str, depth: int = 4, width: int | None = None
     ):
-        self.col = col
-        self.depth = depth
         # width=None sizes off the seed's KMV distinct estimate (the sf10
         # regime rule as code — see auto_cms_width); the resolved value is
-        # recorded here, used by every absorb/query, and persisted by save
+        # used by every absorb/query and persisted by save
+        self.col, self.depth = col, depth
         self.width = auto_cms_width(seed, col) if width is None else width
-        self._sk = cms_sketch(seed, col, depth, self.width).localCheckpoint(
-            eager=True
-        )
+        super().__init__(seed)
 
-    def sketch(self) -> DataFrame:
-        return self._sk
+    def _sketch(self, df: DataFrame) -> DataFrame:
+        return cms_sketch(df, self.col, self.depth, self.width)
 
-    def absorb(self, batch: DataFrame) -> "CMSIndex":
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
-
-        merged = cms_merge(
-            [self._sk, cms_sketch(batch, self.col, self.depth, self.width)]
-        )
-        old = self._sk
-        self._sk = merged.localCheckpoint(eager=True)
-        release_local_checkpoint(old)
-        return self
-
-    def release(self) -> None:
-        """Free the state checkpoint (register-bounded — tiny, but the
-        suite's save/load-crossing streams rebind to a loaded copy and
-        the pre-save checkpoint should not outlive it)."""
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
-
-        release_local_checkpoint(self._sk)
+    def _merge(self, frames: list[DataFrame]) -> DataFrame:
+        return cms_merge(frames)
 
     def query(self, items: DataFrame, item_col: str) -> DataFrame:
-        return cms_query(self._sk, items, item_col, self.depth, self.width)
-
-    def save(self, path: str) -> None:
-        from etl_file_loader_spark.operators.persist import save_index_state
-
-        save_index_state(
-            self._sk,
-            {"col": self.col, "depth": self.depth, "width": self.width},
-            path,
-        )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "CMSIndex":
-        from etl_file_loader_spark.operators.persist import load_index_state
-
-        state, meta = load_index_state(spark, path)
-        obj = cls.__new__(cls)
-        obj.col = meta["col"]
-        obj.depth = meta["depth"]
-        obj.width = meta["width"]
-        obj._sk = state
-        return obj
+        return cms_query(self._state, items, item_col, self.depth, self.width)
 
 
-class KMVIndex:
+class KMVIndex(RegisterIndex):
     """MAINTAINED KMV distinct-count sketch — the set-union member of the
-    maintained-index family, and the AUDITABLE complement of
-    :class:`HLLIndex`: the state is the k smallest distinct hashes
-    themselves (a pure function of the data, exactly replayable in SQL),
-    not lossy registers. Union-merge keeps the k smallest — idempotent /
-    commutative / associative, so like the min/max-confluent indexes
-    (and UNLIKE Quantile/CMS) replayed or out-of-order absorbs cannot
-    corrupt the estimate. Durable via ``save``/``load``
-    (operators/persist.py); state is groups x k longs forever."""
+    maintained-index family.
+
+    The AUDITABLE complement of :class:`HLLIndex`: the state is the k
+    smallest distinct hashes themselves (a pure function of the data,
+    exactly replayable in SQL), not lossy registers. Union-merge keeps
+    the k smallest — idempotent / commutative / associative, so like the
+    min/max-confluent indexes (and UNLIKE Quantile/CMS) replayed or
+    out-of-order absorbs cannot corrupt the estimate. State is groups x k
+    longs forever."""
+
+    PARAMS = ("keys", "col", "k")
 
     def __init__(self, seed: DataFrame, keys: list[str], col: str, k: int = 64):
-        self.keys = keys
-        self.col = col
-        self.k = k
-        self._state = kmv_sketch(seed, keys, col, k).localCheckpoint(eager=True)
+        self.keys, self.col, self.k = keys, col, k
+        super().__init__(seed)
 
-    def state(self) -> DataFrame:
-        return self._state
+    def _sketch(self, df: DataFrame) -> DataFrame:
+        return kmv_sketch(df, self.keys, self.col, self.k)
+
+    def _merge(self, frames: list[DataFrame]) -> DataFrame:
+        return kmv_merge(frames, self.keys, self.k)
 
     def estimate(self) -> DataFrame:
         return kmv_estimate(self._state, self.k)
-
-    def absorb(self, batch: DataFrame) -> "KMVIndex":
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
-
-        merged = kmv_merge(
-            [self._state, kmv_sketch(batch, self.keys, self.col, self.k)],
-            self.keys,
-            self.k,
-        )
-        old = self._state
-        self._state = merged.localCheckpoint(eager=True)
-        release_local_checkpoint(old)
-        return self
-
-    def release(self) -> None:
-        """Free the state checkpoint (register-bounded — tiny, but the
-        suite's save/load-crossing streams rebind to a loaded copy and
-        the pre-save checkpoint should not outlive it)."""
-        from etl_file_loader_spark.operators.cache import release_local_checkpoint
-
-        release_local_checkpoint(self._state)
-
-    def save(self, path: str) -> None:
-        from etl_file_loader_spark.operators.persist import save_index_state
-
-        save_index_state(
-            self._state, {"keys": self.keys, "col": self.col, "k": self.k}, path
-        )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "KMVIndex":
-        from etl_file_loader_spark.operators.persist import load_index_state
-
-        state, meta = load_index_state(spark, path)
-        obj = cls.__new__(cls)
-        obj.keys = list(meta["keys"])
-        obj.col = meta["col"]
-        obj.k = meta["k"]
-        obj._state = state
-        return obj

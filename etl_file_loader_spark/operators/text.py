@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from etl_file_loader_spark.functions import token_hash32, tokens
 from etl_file_loader_spark.operators.cache import pin
+from etl_file_loader_spark.operators.persist import MaintainedIndex
 
 # tiny per-language stopword marker sets (heuristic language ID)
 LANG_MARKERS: dict[str, list[str]] = {
@@ -2749,7 +2750,7 @@ def bm25_topk(
     return scored.orderBy(F.col("bm25").desc(), F.col(id_col)).limit(k)
 
 
-class BM25Index:
+class BM25Index(MaintainedIndex):
     """MAINTAINED fixed-query BM25 postings — the retrieval rung of the
     maintained-index family (NearDup = near-dup membership, Linkage =
     record linkage, HLL/KMV = distinct, CMS = frequency, Quantile =
@@ -2771,7 +2772,7 @@ class BM25Index:
     - Absorb is APPEND: exactly-once per doc is the caller's contract
       (a batch absorbed twice double-counts its docs in N/df/avgdl —
       the quantile/CMS sum-merge caveat, not the HLL max confluence).
-    - Absorb cost is O(batch), not O(state) (round 14): the postings
+    - Absorb cost is O(batch), not O(state): the postings
       live in an LSM-style TieredState with identity fold — an absorb
       tokenizes and checkpoints ONLY the batch; geometric cascade
       merges (pure concatenation — postings never reduce) bound tier
@@ -2781,17 +2782,21 @@ class BM25Index:
     - The query terms are fixed at build (the fixed-query BM25 shape —
       decontamination probes, standing domain queries). Adding a term to
       a standing probe uses :meth:`add_terms` — one corpus pass counting
-      ONLY the new terms, joined into the stored postings (round 14;
-      proven equal to rebuild-with-all-terms by test). Ad-hoc queries
-      use the scan-time :func:`bm25_score`.
+      ONLY the new terms, joined into the stored postings (proven equal
+      to rebuild-with-all-terms by test). Ad-hoc queries use the
+      scan-time :func:`bm25_score`.
     - Frames returned by :meth:`postings` are valid only until the next
-      absorb (a cascade may release member tiers — the round-13
-      index-family contract, carried by TieredState).
+      absorb (a cascade may release member tiers).
+    - ``save``/``load`` (operators/persist.py) write the postings as
+      plain long rows plus the query spec; DuckDB can score the saved
+      postings directly.
 
     Reference parity anchor: the reference engine has no retrieval
     operator; this extends the training-data-pipeline surface
     (hybrid_retrieval's sparse side as a durable incremental artifact).
     """
+
+    PARAMS = ("id_col", "text_col", "terms", "k1", "b")
 
     def __init__(
         self,
@@ -2813,6 +2818,14 @@ class BM25Index:
             _bm25_base(seed, id_col, text_col, self.terms)
         )
 
+    def _frame(self) -> DataFrame:
+        return self._state.compacted()
+
+    def _restore(self, frame: DataFrame) -> None:
+        from etl_file_loader_spark.operators.tiered import TieredState
+
+        self._state = TieredState.restored(frame)
+
     def postings(self) -> DataFrame:
         return self._state.view()
 
@@ -2826,13 +2839,12 @@ class BM25Index:
 
     def release(self) -> None:
         """Free the postings' block-manager state (all tiers); the index
-        is unusable afterwards. Call before rebinding to a loaded copy."""
+        is unusable afterwards."""
         self._state.release()
 
     def add_terms(self, corpus: DataFrame, new_terms: list[str]) -> "BM25Index":
-        """Watchlist-delta term addition (round 14 — removes the
-        full-rebuild cliff the terms-fixed-at-build contract used to
-        impose on standing decontamination probes).
+        """Watchlist-delta term addition: widens a standing
+        decontamination probe without a full rebuild.
 
         ``corpus`` must contain EXACTLY the absorbed docs, once each
         (the exactly-once absorb contract, extended; validated — a
@@ -2903,40 +2915,6 @@ class BM25Index:
         """Deterministic cut: rounded score DESC, id ASC (the bm25_topk
         contract; TakeOrderedAndProject — no global sort)."""
         return self.score().orderBy(F.col("bm25").desc(), F.col(self.id_col)).limit(k)
-
-    def save(self, path: str) -> None:
-        """Postings as plain long rows + the query spec as meta — engine-
-        portable like every index in the family (DuckDB can score the
-        saved postings directly; the suite oracle effectively does)."""
-        from etl_file_loader_spark.operators.persist import save_index_state
-
-        save_index_state(
-            self._state.compacted(),
-            {
-                "id_col": self.id_col,
-                "text_col": self.text_col,
-                "terms": self.terms,
-                "k1": self.k1,
-                "b": self.b,
-            },
-            path,
-        )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "BM25Index":
-        from etl_file_loader_spark.operators.persist import load_index_state
-
-        from etl_file_loader_spark.operators.tiered import TieredState
-
-        state, meta = load_index_state(spark, path)
-        obj = cls.__new__(cls)
-        obj.id_col = meta["id_col"]
-        obj.text_col = meta["text_col"]
-        obj.terms = list(meta["terms"])
-        obj.k1 = float(meta["k1"])
-        obj.b = float(meta["b"])
-        obj._state = TieredState.restored(state)
-        return obj
 
 
 def rrf_fuse(

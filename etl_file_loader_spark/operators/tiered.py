@@ -1,16 +1,11 @@
 """LSM-style tiered state for doc-proportional maintained indexes.
 
-Round 13 closed the absorb-checkpoint LEAK (every superseded snapshot
-released); this module closes the absorb-checkpoint COST. The round-13
-shape still rewrote the ENTIRE state per absorb — NearDupIndex re-min'd
-old-index ∪ new-bands through a full groupBy, BM25Index re-checkpointed
-the whole postings union — so K absorbs cost O(K·state) even when every
-batch was tiny: a stream-lifetime scale bug on a continuously-maintained
-index over a 100 TB corpus (the round-13 verdict's one `weak`). The
-register-bounded family (HLL/KMV/CMS/Quantile) was never affected — its
-state is sketch-sized — so it keeps the single-checkpoint absorb.
-
-The fix is the standard log-structured-merge discipline:
+NearDupIndex's band rows, BM25Index's postings and LinkageIndex's
+absorbed master rows grow with the data, so an absorb that rewrote the
+whole state would cost O(state) per batch and O(K·state) over K batches.
+The register-bounded indexes (HLL/KMV/CMS/Quantile) hold sketch-sized
+state and keep a single-checkpoint absorb (operators/sketches.py:
+RegisterIndex). This module is the log-structured-merge discipline:
 
 - State is a LIST of tiers (each an eager ``localCheckpoint``), oldest
   first. The logical state is the union of tiers — consumers that
@@ -19,9 +14,8 @@ The fix is the standard log-structured-merge discipline:
   because their fold is associative/commutative over tiers.
 - ``absorb`` checkpoints ONLY the new batch's contribution — O(batch)
   rows shuffled and materialized, regardless of how large the absorbed
-  state has grown. This is the contract the round-13 verdict asked to
-  be measured, not asserted: tools/measure_absorb_release.py records
-  per-absorb wall time over long streams (flat at fixed batch size).
+  state has grown (tools/measure_absorb_release.py records per-absorb
+  wall time over long streams: flat at fixed batch size).
 - A geometric CASCADE bounds tier count: after appending, while the
   newest tier has grown to within ``1/growth`` of its predecessor, the
   two merge (fold over their union, fresh checkpoint, both predecessors
@@ -33,17 +27,16 @@ The fix is the standard log-structured-merge discipline:
 
 ``fold`` is the state's reduction: NearDupIndex passes the per-bucket
 canonical-id ``min`` (tiers shrink as duplicate buckets merge);
-BM25Index passes identity (postings are append-only — merges are pure
-concatenation, done only to bound tier count). Fold MUST be idempotent
-over its own output and associative across tiers — exactly the
-confluence the index classes already pin in their absorb tests.
+BM25Index and LinkageIndex pass identity (their rows are append-only —
+merges are pure concatenation, done only to bound tier count). Fold
+MUST be idempotent over its own output and associative across tiers.
 
-Durability composes with operators/persist.py: ``compacted()`` is the
-one-frame save shape (fold over all tiers, not checkpointed — the
-parquet write materializes it), and ``restored()`` adopts a loaded
+Durability (operators/persist.py: MaintainedIndex): ``compacted()`` is
+the one-frame save shape (fold over all tiers, not checkpointed — the
+parquet write materializes it), and ``restored()`` adopts a saved
 parquet frame as the single base tier without re-checkpointing it (the
-parquet IS durable; ``release_local_checkpoint`` no-ops on it by
-design, so the cascade may pass it unconditionally).
+parquet IS durable; ``release_local_checkpoint`` no-ops on it, so the
+cascade and ``release`` may pass it unconditionally).
 """
 
 from __future__ import annotations

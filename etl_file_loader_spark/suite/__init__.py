@@ -102,85 +102,9 @@ ORACLES.update(
     }
 )
 
-# Order matters: the driver checks a prefix. 50 entries — the window is FULL
-# (zero slack): adding a query here requires demoting another into a digest.
-#
-# Round-11 rotation (#6, VERDICT r10 ask 2): the 7 round-10 digest-born
-# rows get their direct driver rows — jaccard_prefix_candidates,
-# fuzzy_join_feed, jaccard_join_docs, fuzzy_link_best, jaccard_pairs_auto,
-# bloom_semi_join_fast, near_dedup_exact; 7 long-green rows demoted into
-# their family digests (zorder_layout_check / kmv_distinct_check /
-# cms_heavy_hitters green since round 9 -> analytics_digest;
-# semantic_contamination_check / similarity_pq_recall /
-# packed_sequences_bpe / diversity_sample_check green since round 8 ->
-# corpus_digest), where each stays value-verified every round. The
-# recall/agreement gates paired with the eight rows-only ANN demos are
-# deliberately NOT demoted — their graded contract requires them in the
-# same window as the demos they gate.
-#
-# Round-10 rotation (VERDICT r9 ask 2): the 10 round-9 digest-from-birth
-# operators get their direct driver rows — curation_text_signals,
-# triplet_mining_lsh, langid_fixture, bloom_filter_check, bloom_probe_stats,
-# bloom_semi_join, image_dedup_pairs, streaming_cdc_apply, fuzzy_match_parts,
-# jaccard_join_prefix; 10 long-green rows (asof_join / range_join_count
-# checked since round 1, simhash_dedup / quality_classifier / training_order
-# since rounds 3-4, multimodal_resize_real / audio_decode_real since round 5,
-# html_extract since round 6, streaming_events_hourly since round 2,
-# trigram_logprob since round 8) demoted into their family digests, where
-# each stays value-verified every round.
-#
-# Round-9 rotation (VERDICT r8 ask 1): 15 of the round-8 digest-from-birth
-# operators promoted to direct driver rows — span_dedup, kn_bigram_logprob,
-# gopher_repetition_rules, ngram_novelty, packed_sequences_{wordpiece,
-# unigram}, cdc_apply, table_diff, zorder_layout_check, incremental_agg_check,
-# kmv_distinct_check, cms_heavy_hitters, image_dhash_real,
-# audio_fingerprint_real, streaming_sessionize — all full-oracle rows; 15
-# long-green window rows (checked individually since rounds 1-6) demoted
-# into analytics_digest / corpus_digest, where each stays value-verified
-# every round.
-#
-# Round-8 rotation (VERDICT r7 ask 1): the 14 queries the driver had NEVER
-# checked directly — knn_join_lsh{,_clustered,_auto_clustered},
-# knn_join_auto_recall, semantic_dedup_check, semantic_dedup_clustered,
-# semantic_contamination_check, dedup_embedding_pairs_lsh{,_clustered},
-# diversity_sample_check, similarity_pq_recall, similarity_{ivf,lsh}_topk,
-# packed_sequences_bpe — promoted, plus the new trigram_logprob; 15
-# long-green rows (individually checked rounds 1-7) demoted into
-# corpus_digest, where each stays value-verified every round.
-#
-# Some promotions were approximate RESULT-SET demos; since round 11 NONE
-# remain rows-only (_ROWS_ONLY below is EMPTY) — the testdata-table
-# hyperplane rows gained full DuckDB value oracles by replaying the
-# deterministic md5-derived planes, similarity_ivf_topk followed via the
-# deterministic KMeansDF quantizer (kmeans_cte replay), and the
-# *_clustered rows followed when the clustered fixture itself became an
-# md5 derivation with a SQL form. Every window row carries a full value
-# oracle; the recall/agreement gates stay in the window as
-# semantic-behavior redundancy (same code path, independent contract).
-#
-# Round-6 rotation for reference: 11 long-green dedup/text rows demoted,
-# 12 promoted (html_extract + 11 previously-digest-only ops).
-#
-# Round-13 rotation (#8, VERDICT r12 ask 3): the 5 round-12 digest-born
-# rows get their direct driver rows — quantile_hist_check,
-# quantile_index_stream, cms_index_stream, streaming_quantile_state,
-# hybrid_retrieval; 5 long-green rows demoted into their family digests
-# (bloom_filter_check / bloom_probe_stats, window rows since round 10 ->
-# analytics_digest; image_dhash_real / audio_fingerprint_real, window
-# rows since round 9 -> corpus_digest; streaming_sessionize, window row
-# since round 9 -> pipeline_digest), where each stays value-verified
-# every round.
-#
-# Round-12 rotation (#7, VERDICT r11 ask 3): the 9 round-11 digest-born
-# rows get their direct driver rows — fuzzy_link_tiers,
-# fuzzy_link_incremental, near_dedup_index_stream, url_canonical,
-# domain_guard, hll_distinct_check, hll_index_stream,
-# semantic_dedup_replay, weighted_sample_check; 9 rows green since round
-# 9 demoted into their family digests (span_dedup / kn_bigram_logprob /
-# gopher_repetition_rules / ngram_novelty / packed_sequences_wordpiece /
-# packed_sequences_unigram -> corpus_digest; cdc_apply / table_diff ->
-# pipeline_digest; incremental_agg_check -> analytics_digest), where each
-# stays value-verified every round.
+# The verdict window served by __spark_entry__.queries(): at most 50
+# entries, checked as a prefix, so order matters. Every entry carries a
+# full DuckDB value oracle (asserted below); the digests fold more rows in.
 CHECKED_QUERIES: list[str] = [
     # flagship + the four digests (members verified up front)
     "q1_pricing_summary",
@@ -303,29 +227,5 @@ assert len(CHECKED_QUERIES) <= 50, (
 assert len(CHECKED_QUERIES) == len(set(CHECKED_QUERIES))
 _missing = [n for n in CHECKED_QUERIES if n not in QUERIES]
 assert not _missing, f"CHECKED_QUERIES not registered: {_missing}"
-# Every checked query carries a full DuckDB value oracle. _ROWS_ONLY held
-# the approximate result-set demos (rounds 8-10) whose LSH/k-means
-# internals then had no SQL form; round 11 emptied it (history below) and
-# the assertion beneath now guards the stronger invariant: a window row
-# without an oracle is an error, not a weaker check.
-_ROWS_ONLY: set[str] = {
-    # round 11 (VERDICT r10 ask 3): dedup_embedding_pairs_lsh,
-    # similarity_lsh_topk and knn_join_lsh LEFT this set — their
-    # hyperplanes are deterministic md5 derivations, so DuckDB replays the
-    # full bucketing (+ multi-probe, banding) and they now carry full
-    # value oracles. Round 11 extras EMPTIED this set entirely:
-    # similarity_ivf_topk left via the deterministic KMeansDF quantizer
-    # (kmeans_cte replay), and the four *_clustered rows left when the
-    # clustered fixture itself became an md5 derivation with a SQL form
-    # (fixtures.clustered_embeddings round-11 rewrite — bit-identical
-    # float32 across engines, pinned by
-    # tests/test_clustered_fixture_oracle.py — replayed by
-    # suite/similarity.py:clustered_fixture_cte; semantic_dedup_clustered
-    # additionally switched to the replayable KMeansDF configuration).
-    # Every driver window row now carries a FULL value oracle; the
-    # recall/agreement gates remain as semantic-behavior redundancy.
-}
-_no_oracle = [
-    n for n in CHECKED_QUERIES if n not in ORACLES and n not in _ROWS_ONLY
-]
+_no_oracle = [n for n in CHECKED_QUERIES if n not in ORACLES]
 assert not _no_oracle, f"checked queries missing oracles: {_no_oracle}"

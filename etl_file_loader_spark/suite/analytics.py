@@ -945,7 +945,7 @@ def q_hll_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def snapshot(epoch: int) -> DataFrame:
         est = idx.estimate()
-        md5 = idx.registers().groupBy("o_orderstatus").agg(
+        md5 = idx.state().groupBy("o_orderstatus").agg(
             F.md5(
                 F.array_join(
                     F.transform(
@@ -1665,7 +1665,7 @@ def q_quantile_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("est").alias("p90"),
             F.col("n"),
         )
-        md5 = _quantile_reg_md5(idx.registers(), keys).select(
+        md5 = _quantile_reg_md5(idx.state(), keys).select(
             F.col("o_orderstatus").alias("grp"), "reg_md5"
         )
         return est.join(md5, "grp").select(
@@ -1678,9 +1678,6 @@ def q_quantile_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # fixed overwrite path — see near_dedup_index_stream
             ckpt = _suite_ckpt_dir(spark) + "/quantile_idx"
             idx.save(ckpt)
-            # pre-save checkpoint must not outlive the restored copy
-            # (ADVICE r13: the rebind leaked it for the session)
-            idx.release()
             idx = sketches.QuantileIndex.load(spark, ckpt)
         idx.absorb(orders.filter(F.col("o_orderkey") % 4 == k))
         outs.append(_epoch_snapshot(snapshot(k)))
@@ -1795,7 +1792,7 @@ def q_cms_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def snapshot(epoch: int) -> DataFrame:
         est = idx.query(cands, "o_custkey")
-        md5 = idx.sketch().agg(
+        md5 = idx.state().agg(
             F.md5(
                 F.array_join(
                     F.transform(
@@ -1823,7 +1820,6 @@ def q_cms_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if k == 2:
             ckpt = _suite_ckpt_dir(spark) + "/cms_idx"
             idx.save(ckpt)
-            idx.release()  # rebind leak — see quantile_idx note above
             idx = sketches.CMSIndex.load(spark, ckpt)
         idx.absorb(orders.filter(F.col("o_orderkey") % 4 == k))
         outs.append(_epoch_snapshot(snapshot(k)))

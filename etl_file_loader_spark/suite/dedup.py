@@ -655,9 +655,6 @@ def q_near_dedup_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # from clobbering each other's state mid-query (ADVICE r12)
             ckpt = _suite_ckpt_dir(spark) + "/near_dedup_idx"
             idx.save(ckpt)
-            # pre-save tiers must not outlive the restored copy (ADVICE
-            # r13: the rebind leaked the live checkpoints for the session)
-            idx.release()
             idx = dedup_ops.NearDupIndex.load(spark, ckpt)
         batch = docs.filter(F.col("doc_id") % 4 == k)
         # each batch's flags materialize BEFORE the absorb: absorb()
@@ -1738,7 +1735,6 @@ def q_fuzzy_link_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx.absorb(half(F.col("p_partkey") % 4 == 1))
     ckpt = _suite_ckpt_dir(spark) + "/linkage_absorb_idx"
     idx.save(ckpt)
-    idx.release()
     idx = dedup_ops.LinkageIndex.load(spark, ckpt)
     idx.absorb(half(F.col("p_partkey") % 4 == 3))
     from etl_file_loader_spark.operators.cache import pin_checkpoint

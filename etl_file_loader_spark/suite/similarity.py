@@ -59,10 +59,9 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via IVF coarse quantizer on the deterministic DataFrame-native
     k-means (``IVFIndexDF``): md5-seeded init, 5 Lloyd iterations, rounded
     centroids — every step an engine-agnostic derivation, so the DuckDB
-    oracle replays the FULL approximate result set (round 11: this row
-    left _ROWS_ONLY). Recall vs the exact twin is still gated by
-    ``similarity_ivf_recall`` (measured 80% at sf0.01, 100% at sf0.001
-    with n_lists=8, n_probe=6)."""
+    oracle replays the FULL approximate result set. Recall vs the exact
+    twin is still gated by ``similarity_ivf_recall`` (measured 80% at
+    sf0.01, 100% at sf0.001 with n_lists=8, n_probe=6)."""
     emb = _t(spark, sf_dir, "embeddings")
     idx = sim_ops.IVFIndexDF(n_lists=8).fit(emb, "embedding")
     assigned = idx.assign(emb, "embedding")
@@ -411,11 +410,10 @@ def clustered_fixture_cte(
     n: int, dim: int = 64, k: int = 40, noise: float = 0.03, seed: int = 7,
     name: str = "fx",
 ) -> str:
-    """SQL twin of ``fixtures.clustered_embeddings`` — the round-11 change
-    that emptied _ROWS_ONLY: the fixture DATA is md5-derived with NO
-    normalization, so every float32 component is ONE correctly-rounded
-    double add of exactly-representable inputs (int32/2^32 uniforms) —
-    BIT-IDENTICAL across engines, pinned by
+    """SQL twin of ``fixtures.clustered_embeddings``: the fixture DATA is
+    md5-derived with NO normalization, so every float32 component is ONE
+    correctly-rounded double add of exactly-representable inputs
+    (int32/2^32 uniforms) — BIT-IDENTICAL across engines, pinned by
     tests/test_clustered_fixture_oracle.py's exhaustive equality check."""
     import math
 
@@ -625,9 +623,9 @@ LIMIT 10
 
 def _knn_lsh_clustered_sql(n: int, num_bands: int, planes_per_band: int, k: int = 3) -> str:
     """Full replay of knn_join_lsh over the md5-deterministic clustered
-    fixture (round 11: the fixture's SQL form emptied _ROWS_ONLY): derive
-    the fixture, re-project onto num_bands*planes_per_band md5 planes,
-    band, candidate-join, exact rounded-cosine rescore, mirror, rank."""
+    fixture: derive the fixture, re-project onto num_bands*planes_per_band
+    md5 planes, band, candidate-join, exact rounded-cosine rescore, mirror,
+    rank."""
     total_planes = num_bands * planes_per_band
     return f"""
 WITH {clustered_fixture_cte(n)},
@@ -691,10 +689,10 @@ ORACLES.update(
         "knn_join_lsh": Q_KNN_JOIN_LSH_SQL,
         "similarity_lsh_recall": "SELECT 'lsh_recall_at_10' AS metric, 60 AS threshold_pct, 1 AS passed",
         "similarity_ivf_recall": "SELECT 'ivf_recall_at_10' AS metric, 70 AS threshold_pct, 1 AS passed",
-        # round 11 extra: the k-means-seeded IVF row ALSO leaves _ROWS_ONLY
-        # — KMeansDF's md5 init + fixed rounded Lloyd iterations unroll as
-        # chained CTEs (the BPE-merge replay precedent, iteration instead
-        # of recursion); margins pinned by tests/test_kmeans_df_oracle.py
+        # the k-means-seeded IVF row has a full oracle too: KMeansDF's md5
+        # init + fixed rounded Lloyd iterations unroll as chained CTEs (the
+        # BPE-merge replay precedent, iteration instead of recursion);
+        # margins pinned by tests/test_kmeans_df_oracle.py
         "similarity_ivf_topk": Q_SIMILARITY_IVF_TOPK_SQL,
         "knn_join": Q_KNN_JOIN_SQL,
         "knn_join_recall": "SELECT 'knn_join_recall_at_3' AS metric, 90 AS threshold_pct, 1 AS passed",

@@ -1264,9 +1264,6 @@ def q_bm25_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if k == 2:
             ckpt = _suite_ckpt_dir(spark) + "/bm25_idx"
             idx.save(ckpt)
-            # pre-save postings tiers must not outlive the restored copy
-            # (ADVICE r13: the rebind leaked the live checkpoints)
-            idx.release()
             idx = BM25Index.load(spark, ckpt)
         idx.absorb(docs.filter(F.col("doc_id") % 4 == k))
         outs.append(snapshot(k))

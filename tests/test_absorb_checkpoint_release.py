@@ -93,7 +93,7 @@ def test_hll_index_constant_checkpoints(spark):
     }
     got = {(r.grp, r.hll_est) for r in idx.estimate().collect()}
     assert got == expect
-    release_local_checkpoint(idx._regs)
+    idx.release()
     assert not _new_ids(spark, base)
 
 
@@ -109,8 +109,8 @@ def test_quantile_index_constant_checkpoints(spark):
     expect = {tuple(r) for r in one_shot.estimate([500, 990]).collect()}
     got = {tuple(r) for r in idx.estimate([500, 990]).collect()}
     assert got == expect
-    release_local_checkpoint(idx._hist)
-    release_local_checkpoint(one_shot._hist)
+    idx.release()
+    one_shot.release()
     assert not _new_ids(spark, base)
 
 
@@ -131,8 +131,8 @@ def test_cms_index_constant_checkpoints(spark):
     true = {r.grp: r.cnt for r in union.groupBy("grp").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     for g, est in got:
         assert est >= true[g]
-    release_local_checkpoint(idx._sk)
-    release_local_checkpoint(one_shot._sk)
+    idx.release()
+    one_shot.release()
     assert not _new_ids(spark, base)
 
 
@@ -142,7 +142,7 @@ def test_kmv_index_constant_checkpoints(spark):
     idx = KMVIndex(batches[0], ["grp"], "id", k=16)
     _assert_constant_rdds(spark, idx, batches[1:], base)
     assert idx.estimate().count() == 7
-    release_local_checkpoint(idx._state)
+    idx.release()
     assert not _new_ids(spark, base)
 
 

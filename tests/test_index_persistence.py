@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from etl_file_loader_spark.operators import dedup as dedup_ops
 from etl_file_loader_spark.operators import sketches
+from etl_file_loader_spark.operators.text import BM25Index
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,6 +47,11 @@ def test_near_dup_index_reload_equality(spark, docs, tmp_path):
     idx = dedup_ops.NearDupIndex(seed, "doc_id", "text")
     idx.absorb(b1)
     flags_live = _rows(idx.flag(b2))
+    frame_live = _rows(idx.index_frame())
+    # save() moves idx onto its snapshot; an unsaved twin keeps the
+    # uninterrupted run to compare against
+    twin = dedup_ops.NearDupIndex(seed, "doc_id", "text")
+    twin.absorb(b1)
 
     path = str(tmp_path / "ndi")
     idx.save(path)
@@ -55,13 +61,14 @@ def test_near_dup_index_reload_equality(spark, docs, tmp_path):
         idx.id_col, idx.text_col, idx.num_hashes, idx.n,
         idx.bands, idx.rows_per_band,
     )
-    assert _rows(back.index_frame()) == _rows(idx.index_frame())
+    assert _rows(back.index_frame()) == frame_live
     assert _rows(back.flag(b2)) == flags_live
 
     # absorbing PAST the boundary equals the uninterrupted run
-    idx.absorb(b2)
+    twin.absorb(b2)
     back.absorb(b2)
-    assert _rows(back.index_frame()) == _rows(idx.index_frame())
+    assert _rows(back.index_frame()) == _rows(twin.index_frame())
+    twin.release()
 
 
 def test_linkage_index_reload_equality(spark, part, tmp_path):
@@ -75,6 +82,7 @@ def test_linkage_index_reload_equality(spark, part, tmp_path):
     )
     live_link = _rows(idx.link(feed, "rid", "s"))
     live_best = _rows(idx.link_best(feed, "rid", "s"))
+    live_parts = idx._lbase.rdd.getNumPartitions()
 
     path = str(tmp_path / "li")
     idx.save(path)
@@ -84,7 +92,7 @@ def test_linkage_index_reload_equality(spark, part, tmp_path):
     # run on a single-file parquet's 1-2 partitions
     par = spark.sparkContext.defaultParallelism
     assert back._lbase.rdd.getNumPartitions() >= min(
-        par, max(idx._lbase.rdd.getNumPartitions(), 1)
+        par, max(live_parts, 1)
     )
     assert _rows(back.link(feed, "rid", "s")) == live_link
     assert _rows(back.link_best(feed, "rid", "s")) == live_best
@@ -99,18 +107,21 @@ def test_hll_index_reload_equality(spark, orders, tmp_path):
     idx = sketches.HLLIndex(seed, ["o_orderstatus"], "o_custkey", p=8)
     idx.absorb(b1)
     est_live = _rows(idx.estimate())
+    state_live = _rows(idx.state())
+    twin = sketches.HLLIndex(seed, ["o_orderstatus"], "o_custkey", p=8).absorb(b1)
 
     path = str(tmp_path / "hll")
     idx.save(path)
     back = sketches.HLLIndex.load(spark, path)
     assert (back.keys, back.col, back.p) == (["o_orderstatus"], "o_custkey", 8)
-    assert _rows(back.registers()) == _rows(idx.registers())
+    assert _rows(back.state()) == state_live
     assert _rows(back.estimate()) == est_live
 
-    idx.absorb(b2)
+    twin.absorb(b2)
     back.absorb(b2)
-    assert _rows(back.registers()) == _rows(idx.registers())
-    assert _rows(back.estimate()) == _rows(idx.estimate())
+    assert _rows(back.state()) == _rows(twin.state())
+    assert _rows(back.estimate()) == _rows(twin.estimate())
+    twin.release()
 
 
 def test_bm25_index_reload_equality(spark, docs, tmp_path):
@@ -123,15 +134,18 @@ def test_bm25_index_reload_equality(spark, docs, tmp_path):
 
     idx = BM25Index(seed, "doc_id", "text", terms)
     idx.absorb(b1)
+    postings_live = _rows(idx.postings())
+    twin = BM25Index(seed, "doc_id", "text", terms).absorb(b1)
     path = str(tmp_path / "bm25")
     idx.save(path)
     back = BM25Index.load(spark, path)
     assert (back.terms, back.k1, back.b) == (terms, 1.2, 0.75)
-    assert _rows(back.postings()) == _rows(idx.postings())
+    assert _rows(back.postings()) == postings_live
 
-    idx.absorb(b2)
+    twin.absorb(b2)
     back.absorb(b2)
-    assert _rows(back.score()) == _rows(idx.score())
+    assert _rows(back.score()) == _rows(twin.score())
+    twin.release()
     # maintained score == scan-time one-shot over the whole corpus
     one_shot = _rows(bm25_score(docs, "doc_id", "text", terms))
     assert _rows(back.score()) == one_shot
@@ -146,13 +160,13 @@ def test_hll_saved_registers_are_engine_portable(spark, orders, tmp_path):
         orders.filter(F.col("o_orderkey") % 4 == 0),
         ["o_orderstatus"], "o_custkey", p=8,
     )
+    live = _rows(idx.state())
     path = str(tmp_path / "hllp")
     idx.save(path)
     duck = duckdb.sql(
         f"SELECT o_orderstatus, bucket, rho FROM '{path}/snapshot_v0/state/*.parquet' "
         f"ORDER BY 1, 2"
     ).fetchall()
-    live = _rows(idx.registers())
     assert [tuple(r) for r in duck] == live
 
 
@@ -166,22 +180,23 @@ def test_cms_index_reload_and_exactly_once(spark, orders, tmp_path):
     idx = sketches.CMSIndex(seed, "o_custkey", depth=4, width=64)
     idx.absorb(b1)
     est_live = _rows(idx.query(cands, "o_custkey"))
+    state_live = _rows(idx.state())
 
     path = str(tmp_path / "cms")
     idx.save(path)
     back = sketches.CMSIndex.load(spark, path)
     assert (back.col, back.depth, back.width) == ("o_custkey", 4, 64)
-    assert _rows(back.sketch()) == _rows(idx.sketch())
+    assert _rows(back.state()) == state_live
     assert _rows(back.query(cands, "o_custkey")) == est_live
 
     # maintained == one-shot over the union
     one = sketches.cms_sketch(orders, "o_custkey", depth=4, width=64)
-    assert _rows(idx.sketch()) == _rows(one)
+    assert state_live == _rows(one)
 
     # exactly-once contract: double absorb double-counts (sum, not max)
-    total_before = back.sketch().agg(F.sum("cnt")).first()[0]
+    total_before = back.state().agg(F.sum("cnt")).first()[0]
     back.absorb(b1)
-    total_after = back.sketch().agg(F.sum("cnt")).first()[0]
+    total_after = back.state().agg(F.sum("cnt")).first()[0]
     assert total_after == total_before + 4 * b1.count()
 
 
@@ -197,23 +212,25 @@ def test_kmv_index_reload_and_confluence(spark, orders, tmp_path):
     idx = sketches.KMVIndex(seed, ["o_orderstatus"], "o_custkey", k=32)
     idx.absorb(b1).absorb(b2)
     one = sketches.kmv_sketch(orders, ["o_orderstatus"], "o_custkey", k=32)
-    assert _rows(idx.state()) == _rows(one)
+    state_live = _rows(idx.state())
+    assert state_live == _rows(one)
+    est_live = _rows(idx.estimate())
 
     path = str(tmp_path / "kmv")
     idx.save(path)
     back = sketches.KMVIndex.load(spark, path)
     assert (back.keys, back.col, back.k) == (["o_orderstatus"], "o_custkey", 32)
-    assert _rows(back.state()) == _rows(idx.state())
-    assert _rows(back.estimate()) == _rows(idx.estimate())
+    assert _rows(back.state()) == state_live
+    assert _rows(back.estimate()) == est_live
 
     # confluence: absorbing b1 AGAIN (a replay) changes nothing
     back.absorb(b1)
-    assert _rows(back.state()) == _rows(idx.state())
+    assert _rows(back.state()) == state_live
 
     # order independence: seed -> b2 -> b1 equals seed -> b1 -> b2
     other = sketches.KMVIndex(seed, ["o_orderstatus"], "o_custkey", k=32)
     other.absorb(b2).absorb(b1)
-    assert _rows(other.state()) == _rows(idx.state())
+    assert _rows(other.state()) == state_live
 
 
 def test_save_publishes_atomically_and_load_refuses_torn_state(spark, orders, tmp_path):
@@ -299,4 +316,95 @@ def test_bm25_add_terms_validates_corpus(spark, docs):
     # the failed attempts left the standing state usable and unchanged
     assert idx.terms == ["doc"]
     assert idx.score().count() == seed.count()
+    idx.release()
+
+
+def _mixed(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id"),
+        (F.col("id") % 7).alias("grp"),
+        (F.col("id") % 13).cast("double").alias("val"),
+        F.concat(
+            F.lit("the quick brown fox jumps over doc "),
+            (F.col("id") % 40).cast("string"),
+        ).alias("text"),
+    )
+
+
+def _linkage_feed(spark):
+    return spark.range(0, 90, 7).select(
+        (F.col("id") + 10_000).alias("rid"),
+        F.concat(
+            F.lit("the quick brown fox jumps ovr doc "), F.col("id").cast("string")
+        ).alias("s"),
+    )
+
+
+# name -> (build from a seed frame, read the index's answers as rows)
+_REUSE_CASES = {
+    "hll": (
+        lambda seed: sketches.HLLIndex(seed, ["grp"], "id", p=6),
+        lambda spark, idx: _rows(idx.estimate()),
+    ),
+    "quantile": (
+        lambda seed: sketches.QuantileIndex(seed, ["grp"], "val"),
+        lambda spark, idx: _rows(idx.estimate([500, 900])),
+    ),
+    "cms": (
+        lambda seed: sketches.CMSIndex(seed, "grp", width=64),
+        lambda spark, idx: _rows(
+            idx.query(spark.createDataFrame([(0,), (3,)], "grp long"), "grp")
+        ),
+    ),
+    "kmv": (
+        lambda seed: sketches.KMVIndex(seed, ["grp"], "id", k=16),
+        lambda spark, idx: _rows(idx.estimate()),
+    ),
+    "near_dup": (
+        lambda seed: dedup_ops.NearDupIndex(seed, "id", "text"),
+        lambda spark, idx: _rows(idx.flag(_mixed(spark, 85, 100))),
+    ),
+    "bm25": (
+        lambda seed: BM25Index(seed, "id", "text", ["quick", "doc"]),
+        lambda spark, idx: _rows(idx.score()),
+    ),
+    "linkage": (
+        lambda seed: dedup_ops.LinkageIndex(seed, "id", "text", max_distance=1),
+        lambda spark, idx: _rows(idx.link(_linkage_feed(spark), "rid", "s")),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REUSE_CASES))
+def test_saved_index_saves_again_and_absorbs(spark, tmp_path, name):
+    """load -> save(same path) -> read, and build -> save -> save ->
+    absorb -> read, each equal to an index that was never saved: after a
+    save the index reads the snapshot it committed, never an older one
+    that the next save deletes."""
+    build, read = _REUSE_CASES[name]
+    seed, batch = _mixed(spark, 0, 60), _mixed(spark, 60, 90)
+    ref = build(seed)
+    want_seed = read(spark, ref)
+    ref.absorb(batch)
+    want = read(spark, ref)
+    assert want_seed and want
+    ref.release()
+
+    path = str(tmp_path / "loaded")
+    idx = build(seed)
+    idx.save(path)
+    idx.release()
+    back = type(idx).load(spark, path)
+    back.save(path)
+    assert read(spark, back) == want_seed
+    back.absorb(batch)
+    assert read(spark, back) == want
+    back.release()
+
+    path = str(tmp_path / "built")
+    idx = build(seed)
+    idx.save(path)
+    idx.save(path)
+    idx.absorb(batch)
+    assert read(spark, idx) == want
     idx.release()

@@ -1682,7 +1682,7 @@ def test_hll_index_confluence_and_oneshot_equality(spark):
     b2 = df.filter(F.col("v") % 3 == 2)
 
     def regs_of(idx):
-        return {(r["g"], r["bucket"], r["rho"]) for r in idx.registers().collect()}
+        return {(r["g"], r["bucket"], r["rho"]) for r in idx.state().collect()}
 
     fwd = sk.HLLIndex(seed, ["g"], "v", p=8).absorb(b1).absorb(b2)
     rev = sk.HLLIndex(seed, ["g"], "v", p=8).absorb(b2).absorb(b1)

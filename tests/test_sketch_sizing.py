@@ -20,7 +20,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_file_loader_spark.operators import sketches
-from etl_file_loader_spark.operators.cache import release_local_checkpoint
 
 
 def test_auto_width_uniform_keys_not_in_97x_regime(spark):
@@ -88,8 +87,8 @@ def test_cms_index_records_and_persists_auto_width(spark, tmp_path):
     probe = spark.createDataFrame([(42,)], "k long")
     est = back.query(probe, "k").head().est_count
     assert est >= 2  # key 42 appears via id 42 and id 2542
-    release_local_checkpoint(idx._sk)
-    release_local_checkpoint(back._sk)
+    idx.release()
+    back.release()
 
 
 def test_quantile_histogram_extreme_magnitudes_no_overflow(spark):

@@ -16,6 +16,7 @@ every such conversion is exact and comparison stays bit-for-bit.
 from __future__ import annotations
 
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -103,7 +104,11 @@ def main():
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
     spark = get_spark("correctness-check")
-    con = duckdb.connect()
+    # capped so a heavy oracle spills to disk instead of growing the
+    # process until the kernel kills the sweep (knn_join_lsh_auto_clustered
+    # passed 10 GB uncapped at sf0.001)
+    spill = str(Path(tempfile.gettempdir()) / "duckdb_oracle_spill")
+    con = duckdb.connect(config={"memory_limit": "3GB", "temp_directory": spill})
     for t in TABLES:
         # driver testdata ships single-file parquet; tools/gen_scale_data.py
         # writes Spark directory-parquet — glob the parts in that case
