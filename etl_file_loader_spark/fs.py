@@ -128,21 +128,6 @@ class FS:
         finally:
             stream.close()
 
-    def copy_tree(self, src: str, dst: str) -> None:
-        """Recursive directory copy (FileUtil.copy recurses for URI paths)."""
-        if not is_uri(src) and not is_uri(dst):
-            shutil.copytree(src, dst, dirs_exist_ok=True)
-            return
-        self._jvm().org.apache.hadoop.fs.FileUtil.copy(
-            self._jfs(src),
-            self._jpath(src),
-            self._jfs(dst),
-            self._jpath(dst),
-            False,
-            True,
-            self._hconf(),
-        )
-
     def copy(self, src: str, dst: str) -> None:
         if not is_uri(src) and not is_uri(dst):
             shutil.copy2(src, dst)

@@ -199,9 +199,9 @@ def cdc_apply(
     Plan shape (100 TB): one window shuffle on ``keys`` over the change
     batch (batch-sized, not target-sized) + ONE full-outer equi-join
     against the target (AQE broadcasts small deduped batches). No
-    target-side window, no second pass. Pair with the bounded
-    bucket-rewrite writer (``Warehouse.merge_overwrite``) to publish only
-    touched buckets. Cross-engine: window + join + case logic only,
+    target-side window, no second pass. The output is the complete new
+    target; publish it with ``Warehouse.overwrite`` under
+    ``Warehouse.mutate``. Cross-engine: window + join + case logic only,
     DuckDB-oracle-checked (suite ``cdc_apply``).
     """
     from pyspark.sql import Window
@@ -382,9 +382,9 @@ def scd2_apply(
     Plan shape (100 TB): ONE equi-join between the is_current slice and
     the batch (shuffle ∝ current keys + batch rows; AQE broadcasts small
     batches); history is a pass-through union — no shuffle touches it.
-    Output is the complete new SCD2 state; to publish incrementally, pair
-    with the bounded bucket-rewrite writer (``merge_upsert`` /
-    ``Warehouse.merge_overwrite``) so only touched buckets rewrite on disk.
+    Output is the complete new SCD2 state; publish it as one new snapshot
+    with ``Warehouse.overwrite`` under ``Warehouse.mutate``, as
+    ``plans.pipeline.publish`` does for ``merge_upsert``.
     Cross-engine: hash + case logic only, DuckDB-oracle-checked
     (suite ``scd2_merge``).
     """

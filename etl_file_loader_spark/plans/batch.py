@@ -30,7 +30,7 @@ from etl_file_loader_spark.operators import dlq as dlq_ops
 from etl_file_loader_spark.operators import publish as publish_ops
 from etl_file_loader_spark.operators import validate as validate_ops
 from etl_file_loader_spark.operators.hashing import with_row_hash
-from etl_file_loader_spark.plans.pipeline import DLQ_TABLE
+from etl_file_loader_spark.plans.pipeline import DLQ_TABLE, publish
 from etl_file_loader_spark.plans.runlog import next_log_id
 from etl_file_loader_spark.plans.warehouse import Warehouse
 
@@ -122,46 +122,13 @@ def batch_ingest(
         publish_ops.LOG_ID_COL, F.lit(log_id).cast("long")
     )
 
-    from etl_file_loader_spark.plans.warehouse import BUCKET_COL, grain_bucket
-
-    with warehouse.mutate(config.target_table):
-        n_buckets = warehouse.table_buckets(config.target_table) or warehouse.n_buckets
-        bucket = grain_bucket(config.grain, n_buckets)
-        if not warehouse.exists(config.target_table):
-            merged = stage.withColumn(
-                publish_ops.CREATED_COL, F.current_timestamp()
-            ).withColumn(publish_ops.UPDATED_COL, F.lit(None).cast("timestamp"))
-            warehouse.merge_overwrite(
-                config.target_table,
-                merged.withColumn(BUCKET_COL, bucket),
-                touched_buckets=None,
-                partition_by=config.target_partition_by,
-            )
-            inserts = warehouse.read_table(config.target_table).count()
-            updates = 0
-        else:
-            # bounded rewrite: read + rewrite only the stage-touched buckets
-            touched = sorted(
-                r[0] for r in stage.select(bucket.alias("_b")).distinct().collect()
-            )
-            target = warehouse.read_table_buckets(config.target_table, touched)
-            counts = publish_ops.publish_counts(target, stage, config.grain)
-            inserts, updates = counts.inserts, counts.updates
-            merged = publish_ops.merge_upsert(
-                target, stage, config.grain, config.business_columns
-            )
-            warehouse.merge_overwrite(
-                config.target_table,
-                merged.withColumn(BUCKET_COL, bucket),
-                touched_buckets=touched,
-                partition_by=config.target_partition_by,
-            )
+    counts = publish(warehouse, config, stage)
 
     return BatchResult(
         files_published=sorted(published),
         files_rejected=rejected,
-        inserts=inserts,
-        updates=updates,
+        inserts=counts.inserts,
+        updates=counts.updates,
         dlq_rows=n_dlq,
         stats=[r.asDict() for r in stats],
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_file_loader_spark.config import SourceConfig
@@ -40,8 +40,10 @@ from etl_file_loader_spark.operators import publish as publish_ops
 from etl_file_loader_spark.operators import validate as validate_ops
 from etl_file_loader_spark.operators.hashing import with_row_hash
 from etl_file_loader_spark.operators.publish import (
+    CREATED_COL,
     FILENAME_COL,
     LOG_ID_COL,
+    UPDATED_COL,
     PublishCounts,
 )
 from etl_file_loader_spark.plans.runlog import RunLog, next_log_id
@@ -50,6 +52,57 @@ from etl_file_loader_spark.registry import SourceRegistry
 from etl_file_loader_spark.sources import read_source
 
 DLQ_TABLE = "file_load_dlq"
+
+
+def publish(
+    warehouse: Warehouse,
+    cfg: SourceConfig,
+    stage: DataFrame,
+    n_stage: int | None = None,
+) -> PublishCounts:
+    """MERGE ``stage`` into ``cfg.target_table`` as one new snapshot
+    (reference publish/base.py:80-97).
+
+    The table's lock is held for the whole read-merge-write, so no other
+    publish to the table commits between this read and this write. A first
+    load writes the stage as it is, and every stage row is an insert:
+    ``n_stage`` is the stage's row count when the caller already has it,
+    and the stage is counted otherwise. A later load reads the whole current
+    snapshot, merges the stage into it with ``merge_upsert`` and commits the
+    result.
+
+    Additive schema evolution (Delta mergeSchema analogue): business
+    columns the config gained since the target was created join in as typed
+    nulls — existing rows keep null until a file re-delivers them (their
+    row hash then differs, so they update). Columns REMOVED from the config
+    drop from the new snapshot: the config is the schema of record.
+    """
+    table = cfg.target_table
+    with warehouse.mutate(table):
+        if not warehouse.exists(table):
+            counts = PublishCounts(
+                inserts=stage.count() if n_stage is None else n_stage,
+                updates=0,
+                unchanged=0,
+            )
+            merged = stage.withColumn(CREATED_COL, F.current_timestamp()).withColumn(
+                UPDATED_COL, F.lit(None).cast("timestamp")
+            )
+        else:
+            target = warehouse.read_table(table)
+            for f in cfg.fields:
+                if f.name not in target.columns:
+                    target = target.withColumn(f.name, F.lit(None).cast(f.dtype))
+            counts = publish_ops.publish_counts(target, stage, cfg.grain)
+            merged = publish_ops.merge_upsert(
+                target,
+                stage,
+                cfg.grain,
+                cfg.business_columns,
+                salt_buckets=cfg.merge_salt_buckets,
+            )
+        warehouse.overwrite(table, merged, partition_by=cfg.target_partition_by)
+    return counts
 
 
 @dataclass
@@ -119,11 +172,9 @@ class PipelineRunner:
         cfg = self.config
         validated = None
         try:
-            target_schema = None
             with self.log.stage("check_if_processed"):
                 if self.warehouse.exists(cfg.target_table):
                     target = self.warehouse.read_table(cfg.target_table)
-                    target_schema = target.schema
                     if publish_ops.is_file_loaded(target, self.filename):
                         self._quarantine_duplicate()
                         raise DuplicateFileError(
@@ -203,98 +254,9 @@ class PipelineRunner:
                 )
 
             with self.log.stage("publish_data") as st:
-                from etl_file_loader_spark.plans.warehouse import (
-                    BUCKET_COL,
-                    grain_bucket,
-                )
-
-                with self.warehouse.mutate(cfg.target_table):
-                    n_buckets = (
-                        self.warehouse.table_buckets(cfg.target_table)
-                        or self.warehouse.n_buckets
-                    )
-                    bucket = grain_bucket(cfg.grain, n_buckets)
-                    if not self.warehouse.exists(cfg.target_table):
-                        # first load: everything inserts — skip the three
-                        # empty-target joins (counts + merge) entirely
-                        merged = stage.withColumn(
-                            publish_ops.CREATED_COL, F.current_timestamp()
-                        ).withColumn(
-                            publish_ops.UPDATED_COL, F.lit(None).cast("timestamp")
-                        )
-                        self.warehouse.merge_overwrite(
-                            cfg.target_table,
-                            merged.withColumn(BUCKET_COL, bucket),
-                            touched_buckets=None,
-                            partition_by=cfg.target_partition_by,
-                        )
-                        # check_grain rejected duplicate grains, so every
-                        # valid row is one insert
-                        pub_counts = PublishCounts(
-                            inserts=n_valid, updates=0, unchanged=0
-                        )
-                    else:
-                        # bounded rewrite: only the grain-hash buckets the
-                        # stage rows land in are read (partition pruning) and
-                        # rewritten; untouched buckets carry over as hard
-                        # links — O(stage-touched partitions) per load, not
-                        # O(target)
-                        touched = sorted(
-                            r[0]
-                            for r in stage.select(
-                                bucket.alias("_b")
-                            ).distinct().collect()
-                        )
-                        # schema evolution forces a FULL rewrite: linked-over
-                        # untouched buckets would otherwise keep the old
-                        # parquet schema (mixed schemas across partitions)
-                        evolved = target_schema is not None and (
-                            any(
-                                f.name not in target_schema.fieldNames()
-                                for f in cfg.fields
-                            )
-                            or any(
-                                c not in cfg.business_columns
-                                for c in target_schema.fieldNames()
-                                if c
-                                not in publish_ops.SYSTEM_COLS
-                            )
-                        )
-                        if evolved:
-                            touched = None
-                            target = self.warehouse.read_table(
-                                cfg.target_table, schema=target_schema
-                            )
-                        else:
-                            target = self.warehouse.read_table_buckets(
-                                cfg.target_table, touched, schema=target_schema
-                            )
-                        # additive schema evolution (Delta mergeSchema
-                        # analogue): business columns the config gained since
-                        # the target was created join in as typed nulls —
-                        # existing rows keep null until a file re-delivers
-                        # them (their row hash then differs, so they update).
-                        # Columns REMOVED from the config drop from the new
-                        # snapshot: the config is the schema of record.
-                        for f in cfg.fields:
-                            if f.name not in target.columns:
-                                target = target.withColumn(
-                                    f.name, F.lit(None).cast(f.dtype)
-                                )
-                        pub_counts = publish_ops.publish_counts(target, stage, cfg.grain)
-                        merged = publish_ops.merge_upsert(
-                            target,
-                            stage,
-                            cfg.grain,
-                            cfg.business_columns,
-                            salt_buckets=cfg.merge_salt_buckets,
-                        )
-                        self.warehouse.merge_overwrite(
-                            cfg.target_table,
-                            merged.withColumn(BUCKET_COL, bucket),
-                            touched_buckets=touched,
-                            partition_by=cfg.target_partition_by,
-                        )
+                # check_grain rejected duplicate grains, so on a first load
+                # every valid row is one insert
+                pub_counts = publish(self.warehouse, cfg, stage, n_stage=n_valid)
                 st.row_count = pub_counts.inserts + pub_counts.updates
 
             with self.log.stage("cleanup_dlq_records"):

@@ -25,7 +25,7 @@ from etl_file_loader_spark.operators import dlq as dlq_ops
 from etl_file_loader_spark.operators import publish as publish_ops
 from etl_file_loader_spark.operators import validate as validate_ops
 from etl_file_loader_spark.operators.hashing import with_row_hash
-from etl_file_loader_spark.plans.pipeline import DLQ_TABLE
+from etl_file_loader_spark.plans.pipeline import DLQ_TABLE, publish
 from etl_file_loader_spark.plans.warehouse import Warehouse
 
 
@@ -83,39 +83,7 @@ class StreamingIngest:
                     F.col(publish_ops.FILENAME_COL)
                 ),
             )
-            from etl_file_loader_spark.plans.warehouse import (
-                BUCKET_COL,
-                grain_bucket,
-            )
-
-            n_buckets = (
-                self.warehouse.table_buckets(cfg.target_table)
-                or self.warehouse.n_buckets
-            )
-            bucket = grain_bucket(cfg.grain, n_buckets)
-            if not self.warehouse.exists(cfg.target_table):
-                target = (
-                    stage.limit(0)
-                    .withColumn(publish_ops.CREATED_COL, F.current_timestamp())
-                    .withColumn(publish_ops.UPDATED_COL, F.lit(None).cast("timestamp"))
-                )
-                touched = None
-            else:
-                # bounded rewrite per micro-batch: only stage-touched
-                # grain-hash buckets are read and rewritten
-                touched = sorted(
-                    r[0]
-                    for r in stage.select(bucket.alias("_b")).distinct().collect()
-                )
-                target = self.warehouse.read_table_buckets(cfg.target_table, touched)
-            merged = publish_ops.merge_upsert(
-                target, stage, cfg.grain, cfg.business_columns
-            )
-            self.warehouse.merge_overwrite(
-                cfg.target_table,
-                merged.withColumn(BUCKET_COL, bucket),
-                touched_buckets=touched,
-            )
+            publish(self.warehouse, cfg, stage)
         finally:
             validated.unpersist()
 

@@ -3,11 +3,13 @@
 import gzip
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_file_loader_spark.config import FieldSpec, SourceConfig
 from etl_file_loader_spark.functions import clean_phone
+from etl_file_loader_spark.plans.batch import batch_ingest
 from etl_file_loader_spark.plans.pipeline import PipelineRunner
 from tests.test_json_excel_parquet import ledger_record, ledger_source
 
@@ -462,7 +464,21 @@ def test_smtp_email_sent_on_audit_failure_via_processor(
     assert "AuditFailedError" in body
 
 
-def test_additive_schema_evolution_on_merge(spark, warehouse, tmp_path):
+def _load_with_runner(spark, warehouse, cfg, path):
+    r = PipelineRunner(spark, warehouse, cfg, path).run()
+    assert r.success
+    return r.counts.inserts, r.counts.updates
+
+
+def _load_with_batch(spark, warehouse, cfg, path):
+    r = batch_ingest(spark, warehouse, cfg, [path])
+    return r.inserts, r.updates
+
+
+@pytest.mark.parametrize(
+    "load", [_load_with_runner, _load_with_batch], ids=["runner", "batch"]
+)
+def test_additive_schema_evolution_on_merge(spark, warehouse, tmp_path, load):
     """A business column added to the config after the target exists joins
     in as typed nulls for old rows; re-delivered rows pick up the value
     (hash differs -> update)."""
@@ -478,13 +494,12 @@ def test_additive_schema_evolution_on_merge(spark, warehouse, tmp_path):
 
     p1 = tmp_path / "evo_1.csv"
     p1.write_text("id,v\na,1\nb,2\n")
-    assert PipelineRunner(spark, warehouse, cfg(base_fields), str(p1)).run().success
+    assert load(spark, warehouse, cfg(base_fields), str(p1)) == (2, 0)
 
     fields2 = base_fields + [FieldSpec("note", T.StringType(), nullable=True)]
     p2 = tmp_path / "evo_2.csv"
     p2.write_text("id,v,note\nb,2,hello\nc,3,new\n")
-    r2 = PipelineRunner(spark, warehouse, cfg(fields2), str(p2)).run()
-    assert r2.success and r2.counts.inserts == 1 and r2.counts.updates == 1
+    assert load(spark, warehouse, cfg(fields2), str(p2)) == (1, 1)
 
     rows = {r["id"]: r for r in warehouse.read_table("evo").collect()}
     assert rows["a"]["note"] is None          # old row: typed null

@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 from etl_file_loader_spark import snapshots
 from etl_file_loader_spark.fs import FS
 from etl_file_loader_spark.operators import persist
-from etl_file_loader_spark.plans.warehouse import BUCKET_COL, Warehouse, grain_bucket
+from etl_file_loader_spark.plans.warehouse import Warehouse
 
-N_ROWS, N_BUCKETS = 1000, 16
+N_ROWS = 1000
 
 
 class Injected(RuntimeError):
@@ -25,30 +25,21 @@ class Injected(RuntimeError):
 
 
 def _load(spark, root: str) -> Warehouse:
-    wh = Warehouse(spark, root, n_buckets=N_BUCKETS)
+    wh = Warehouse(spark, root)
     df = spark.range(N_ROWS).select(
         F.col("id"), F.col("id").cast("double").alias("amount")
     )
-    wh.merge_overwrite(
-        "t", df.withColumn(BUCKET_COL, grain_bucket(["id"], N_BUCKETS)), None
-    )
+    wh.overwrite("t", df)
     return wh
 
 
-def _update_one(
-    spark, wh: Warehouse, amount: float = 999.0, n_buckets: int = N_BUCKETS
-) -> None:
-    """Bounded merge changing row 1: rewrites its bucket and carries the
-    others."""
+def _update_one(spark, wh: Warehouse, amount: float = 999.0) -> None:
+    """Read-merge-write changing row 1: a new snapshot built from the
+    current one."""
     upd = spark.createDataFrame([(1, amount)], "id long, amount double")
-    touched = [r[0] for r in upd.select(grain_bucket(["id"], n_buckets)).collect()]
-    merged = (
-        wh.read_table_buckets("t", touched)
-        .filter(F.col("id") != 1)
-        .unionByName(upd)
-        .withColumn(BUCKET_COL, grain_bucket(["id"], n_buckets))
-    )
-    wh.merge_overwrite("t", merged, touched_buckets=touched)
+    with wh.mutate("t"):
+        merged = wh.read_table("t").filter(F.col("id") != 1).unionByName(upd)
+        wh.overwrite("t", merged)
 
 
 def _rows(wh: Warehouse) -> list[tuple]:
@@ -104,40 +95,11 @@ def test_crash_in_spark_write_keeps_previous_snapshot(spark, tmp_path, no_fault)
         .alias("amount"),
     )
     with pytest.raises(Exception, match="injected"):
-        wh.merge_overwrite(
-            "t", bad.withColumn(BUCKET_COL, grain_bucket(["id"], N_BUCKETS)), None
-        )
+        wh.overwrite("t", bad)
     assert wh.table_versions("t") == [0]
     assert _rows(wh) == before
 
     _update_one(spark, wh)
-    assert _rows(wh) == no_fault
-    assert _leftovers(root) == []
-
-
-def test_crash_in_carry_over_keeps_previous_snapshot(
-    spark, tmp_path, monkeypatch, no_fault
-):
-    root = str(tmp_path / "wh")
-    wh = _load(spark, root)
-    real_carry, carried = Warehouse._carry, []
-
-    def carry_then_crash(self, src, dst):
-        if len(carried) == 3:
-            raise Injected("crash after 3 carry-overs")
-        carried.append(src)
-        real_carry(self, src, dst)
-
-    monkeypatch.setattr(Warehouse, "_carry", carry_then_crash)
-    with pytest.raises(Injected):
-        _update_one(spark, wh)
-    assert wh.table_versions("t") == [0]
-    assert wh.read_table("t").count() == N_ROWS
-    assert dict(_rows(wh))[1] == 1.0
-
-    monkeypatch.setattr(Warehouse, "_carry", real_carry)
-    _update_one(spark, wh)
-    assert wh.table_versions("t") == [0, 1]
     assert _rows(wh) == no_fault
     assert _leftovers(root) == []
 
@@ -163,34 +125,6 @@ def test_crash_before_rename_keeps_previous_snapshot(
     _update_one(spark, wh)
     assert _rows(wh) == no_fault
     assert _leftovers(root) == []
-
-
-def test_crash_in_rebucket_keeps_layout_and_bucket_count(spark, tmp_path, monkeypatch):
-    clean = _load(spark, str(tmp_path / "clean"))
-    clean.rebucket("t", ["id"], 4)
-
-    wh = _load(spark, str(tmp_path / "wh"))
-    before = _rows(wh)
-
-    def crash(self, out, n_buckets):
-        raise Injected("crash before the bucket count is written")
-
-    real_meta = Warehouse._write_buckets_meta
-    monkeypatch.setattr(Warehouse, "_write_buckets_meta", crash)
-    with pytest.raises(Injected):
-        wh.rebucket("t", ["id"], 4)
-    assert wh.table_versions("t") == [0]
-    assert wh.table_buckets("t") == N_BUCKETS
-    assert _rows(wh) == before
-
-    monkeypatch.setattr(Warehouse, "_write_buckets_meta", real_meta)
-    wh.rebucket("t", ["id"], 4)
-    assert wh.table_buckets("t") == clean.table_buckets("t") == 4
-    assert _rows(wh) == _rows(clean)
-    # a later merge hashes into the committed count
-    _update_one(spark, wh, amount=5.0, n_buckets=4)
-    assert wh.read_table("t").count() == N_ROWS
-    assert dict(_rows(wh))[1] == 5.0
 
 
 def test_crash_in_save_index_state_keeps_previous_save(spark, tmp_path, monkeypatch):
@@ -220,8 +154,9 @@ def test_crash_in_save_index_state_keeps_previous_save(spark, tmp_path, monkeypa
 def test_pipeline_rerun_after_publish_crash_reaches_no_fault_table(
     spark, tmp_path, monkeypatch
 ):
-    """A file whose publish crashed mid carry-over is not recorded as
-    loaded: re-running it lands the same target and DLQ as a clean run."""
+    """A file whose publish crashed between staging and rename is not
+    recorded as loaded: re-running it lands the same target and DLQ as a
+    clean run."""
     from pyspark.sql import types as T
 
     from etl_file_loader_spark.config import FieldSpec, SourceConfig
@@ -252,47 +187,30 @@ def test_pipeline_rerun_after_publish_crash_reaches_no_fault_table(
         dlq = sorted(r.file_row_number for r in wh.read_table(DLQ_TABLE).collect())
         return target, dlq
 
-    clean = Warehouse(spark, str(tmp_path / "clean"), n_buckets=8)
+    clean = Warehouse(spark, str(tmp_path / "clean"))
     assert load(clean, first).success and load(clean, second).success
 
-    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=8)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     assert load(wh, first).success
     before = wh.read_table("sales").count()
 
-    def crash(self, src, dst):
-        raise Injected("crash during carry-over")
+    real_rename = FS.rename
 
-    real_carry = Warehouse._carry
-    monkeypatch.setattr(Warehouse, "_carry", crash)
+    def crash_target_rename(self, src, dst):
+        # only the target's publish: the DLQ and run-log commits go through
+        if "/sales/" in dst:
+            raise Injected("crash between staging and rename")
+        real_rename(self, src, dst)
+
+    monkeypatch.setattr(FS, "rename", crash_target_rename)
     with pytest.raises(Injected):
         load(wh, second)
     assert wh.read_table("sales").count() == before == 200
 
-    monkeypatch.setattr(Warehouse, "_carry", real_carry)
+    monkeypatch.setattr(FS, "rename", real_rename)
     r = load(wh, second)
     assert r.success and (r.counts.inserts, r.counts.updates) == (1, 1)
     assert state(wh) == state(clean)
-
-
-def test_root_level_bucket_count_is_refused(spark, tmp_path):
-    """A table that keeps its bucket count at the table root (the layout
-    before counts moved into snapshots) is refused, not merged with a
-    guessed count."""
-    root = str(tmp_path / "wh")
-    wh = _load(spark, root)
-    fs = FS(spark)
-    fs.rename(f"{root}/t/_v0/_buckets.json", f"{root}/t/_buckets.json")
-    before = _rows(wh)
-
-    with pytest.raises(RuntimeError, match="_buckets.json"):
-        wh.table_buckets("t")
-    with pytest.raises(RuntimeError, match="_buckets.json"):
-        _update_one(spark, wh)
-    assert wh.table_versions("t") == [0]
-    assert _rows(wh) == before
-
-    fs.rename(f"{root}/t/_buckets.json", f"{root}/t/_v0/_buckets.json")
-    assert wh.table_buckets("t") == N_BUCKETS
 
 
 def test_registry_layout_corpus_is_refused_not_overwritten(spark, tmp_path):

@@ -3,8 +3,12 @@
 import pytest
 from pyspark.sql import functions as F
 
-from etl_file_loader_spark.streaming.ingest import StreamingIngest, windowed_event_counts
-from tests.sources_fixtures import CSV_GOOD, transactions_source
+from etl_file_loader_spark.streaming.ingest import (
+    StreamingIngest,
+    raw_stream_schema,
+    windowed_event_counts,
+)
+from tests.sources_fixtures import CSV_GOOD, CSV_HEADER, transactions_source
 
 
 @pytest.fixture
@@ -53,6 +57,65 @@ def test_streaming_invalid_rows_to_dlq(spark, warehouse, stream_dirs):
     dlq = warehouse.read_table("file_load_dlq").collect()
     assert len(dlq) == 1
     assert "oops" in dlq[0]["validation_errors"]
+
+
+def test_micro_batch_publish_keeps_a_concurrent_commit(
+    spark, warehouse, stream_dirs, tmp_path, monkeypatch
+):
+    """A pipeline commit to the target that arrives while a micro-batch
+    plans its merge is not overwritten by the micro-batch's snapshot: the
+    micro-batch holds the table's lock from reading the target to its
+    commit, so the other commit waits and then merges on top."""
+    import threading
+
+    from etl_file_loader_spark.operators import publish as publish_ops
+    from etl_file_loader_spark.plans.pipeline import PipelineRunner
+
+    cfg = transactions_source()
+    src, checkpoint = stream_dirs
+    row = "TXN{:03d},CUST01,SKU-1,{},1.00,1.00,2024-01-05,alice"
+    first = tmp_path / "sales_1.csv"
+    first.write_text(CSV_HEADER + "\n" + "\n".join(row.format(i, 1) for i in range(300)) + "\n")
+    assert PipelineRunner(spark, warehouse, cfg, str(first)).run().success
+    update = tmp_path / "sales_2.csv"
+    update.write_text(CSV_HEADER + "\n" + row.format(0, 77) + "\n")
+
+    lock = warehouse.mutate(cfg.target_table)
+    settled, threads, results = threading.Event(), [], []
+
+    def concurrent_commit():
+        try:
+            if not lock.acquire(blocking=False):
+                settled.set()  # waiting for the micro-batch to commit
+                lock.acquire()
+            try:
+                results.append(PipelineRunner(spark, warehouse, cfg, str(update)).run())
+            finally:
+                lock.release()
+        finally:
+            settled.set()
+
+    real_merge = publish_ops.merge_upsert
+
+    def merge_after_concurrent_commit(*args, **kwargs):
+        if not threads:  # the micro-batch's merge, not the pipeline's
+            threads.append(threading.Thread(target=concurrent_commit))
+            threads[0].start()
+            assert settled.wait(120)
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(publish_ops, "merge_upsert", merge_after_concurrent_commit)
+    batch = spark.createDataFrame(
+        [row.format(i, 1).split(",") for i in range(300, 600)], raw_stream_schema(cfg)
+    )
+    StreamingIngest(spark, cfg, warehouse, str(src), checkpoint)._process_batch(batch, 0)
+    threads[0].join(120)
+    assert not threads[0].is_alive()
+
+    assert results and results[0].success and results[0].counts.updates == 1
+    target = warehouse.read_table("transactions")
+    assert target.count() == 600
+    assert target.filter(F.col("transaction_id") == "TXN000").first()["quantity"] == 77
 
 
 def test_windowed_event_counts_streaming(spark, tmp_path):
