@@ -80,18 +80,9 @@ TPCH_DIGEST_MEMBERS = [
     "q21_suppliers_kept_waiting",
     "q22_global_sales_opportunity",
 ]
-# round-6 rotation: set_ops / supplier_part_stats / both sketch checks
-# promoted to individually-checked window rows (suite.CHECKED_QUERIES);
-# round-9 rotation: those four (long-green rounds 6-8) demoted back here
-# along with skewed_event_counts, freeing window slots for the round-8
-# digest-from-birth analytics ops (zorder / incremental-agg / KMV / CMS),
-# which move OUT of this digest into direct driver rows
 ANALYTICS_DIGEST_MEMBERS = [
     "set_ops",
     "sketch_distinct_check",
-    # round-12 rotation (#7): hll_distinct_check / hll_index_stream
-    # (digest-born round 11) moved OUT to direct driver rows;
-    # incremental_agg_check (window row since round 9) demoted below.
     "sketch_percentile_check",
     "supplier_part_stats",
     "skewed_event_counts",
@@ -107,49 +98,27 @@ ANALYTICS_DIGEST_MEMBERS = [
     "event_funnel",
     "price_percentiles",
     "retention_cohorts",
-    # round-10 rotation: the Bloom family (digest-born round 9) moved OUT
-    # to direct driver rows; the custom join operators (window rows since
-    # round 1) demoted here — still value-verified every round
     "asof_join",
     "range_join_count",
-    # round-11 rotation: bloom_semi_join_fast (digest-born round 10) moved
-    # OUT to a direct driver row; the sketch/layout trio (window rows since
-    # round 9) demoted here — still value-verified every round
     "zorder_layout_check",
     "kmv_distinct_check",
     "cms_heavy_hitters",
-    # round-12 rotation (#7): incremental partition-log aggregation
-    # (window row since round 9) — still value-verified every round
     "incremental_agg_check",
-    # round-13 rotation (#8): the four round-12 digest-born sketch rows
-    # (quantile_hist_check, quantile_index_stream, cms_index_stream,
-    # streaming_quantile_state) moved OUT to direct driver rows; the
-    # Bloom build/probe pair (window rows since round 10, three
-    # consecutive green rounds) demoted here — still value-verified
-    # every round (their semi-join twins stay direct window rows)
     "bloom_filter_check",
     "bloom_probe_stats",
-    # (quantile_trim_band — digest-born round 13 — moved OUT round 14
-    # (rotation #9) to a direct driver row)
 ]
-# round-6 rotation: knn_join / training_order / dedup_minhash_orders /
-# dedup_fingerprint / multimodal_resize_real / audio_decode_real promoted to
-# window rows; 11 long-green round-<=4 window rows (dedup + text families)
-# demoted here — still value-verified every round through this digest and
-# individually swept by tools/check_correctness.py
 CORPUS_DIGEST_MEMBERS = [
     "dedup_simhash_pairs",
     "dedup_exact_lineitem",
-    # round 5: REAL codec verification — genuine PNG/WAV payloads with
-    # closed-form contents, value-verified without DuckDB decoding a byte
+    # REAL codec verification — genuine PNG/WAV payloads with closed-form
+    # contents, value-verified without DuckDB decoding a byte
     "multimodal_decode_real",
-    # round 6: learned-vocab greedy tokenizer layout (oracle re-learns the
-    # vocab in SQL and replays greedy matching via recursive CTE)
+    # learned-vocab greedy tokenizer layout (the oracle re-learns the vocab
+    # in SQL and replays greedy matching via recursive CTE)
     "packed_sequences_greedy",
-    # round 6: stdlib baseline-JPEG decode, gate-verified on id-derived
-    # solid-color fixtures (exact dims/decode_ok + bounded mean error)
+    # stdlib baseline-JPEG decode, gate-verified on id-derived solid-color
+    # fixtures (exact dims/decode_ok + bounded mean error)
     "multimodal_jpeg_real",
-    # round-6 demotions (window rows rounds 1-5)
     "dedup_minhash_signature",
     "dedup_lsh_candidates",
     "dedup_simhash",
@@ -161,11 +130,6 @@ CORPUS_DIGEST_MEMBERS = [
     "text_rolling_fingerprint",
     "pii_scrub",
     "gopher_repetition",
-    # round-8 demotions: 15 long-green window rows (individually checked
-    # rounds 1-7) folded here to free window slots for the 14 queries the
-    # driver had never checked directly plus the new trigram LM — still
-    # value-verified per round through this digest and individually swept
-    # by tools/check_correctness.py
     "dedup_exact",
     "dedup_clusters",
     "dedup_incremental",
@@ -181,47 +145,18 @@ CORPUS_DIGEST_MEMBERS = [
     "weighted_repeat",
     "sequence_chunks",
     "multimodal_decode_fake",
-    # round-8 addition: UniMax/alpha-sampling domain mixture (digest
-    # membership from birth; full oracle in suite/sampling.py)
     "temperature_mixture",
-    # round-8 addition: JL random projection — every projected component
-    # bit-identical to an explicit left-assoc SQL chain (suite/similarity.py)
     "random_projection_check",
-    # round-8 addition: Unicode NFC normalize + control strip on injected
-    # decomposed sequences (suite/text.py)
     "unicode_normalize_check",
-    # round-8 addition: positional inverted index + exact phrase search
-    # (suite/text.py)
     "phrase_search",
-    # round-8 addition: sentence-aware RAG chunking with overlap — greedy
-    # walk replayed via max-end table + recursive CTE (suite/sampling.py)
     "sentence_chunks_check",
-    # round-8 addition: character-distribution entropy quality signal
-    # (suite/text.py)
     "char_entropy",
-    # round-8 addition: batch-hard triplet mining over labeled embeddings
-    # (suite/similarity.py)
     "triplet_mining",
-    # round-8 addition: length-bucketed batching + padding accounting
-    # (suite/sampling.py)
     "length_bucketed_batches",
-    # round-8 addition: published Gopher document-shape rules (full oracle
-    # in suite/text.py)
     "gopher_quality",
-    # round-8 addition: Okapi BM25 fixed-query top-k retrieval (full
-    # oracle in suite/text.py)
     "bm25_retrieval",
-    # round-8 addition: DSIR importance resampling (full oracle in
-    # suite/sampling.py)
     "dsir_selection",
-    # round-8 addition: C4 cleaning heuristics (full oracle in
-    # suite/text.py)
     "c4_filter",
-    # round-10 rotation: curation_text_signals / triplet_mining_lsh /
-    # langid_fixture / image_dedup_pairs / fuzzy_match_parts /
-    # jaccard_join_prefix (digest-born round 9) moved OUT to direct
-    # driver rows; 7 long-green window rows demoted here — still
-    # value-verified every round
     "simhash_dedup",
     "html_extract",
     "quality_classifier",
@@ -229,26 +164,10 @@ CORPUS_DIGEST_MEMBERS = [
     "trigram_logprob",
     "multimodal_resize_real",
     "audio_decode_real",
-    # round-11 rotation: the six round-10 digest-born rows
-    # (jaccard_prefix_candidates, fuzzy_join_feed, jaccard_join_docs,
-    # fuzzy_link_best, jaccard_pairs_auto, near_dedup_exact) moved OUT to
-    # direct driver rows; four long-green window rows (individually
-    # checked since round 8) demoted here — still value-verified every
-    # round through this digest and swept by tools/check_correctness.py
     "semantic_contamination_check",
     "similarity_pq_recall",
     "packed_sequences_bpe",
     "diversity_sample_check",
-    # round-12 rotation (#7): the seven round-11 digest-born rows —
-    # fuzzy_link_tiers, fuzzy_link_incremental, near_dedup_index_stream,
-    # url_canonical, domain_guard, semantic_dedup_replay,
-    # weighted_sample_check — moved OUT to direct driver rows; six
-    # long-green text/sampling window rows (direct since round 9)
-    # demoted below.
-    # round-9 demotions: 10 long-green window rows (individually checked
-    # since rounds 1-6) folded here to free window slots for the round-8
-    # digest-from-birth cohort's direct driver rows — still value-verified
-    # per round through this digest and swept by tools/check_correctness.py
     "near_dedup_corpus",
     "dedup_minhash_orders",
     "dedup_fingerprint",
@@ -259,42 +178,22 @@ CORPUS_DIGEST_MEMBERS = [
     "packed_sequences_subword",
     "multimodal_meta",
     "audio_decode_fake",
-    # round-13 rotation (#8): hybrid_retrieval (digest-born round 12)
-    # moved OUT to a direct driver row; the two real multimodal decode
-    # fixtures (window rows since round 9, four consecutive green
-    # rounds) demoted here — still value-verified every round
     "image_dhash_real",
     "audio_fingerprint_real",
-    # round-12 rotation (#7) demotions: window rows since round 9, three
-    # consecutive green rounds each — still value-verified every round
-    # through this digest and individually swept by
-    # tools/check_correctness.py
     "span_dedup",
     "kn_bigram_logprob",
     "gopher_repetition_rules",
     "ngram_novelty",
     "packed_sequences_wordpiece",
     "packed_sequences_unigram",
-    # (mixture_waterfill_alloc / bm25_index_stream — digest-born round
-    # 13 — moved OUT round 14 (rotation #9) to direct driver rows)
-    # round-14 rotation (#9) demotions: the SemDeDup value-check pair
-    # (window rows since round 8, six consecutive green rounds; the
-    # replay row semantic_dedup_replay stays direct) and the perceptual
-    # image near-dedup fixture row (window row since round 10, four
-    # green rounds) — still value-verified every round through this
-    # digest and individually swept by tools/check_correctness.py
     "semantic_dedup_check",
     "semantic_dedup_clustered",
     "image_dedup_pairs",
-    # round 14 (digest-born): the GROWING standing master —
-    # LinkageIndex.absorb lowers only new entities (TieredState
-    # O(batch) tiers), stream crosses a save/load boundary; oracle =
-    # the full-master all-pairs SQL (absorption is unobservable)
+    # the GROWING standing master: LinkageIndex.absorb lowers only new
+    # entities, the stream crosses a save/load boundary; oracle = the
+    # full-master all-pairs SQL (absorption is unobservable)
     "fuzzy_link_absorb",
 ]
-# round-5 rotation: the 15 long-green ingestion-pipeline rows demoted here
-# from the driver window (each stays individually runnable + swept by
-# tools/check_correctness.py; the digest value-verifies all 15 per round)
 PIPELINE_DIGEST_MEMBERS = [
     "validate_split",
     "dlq_error_records",
@@ -303,21 +202,13 @@ PIPELINE_DIGEST_MEMBERS = [
     "audit_contract",
     "threshold_stats",
     "merge_upsert",
-    # round-8 addition: Type-2 SCD merge (full oracle in suite/pipeline.py)
     "scd2_merge",
-    # round-8 addition: generic table profiler (full oracle in
-    # suite/pipeline.py)
     "profile_orders",
-    # round-8 addition: REAL streaming watermarked dedup run — doubled
-    # input, dropDuplicatesWithinWatermark, batch oracle (suite/streaming.py)
+    # a REAL streaming watermarked dedup run — doubled input,
+    # dropDuplicatesWithinWatermark, batch oracle (suite/streaming.py)
     "streaming_dedup_events",
-    # round-10 rotation: streaming_cdc_apply (digest-born round 9) moved
-    # OUT to a direct driver row; the hourly streaming rollup (window row
-    # since round 2) demoted here — still value-verified every round
     "streaming_events_hourly",
-    # round-13 rotation (#8): the custom stateful sessionizer (window row
-    # since round 9, four consecutive green rounds) demoted here — still
-    # a REAL applyInPandasWithState stream, value-verified every round
+    # a REAL applyInPandasWithState stream
     "streaming_sessionize",
     "publish_counts",
     "file_loaded_check",
@@ -327,8 +218,6 @@ PIPELINE_DIGEST_MEMBERS = [
     "json_extract",
     "file_row_number",
     "row_hash_customer",
-    # round-12 rotation (#7) demotions: the incremental CDC merge and the
-    # table-diff accounting (window rows since round 9)
     "cdc_apply",
     "table_diff",
 ]

@@ -90,27 +90,13 @@ def excel_serial_to_timestamp(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# portable 32-bit token hash (used by simhash / minhash; identical in DuckDB
-# as CAST('0x' || substr(md5(x),1,8) AS BIGINT))
+# portable 32-bit token hash (identical in DuckDB as
+# CAST('0x' || substr(md5(x),1,8) AS BIGINT))
 # ---------------------------------------------------------------------------
 
 
 def token_hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def token_hash_bits(col: Column, bits: int) -> Column:
-    """Portable token hash of ``ceil(bits/4)*4`` bits (md5-prefix derived).
-
-    Generalizes :func:`token_hash32` to wider fingerprints (e.g. 48-bit
-    SimHash): DuckDB computes the identical value as
-    ``CAST('0x' || substr(md5(x), 1, ceil(bits/4)) AS BIGINT)``. ``bits``
-    must stay <= 60 so the value fits a signed int64 (15 hex chars).
-    """
-    if not 1 <= bits <= 60:
-        raise ValueError(f"token_hash_bits supports 1..60 bits, got {bits}")
-    n_hex = (bits + 3) // 4
-    return F.conv(F.substring(F.md5(col), 1, n_hex), 16, 10).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -133,8 +119,8 @@ _JAVA_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
 
 def py_tokens(text: str | None) -> list[str]:
     """Driver/UDF-side Python mirror of :func:`tokens` with EXACT JVM
-    semantics — the single tokenizer every Arrow engine must use so the
-    'BIT-IDENTICAL to the expr engine/oracle' contract holds on real text:
+    semantics — the single tokenizer every Arrow pass must use so its
+    output matches the Column-expression operators on real text:
 
     - Spark ``trim`` strips ONLY ASCII space 0x20 (Python ``.strip()``
       strips all Unicode whitespace — wrong for ``'\\ta b'``).
@@ -144,7 +130,7 @@ def py_tokens(text: str | None) -> list[str]:
       ``re.split(r'\\s+')`` on ``.strip()``-ed text never produces them.
     - Java ``\\s`` is ASCII-only; U+00A0 etc. are NOT token separators.
 
-    Pinned against the expr engine by test_java_tokens_mirror_spark.
+    Pinned against :func:`tokens` by test_py_tokens_mirror_spark.
     """
     t = (text or "").strip(" ")
     if not t:

@@ -9,8 +9,8 @@ partitioning-first:
              band buckets -> candidate pairs via band-bucket equi-join.
              Shuffles on (band_idx, band_hash): near-dup clusters co-locate,
              everything else stays tiny. No pairwise blowup outside buckets.
- - simhash:  per-token bit votes -> 32-bit fingerprint; one explode + one
-             aggregate, shuffle ∝ docs
+ - simhash:  per-token bit votes -> up-to-60-bit fingerprint; one Arrow
+             projection, no shuffle
  - n-gram jaccard: inverted-index self-join on (block_key, shingle) —
              block on a natural key (e.g. lang) to bound the candidate set
 
@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_file_loader_spark.functions import token_hash32, token_hash_bits, tokens
+from etl_file_loader_spark.functions import tokens
 from etl_file_loader_spark.operators.cache import pin, pin_checkpoint
 from etl_file_loader_spark.operators.persist import MaintainedIndex
 
@@ -79,83 +79,41 @@ def shingles(text: Column, n: int = 5) -> Column:
     return bind_once(tokens(text), body)
 
 
-def exploded_shingle_hashes(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5
-) -> DataFrame:
-    """(id, shingle_hash int64) — one row per distinct shingle per doc."""
-    return df.select(
-        F.col(id_col),
-        F.explode(shingles(F.col(text_col), n)).alias("_shingle"),
-    ).select(F.col(id_col), token_hash32(F.col("_shingle")).alias("shingle_hash"))
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
     num_hashes: int = 16,
     n: int = 5,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Doc -> minhash signature (array of num_hashes int64).
 
-    Two engines producing BIT-IDENTICAL signatures (everything is md5 +
-    int64 modular arithmetic — no floats — so the DuckDB oracle matches
-    either way; equality is asserted in tests):
+    One Arrow-batched pandas UDF does tokenize -> shingle -> md5 -> k-min
+    in numpy: no explode and no shuffle, so signature generation is a
+    narrow projection. Everything is md5 + int64 modular arithmetic (no
+    floats), so the DuckDB oracle reproduces the signatures; it differs
+    only on null text (no signature there) and on text split by a
+    vertical tab (RE2's \\s leaves it out, Java's includes it).
 
-    - ``arrow`` (default): one Arrow-batched pandas UDF doing tokenize ->
-      shingle -> md5 -> k-min in numpy. No explode, no shuffle at all —
-      signature generation is a narrow projection. ~10x faster than the
-      expression engine, whose shingle-building HOF (slice+concat per
-      position) is interpreted per element.
-    - ``expr``: pure Column expressions (explode + ONE aggregate with
-      num_hashes min() registers) — zero Python, shuffles once on the doc
-      id; the reference implementation the oracle SQL mirrors line-by-line.
+    Tokenization goes through ``functions.py_tokens`` (Spark trim = ASCII
+    space only; Java split keeps leading/trailing '' tokens for
+    tab/newline-edged text; ASCII-only \\s), so signatures match the JVM
+    tokenizer on real corpora, not just space-separated text. Then:
+    distinct n-gram shingles (< n tokens -> the whole text as one
+    shingle) -> int64 of the first 8 md5 hex chars ->
+    min((a*(h%p)+b)%p). Null text behaves as empty text (one "" shingle).
     """
     assert num_hashes <= len(_MH_A)
-    from etl_file_loader_spark.operators.skew import fan_out_scan
-
-    # a single-split scan runs the whole signature pass in ONE task (one
-    # Python worker on the arrow engine) — guide §2.5, no-op at scale
-    df = fan_out_scan(df, key_cols=[id_col])
-    if engine == "arrow":
-        return _minhash_signatures_arrow(df, id_col, text_col, num_hashes, n)
-    ex = exploded_shingle_hashes(df, id_col, text_col, n)
-    # reduce the 32-bit hash mod p before multiplying: a < 2^32, (h % p) < 2^31
-    # keeps a*(h%p)+b < 2^63 (no int64 overflow; same expression in the oracle)
-    mins = [
-        F.min(
-            (F.lit(_MH_A[i]) * (F.col("shingle_hash") % _MH_PRIME) + F.lit(_MH_B[i]))
-            % _MH_PRIME
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    agg = ex.groupBy(id_col).agg(*mins)
-    return agg.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature"),
-    )
-
-
-def _minhash_signatures_arrow(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int, n: int
-) -> DataFrame:
-    """Arrow engine: numpy k-min over md5 shingle hashes, per batch.
-
-    Mirrors the expression engine exactly — tokenization goes through
-    ``functions.py_tokens`` (Spark trim = ASCII space only; Java split
-    keeps leading/trailing '' tokens for tab/newline-edged text; ASCII-only
-    \\s), so signatures are bit-identical on real corpora, not just
-    space-separated text — then distinct n-gram shingles (< n tokens ->
-    the whole text as one shingle) -> int64 of first 8 md5 hex chars ->
-    min((a*(h%p)+b)%p). Null text behaves as empty text (one "" shingle),
-    matching the expression engine's concat_ws null handling.
-    """
     import hashlib
 
     from pyspark.sql.functions import pandas_udf
 
     from etl_file_loader_spark.functions import py_tokens
+    from etl_file_loader_spark.operators.skew import fan_out_scan
+
+    # a single-split scan runs the whole signature pass in ONE task (one
+    # Python worker) — guide §2.5, no-op at scale
+    df = fan_out_scan(df, key_cols=[id_col])
 
     a = np.asarray(_MH_A[:num_hashes], dtype=np.int64)
     b = np.asarray(_MH_B[:num_hashes], dtype=np.int64)
@@ -435,7 +393,6 @@ def simhash(
     id_col: str,
     text_col: str,
     bits: int = 32,
-    engine: str = "arrow",
 ) -> DataFrame:
     """SimHash fingerprint per doc: sign of per-bit token votes.
 
@@ -443,50 +400,19 @@ def simhash(
     portable), so every fingerprint bit carries a real vote — ``bits`` up to
     60 (signed-int64 headroom).
 
-    Two engines producing BIT-IDENTICAL fingerprints (md5 + integer votes —
-    no floats; equality asserted in tests):
-
-    - ``arrow`` (default): one Arrow-batched pandas UDF doing tokenize ->
-      md5 -> vectorized bit votes in numpy. No explode, no shuffle —
-      fingerprinting is a narrow projection, where the expression engine
-      pays ``bits`` aggregate registers over every exploded token row plus
-      a doc-keyed shuffle (~2x wall at 50k docs x 60 bits).
-    - ``expr``: pure Column expressions; the reference implementation the
-      DuckDB oracle SQL mirrors line-by-line.
-
-    Docs with no tokens (empty/whitespace text) yield no fingerprint in
-    either engine.
-    """
-    if engine == "arrow":
-        return _simhash_arrow(df, id_col, text_col, bits)
-    th = token_hash32 if bits <= 32 else (lambda c: token_hash_bits(c, bits))
-    tok = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("_tok")
-    ).select(F.col(id_col), th(F.col("_tok")).alias("th"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"v{b}")
-        for b in range(bits)
-    ]
-    agg = tok.groupBy(id_col).agg(*votes)
-    fingerprint = None
-    for b in range(bits):
-        term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return agg.select(F.col(id_col), fingerprint.alias("simhash"))
-
-
-def _simhash_arrow(df: DataFrame, id_col: str, text_col: str, bits: int) -> DataFrame:
-    """Arrow engine: numpy bit votes over md5 token hashes, per batch.
-
-    Mirrors the expression engine exactly — tokenization via
+    One Arrow-batched pandas UDF does tokenize -> md5 -> vectorized bit
+    votes in numpy: no explode and no shuffle, so fingerprinting is a
+    narrow projection. md5 + integer votes (no floats), so the DuckDB
+    oracle reproduces the fingerprints; it differs only on token-less
+    text (it votes one '' token) and on text split by a vertical tab
+    (RE2's \\s leaves it out, Java's includes it). Tokenization goes through
     ``functions.py_tokens`` (JVM trim/split semantics: ASCII-space trim,
     leading/trailing '' tokens kept on tab/newline-edged text, ASCII-only
     \\s) -> distinct tokens -> int64 of the first ceil(bits/4) md5 hex
-    chars -> per-bit +/-1 votes -> sign fingerprint. Docs with no tokens
-    return null and are filtered, matching the expression engine's explode
-    drop.
+    chars -> per-bit +/-1 votes -> sign fingerprint.
+
+    Docs with no tokens (null, empty or space-only text) yield no
+    fingerprint.
     """
     import hashlib
 
@@ -900,7 +826,7 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # pointer-doubling hop (optimization round 14, guide §1.2): also
+        # pointer-doubling hop (guide §1.2): also
         # adopt the label OF the current label — labels are always ids of
         # component members, so the hop preserves the invariant and the
         # fixpoint (= per-component min) is unchanged, but long chains
@@ -987,7 +913,7 @@ def remove_near_duplicates(
     # feed ONLY connected_components (no per-pair verification), and a star
     # to each bucket's min id gives identical components at O(members)
     # edges — the clique form is Σ family² and went quadratic on sf10's
-    # ~80-member near-dup families (round 6, NOTES_r6 §4).
+    # ~80-member near-dup families (NOTES_r6 §4).
     band_rows = _band_rows(sigs, id_col, bands, rows_per_band)
     pairs = _bucket_star_edges(band_rows, id_col, ["band_idx", "band_hash"])
     comp = connected_components(pairs, max_iterations=max_iterations)
@@ -1090,14 +1016,14 @@ def semantic_dedup(
         df.sample(fraction=fit_fraction, seed=seed) if fit_fraction else df
     )
     if quantizer == "df":
-        # the REPLAYABLE configuration (round 11): the deterministic
+        # the REPLAYABLE configuration: the deterministic
         # KMeansDF coarse quantizer — with round_to set, the whole
         # operator (fit, assignment, pair threshold, components) has a
         # DuckDB value oracle (suite semantic_dedup_replay). The fit is
         # enforced-bounded even when fit_fraction is None (the default):
         # KMeansDF collects at most max_fit_rows rows (deterministic
-        # md5-order prefix), so the full-corpus driver collect the round-11
-        # review flagged cannot happen regardless of caller configuration.
+        # md5-order prefix), so a full-corpus driver collect cannot happen
+        # regardless of caller configuration.
         idx: IVFIndex = IVFIndexDF(
             n_lists=n_clusters, max_fit_rows=max_fit_rows
         ).fit(fit_df, vec_col, id_col=id_col)
@@ -1325,10 +1251,10 @@ class NearDupIndex(MaintainedIndex):
 
     def _batch_bands(self, new_df: DataFrame) -> DataFrame:
         """The batch's band rows, signed ONCE per batch frame
-        (optimization round 14, guide §1.2 — flag-then-absorb is the
-        documented stream shape and both steps need the same band rows;
-        recomputing them ran the Arrow minhash pass twice per batch,
-        belying the class's own "signs each doc once" contract).
+        (guide §1.2 — flag-then-absorb is the documented stream shape
+        and both steps need the same band rows, so the Arrow minhash pass
+        runs once per batch, as the class's "signs each doc once"
+        contract says).
         Single-slot memo: a strong reference to the batch frame (so the
         identity can never be a recycled id) plus an eager checkpoint of
         its band rows. Consumed by :meth:`absorb`, superseded by the
@@ -1472,7 +1398,7 @@ def semantic_contamination(
 
 
 # ---------------------------------------------------------------------------
-# fuzzy record matching (round 9/10): exact edit-distance joins, PassJoin
+# fuzzy record matching: exact edit-distance joins, PassJoin
 # ---------------------------------------------------------------------------
 
 
@@ -1521,8 +1447,8 @@ def _pj_segments(
     whole string: the split verification (:func:`_pj_split_verify`)
     compares remainders only, and slicing them HERE costs one substr per
     segment row (O(k) per record) instead of one per candidate meeting
-    (round 15 — the meeting-side substrs measured as large as the banded
-    verify itself). With ``split=False`` the row carries the whole
+    (the meeting-side substrs measured as large as the banded verify
+    itself). With ``split=False`` the row carries the whole
     string for the classic full banded verify — the cheaper-to-PLAN
     shape the per-tier/per-feed link paths use (see _rs_probe)."""
     if split:
@@ -1599,7 +1525,7 @@ def _pj_substrings(
     :func:`_pj_segments`, ``split=True`` makes every generated substring
     row carry its LEFT and RIGHT remainders (``<str_alias>l`` /
     ``<str_alias>r``) sliced once at generation for the split
-    verification (round 15); ``split=False`` carries the whole string
+    verification; ``split=False`` carries the whole string
     for the classic full banded verify."""
     k = d + 1
     up = d if include_longer else 0
@@ -1692,9 +1618,8 @@ def _pj_split_verify(
     cand: DataFrame, sa: str, sb: str, d: int
 ) -> DataFrame:
     """EXTENSION-BASED verification (PassJoin, Li et al. 2011 §5) for one
-    candidate meeting of the (segment, La, i) equi-join — the round-15
-    replacement for the full banded ``levenshtein(sa, sb, d)`` per
-    meeting. The meeting says: segment ``_i`` of the indexed string
+    candidate meeting of the (segment, La, i) equi-join, in place of the
+    full banded ``levenshtein(sa, sb, d)`` per meeting. The meeting says: segment ``_i`` of the indexed string
     (length ``_la``) occurs VERBATIM in the probe string at a window
     position. The matched block contributes 0 edits, so only the
     REMAINDERS need verifying — both sides arrive pre-sliced from
@@ -1745,7 +1670,7 @@ def _pj_split_verify(
     is within distance. The consumer's whole filter is ``_dist <= d``:
     ONE reference to ``_dist``, one evaluation of each levenshtein in
     the pushed condition (the survivor projection re-evaluates once
-    more, same as the round-10 full-verify shape).
+    more, same as the full-verify shape).
     """
     big = 1 << 20  # failure sentinel: far above any max_distance
     i_col = F.col("_i")
@@ -2019,7 +1944,7 @@ class LinkageIndex(MaintainedIndex):
         resolved: list[DataFrame] = []
         unresolved = feed
         for d in range(0, self.max_distance + 1):
-            # early exit (round 12): a drained tier would still pay the
+            # early exit: a drained tier would still pay the
             # master-side segment projection over the full standing base —
             # see link_best_match; the remainder probe is one limit(1)
             if d > 0 and not unresolved.limit(1).take(1):
@@ -2165,7 +2090,7 @@ def link_best_match(
     ``fuzzy_link_tiers``. Each tier's top-1 frame is localCheckpoint-ed:
     it feeds both the result union and the next tier's anti-join, and an
     un-barriered lineage would re-run every earlier tier's join once per
-    downstream consumer (the round-9 CC lesson).
+    downstream consumer.
 
     100 TB shape: the pair join's shuffle ∝ verified matches; the top-1
     is a WindowGroupLimit over the feed key (rank pushdown keeps only
@@ -2191,7 +2116,7 @@ def link_best_match(
     resolved: list[DataFrame] = []
     unresolved = right
     for d in range(0, max_distance + 1):
-        # early exit (round 12): every escalation tier pays the MASTER-side
+        # early exit: every escalation tier pays the MASTER-side
         # segment generation over the full left table even when nothing is
         # left to resolve — measured at sf10 (2M master) a drained d=2 tier
         # still cost a full-master segment scan. One cheap remainder probe
@@ -2210,7 +2135,7 @@ def link_best_match(
             # split=False: each escalation tier is a SMALL probe (the
             # still-unresolved remainder), where the split verify's
             # per-call plan+codegen cost exceeds its per-meeting savings
-            # (measured round 15 — see _rs_probe's docstring)
+            # (measured — see _rs_probe's docstring)
             tier_pairs = edit_distance_join(
                 left, unresolved, left_id, right_id, left_col, right_col,
                 d, split=False,
@@ -2299,11 +2224,10 @@ def edit_distance_pairs(
     # the (segment, La, i) equi-join IS the position filter (windows were
     # enforced at generation), and the SPLIT verification (extension-based,
     # _pj_split_verify: left remainder vs threshold i + right remainder vs
-    # d-i; round 15) runs INSIDE the join's codegen stage — raw candidates
-    # are never shuffled; only verified meetings reach the per-pair min.
-    # On the sf0.1 low-entropy workload this is the difference between
-    # shuffling 140M candidate rows (the r9 shape) and shuffling the
-    # ~2x-duplicated true answer.
+    # d-i) runs INSIDE the join's codegen stage — raw candidates are never
+    # shuffled; only verified meetings reach the per-pair min. On the
+    # sf0.1 low-entropy workload this is the difference between shuffling
+    # 140M candidate rows and shuffling the ~2x-duplicated true answer.
     matched = (
         _pj_split_verify(
             segs.join(subs, ["_la", "_i", "_seg"]).filter(
@@ -2367,9 +2291,9 @@ def jaccard_join_prefix(
     prefix-vs-prefix). Candidates therefore meet ONLY on each doc's
     rarest few shingles — Zipf-hot boilerplate shingles sit at the BACK
     of the order and never generate candidates, where the plain inverted
-    join pays bucket² for exactly those. Round 10 adds PPJoin's
-    POSITIONAL filter (see :func:`_ppjoin_candidates`): each prefix
-    token carries its ordinal, and a match prunes when the remaining
+    join pays bucket² for exactly those. PPJoin's POSITIONAL filter (see
+    :func:`_ppjoin_candidates`) adds to it: each prefix token carries its
+    ordinal, and a match prunes when the remaining
     suffixes can't reach the equivalent overlap bound —
     :func:`jaccard_prefix_candidate_stats` accounts the reduction as a
     checked number. Verification computes exact intersections from the

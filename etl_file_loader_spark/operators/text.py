@@ -48,14 +48,14 @@ def subword_estimate(text: Column) -> Column:
     )
 
 
-# The three ratio helpers are BRANCH-FREE on purpose (round 12, the
-# measured CSE rule): the old `when(empty, 0.0).otherwise(ratio)` guards
-# put the tokenize/regex subtree inside a conditional branch, which
-# excludes it from Spark's runtime subexpression elimination — so a
-# composite like quality_score (or any filter that inlines it) re-ran the
-# split per reference. `x / greatest(denominator, 1)` is value-identical:
-# an empty input has numerator exactly 0, so 0/1 == the old literal 0.0,
-# and a null input propagates null through both forms.
+# The three ratio helpers are BRANCH-FREE on purpose (measured CSE rule):
+# a `when(empty, 0.0).otherwise(ratio)` guard puts the tokenize/regex
+# subtree inside a conditional branch, which excludes it from Spark's
+# runtime subexpression elimination — so a composite like quality_score
+# (or any filter that inlines it) re-runs the split per reference.
+# `x / greatest(denominator, 1)` is value-identical: an empty input has
+# numerator exactly 0, so 0/1 == 0.0, and a null input propagates null
+# through both forms.
 
 
 def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
@@ -102,11 +102,11 @@ def language_id(text: Column, markers: dict[str, list[str]] | None = None) -> Co
     """Argmax of per-language stopword-marker hit counts; tie/zero -> 'und'.
 
     Ties break by language code ascending (deterministic). Branch-free
-    argmax (round 12, the langid_score CSE rule): each score occurs
-    exactly once, inside an UNCONDITIONAL struct array, so the token
-    transform is subexpression-eliminated even when a downstream filter
-    inlines this whole expression; the old when-chain put every score
-    reference in a conditional and re-ran the tokenize per language.
+    argmax (the langid_score CSE rule): each score occurs exactly once,
+    inside an UNCONDITIONAL struct array, so the token transform is
+    subexpression-eliminated even when a downstream filter inlines this
+    whole expression; a when-chain would put every score reference in a
+    conditional and re-run the tokenize per language.
     """
     markers = markers or LANG_MARKERS
     toks = F.transform(tokens(text), lambda w: F.lower(w))
@@ -216,11 +216,10 @@ def classifier_score(
     # wrapper below references n (hence size of the index array) six times,
     # and Catalyst does not CSE the expensive tokenize+md5 subtree across
     # When/Coalesce branches in this non-codegen (HOF) projection — inlining
-    # idx at every reference measured 2.1x slower at sf0.1 (the round-5
-    # bench regression). CollapseProject keeps the two projections separate
-    # exactly because the alias is expensive and multiply-referenced, so the
-    # array is computed once per row and every later reference is a cheap
-    # attribute read.
+    # idx at every reference measured 2.1x slower at sf0.1. CollapseProject
+    # keeps the two projections separate exactly because the alias is
+    # expensive and multiply-referenced, so the array is computed once per
+    # row and every later reference is a cheap attribute read.
     base = df.select(
         F.col(id_col), hashed_feature_indices(F.col(text_col), dim).alias("_f")
     )
@@ -424,8 +423,8 @@ def langid_score(
     (identical semantics to the CASE-chain argmax the SQL oracles replay;
     exact-double comparisons both ways).
 
-    Branch-free is load-bearing, not style (round 12, the same measured
-    CSE rule as the URL operators): a CASE-chain argmax puts every logit
+    Branch-free is load-bearing, not style (the same measured CSE rule
+    as the URL operators): a CASE-chain argmax puts every logit
     reference inside a CONDITIONAL, and conditional occurrences are
     excluded from Spark's runtime subexpression elimination — so when a
     downstream gate filters on ``lang_pred`` (CurationPipeline stage 1c),
@@ -659,8 +658,7 @@ def bigram_logprob(
     # a left side — exact integer algebra), and the count tables pre-join
     # into one scored type table so the bigram STREAM is joined (and
     # shuffled) once on (p, w) — reusing cb's exchange — instead of once
-    # per count table (round 15, guide §2.4; the old shape re-exploded
-    # the stream for ctx and reshuffled the full stream+payload by p).
+    # per count table (guide §2.4), and the stream is exploded once.
     ctx = cb.groupBy("p").agg(F.sum("cb").alias("ctx"))
     typ = cb.join(ctx, "p")
     j = bg.join(typ, ["p", "w"])
@@ -704,8 +702,8 @@ def trigram_logprob(
 ) -> DataFrame:
     """Corpus-trained trigram LM with interpolated (Jelinek-Mercer) backoff:
     per-doc mean of ``ln(0.6*P3 + 0.3*P2 + 0.1*P1)`` over trigram positions
-    — the order-3 rung of the CCNet fluency-filter ladder (round 7, one up
-    from :func:`bigram_logprob`; real pipelines run 5-gram KenLM, which is
+    — the order-3 rung of the CCNet fluency-filter ladder (one up from
+    :func:`bigram_logprob`; real pipelines run 5-gram KenLM, which is
     this estimator with Kneser-Ney discounts instead of fixed lambdas).
 
     Each order is exactly normalized over its own event space (context
@@ -762,9 +760,8 @@ def trigram_logprob(
     # re-aggregating the exploded streams, and the five count tables
     # pre-join into ONE scored type table keyed (p2, p1, w) so the
     # trigram STREAM is joined/shuffled once — reusing c3's exchange —
-    # instead of five times with the full doc_id payload (round 15,
-    # guide §2.4; the old shape also re-tokenized the corpus for each
-    # context aggregate).
+    # instead of five times with the full doc_id payload (guide §2.4),
+    # and the corpus is tokenized once for every context aggregate.
     c3 = tg.groupBy("p2", "p1", "w").agg(F.count(F.lit(1)).alias("c3"))
     x3 = c3.groupBy("p2", "p1").agg(F.sum("c3").alias("x3"))
     c2 = bg.groupBy("p1", "w").agg(F.count(F.lit(1)).alias("c2"))
@@ -880,7 +877,7 @@ def kn_bigram_logprob(
     bt = cb.agg(F.count(F.lit(1)).alias("bt"))
     # pre-join the count tables into one scored type table so the bigram
     # STREAM is joined/shuffled once on (p, w) — reusing cb's exchange —
-    # instead of three times with the doc_id payload (round 15, §2.4)
+    # instead of three times with the doc_id payload (guide §2.4)
     typ = cb.join(ctxf, "p").join(pc, "w")
     j = bg.join(typ, ["p", "w"])
     prof = j.groupBy(id_col, "c", "ctx", "f", "pc").agg(
@@ -1315,67 +1312,45 @@ def _gram_array(toks: Column, n: int) -> Column:
 
 
 def repetition_stats(
-    df: DataFrame, id_col: str, text_col: str, n: int = 2, engine: str = "expr"
+    df: DataFrame, id_col: str, text_col: str, n: int = 2
 ) -> DataFrame:
     """Per-document top-n-gram share: the Gopher repetition filter signal.
 
     share = (occurrences of the single most frequent word n-gram × n) /
     token count — repetitive/boilerplate docs score high.
 
-    engine="expr" (default): every gram of a doc already lives in that
-    doc's row, so the mode is computed IN PLACE — sort the gram array and
-    fold a longest-run accumulator over it. O(tokens·log tokens) per doc,
-    whole-stage codegen, ZERO shuffle: at 100 TB the filter runs at scan
-    speed like the other quality signals.
-
-    engine="explode": explode → per-(doc, gram) count → per-doc max. One
-    shuffle proportional to corpus tokens (map-side partials). Use when
-    single documents are so long (many millions of tokens) that their gram
-    arrays shouldn't be sorted in task memory.
+    Every gram of a doc already lives in that doc's row, so the mode is
+    computed IN PLACE — sort the gram array and fold a longest-run
+    accumulator over it. O(tokens·log tokens) per doc, whole-stage
+    codegen, ZERO shuffle: the filter runs at scan speed like the other
+    quality signals.
 
     Ungrammable docs (< n tokens) report count/share 0.
     """
     toks = tokens(F.col(text_col))
     grams = _gram_array(toks, n)
-    if engine == "expr":
-        # longest equal-run in the sorted gram array = max gram frequency
-        acc0 = F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        )
-        top = F.aggregate(
-            F.array_sort(grams),
-            acc0,
-            lambda acc, g: F.struct(
-                g.alias("prev"),
-                F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-                F.greatest(
-                    acc["best"],
-                    F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-                ).alias("best"),
-            ),
-            lambda acc: acc["best"],
-        )
-        out = df.select(
-            F.col(id_col),
-            F.size(toks).alias("_n_tokens"),
-            top.alias("_top"),
-        )
-    elif engine == "explode":
-        exploded = df.select(
-            F.col(id_col),
-            F.size(toks).alias("_n_tokens"),
-            F.explode_outer(grams).alias("_gram"),
-        )
-        per_gram = exploded.groupBy(id_col, "_n_tokens", "_gram").agg(
-            F.count(F.lit(1)).alias("_c")
-        )
-        out = per_gram.groupBy(id_col, "_n_tokens").agg(
-            F.max(
-                F.when(F.col("_gram").isNotNull(), F.col("_c")).otherwise(0)
-            ).cast("int").alias("_top")
-        )
-    else:  # pragma: no cover - guarded upstream
-        raise ValueError(f"unknown engine {engine!r}")
+    # longest equal-run in the sorted gram array = max gram frequency
+    acc0 = F.struct(
+        F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
+    )
+    top = F.aggregate(
+        F.array_sort(grams),
+        acc0,
+        lambda acc, g: F.struct(
+            g.alias("prev"),
+            F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
+            F.greatest(
+                acc["best"],
+                F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
+            ).alias("best"),
+        ),
+        lambda acc: acc["best"],
+    )
+    out = df.select(
+        F.col(id_col),
+        F.size(toks).alias("_n_tokens"),
+        top.alias("_top"),
+    )
     return out.select(
         F.col(id_col),
         F.col("_n_tokens").alias("n_tokens"),
@@ -1731,50 +1706,11 @@ GOPHER_REPETITION_THRESHOLDS: dict[str, float] = {
 }
 
 
-def _dup_run_stats(elems: Column) -> Column:
-    """Fold over the SORTED element array: (n, dup_count, dup_chars,
-    total_chars), where dup_count = sum over distinct values of (count-1)
-    — i.e. every occurrence after the first — and dup_chars the same sum
-    weighted by element length. In-place per row, no shuffle."""
-    from etl_file_loader_spark.functions import bind_once
-
-    def fold(sorted_elems: Column) -> Column:
-        acc0 = F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0).cast("long").alias("dups"),
-            F.lit(0).cast("long").alias("dupchars"),
-            F.lit(0).cast("long").alias("chars"),
-        )
-        is_dup = lambda acc, e: acc["prev"].isNotNull() & (e == acc["prev"])  # noqa: E731
-        folded = F.aggregate(
-            sorted_elems,
-            acc0,
-            lambda acc, e: F.struct(
-                e.alias("prev"),
-                (acc["dups"] + F.when(is_dup(acc, e), 1).otherwise(0)).alias("dups"),
-                (
-                    acc["dupchars"]
-                    + F.when(is_dup(acc, e), F.length(e).cast("long")).otherwise(0)
-                ).alias("dupchars"),
-                (acc["chars"] + F.length(e)).alias("chars"),
-            ),
-        )
-        return F.struct(
-            F.size(sorted_elems).cast("long").alias("n"),
-            folded["dups"].alias("dups"),
-            folded["dupchars"].alias("dupchars"),
-            folded["chars"].alias("chars"),
-        )
-
-    return bind_once(F.array_sort(elems), fold)
-
-
 def gopher_repetition(
     df: DataFrame,
     id_col: str,
     text_col: str,
     thresholds: dict[str, float] | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """The published Gopher repetition-filter rule set (Rae et al. 2021,
     Appendix A, Table A1) — the other half of the Gopher filter next to
@@ -1788,8 +1724,8 @@ def gopher_repetition(
       weighted by element length, over total element characters
     - top n-gram character fraction (n = 2, 3, 4): occurrences of the
       single most frequent word n-gram x its word characters, over total
-      word characters (ties broken lexicographically-smallest so both
-      engines pick the identical gram)
+      word characters (ties broken lexicographically-smallest, so the pick
+      is deterministic)
     - duplicate n-gram character fraction (n = 5..10): characters of words
       covered by at least one n-gram occurring more than once, overlaps
       counted ONCE (the union-of-covered-token-positions form — an
@@ -1798,22 +1734,19 @@ def gopher_repetition(
       no scan order; documented difference: the scan variant skips ahead
       n tokens after a hit, so it can report slightly fewer covered chars)
 
-    keep = every ROUNDED signal <= its threshold (both engines threshold
-    identical 6-decimal values). Docs too short for an n produce 0 for
-    that signal (nothing repeats). Character denominators are word/element
-    characters (whitespace excluded), engine-portable.
+    keep = every ROUNDED signal <= its threshold (thresholds compare
+    6-decimal values). Docs too short for an n produce 0 for that signal
+    (nothing repeats). Character denominators are word/element characters
+    (whitespace excluded), engine-portable.
 
-    Plan shape (``engine="arrow"``, the default — optimization round 14,
-    guide §4.2 + §2.4): every signal is a pure function of its own
-    document, so the whole rule set is ONE zero-shuffle ``mapInArrow``
-    pass (:func:`_gopher_doc_signals_arrow`) followed by the expression
-    fraction/threshold tail. ``engine="explode"`` keeps the previous
-    shape — explode of (n, pos, gram) for all nine n values ->
-    groupBy(doc, n, gram) with map-side partial aggregation ->
-    per-(doc, n) reduce -> two slim per-doc joins; shuffle ~ 9x corpus
-    tokens, but counting never happens in task memory, so corpora with
-    multi-million-token documents cannot blow an executor (same
-    reasoning as repetition_stats engine="explode").
+    Plan shape: every signal is a pure function of its own document, so
+    the whole rule set is ONE zero-shuffle ``mapInArrow`` pass
+    (:func:`_gopher_doc_signals_arrow`) followed by the expression
+    fraction/threshold tail (:func:`_gopher_select`). The pass holds one
+    document's lines, tokens and grams in Python at a time: measured on
+    4 cores, a single document of 1,000,000 tokens peaked at ~0.5 GB of
+    Python-worker memory (about 0.5 GB per million tokens in one
+    document).
     """
     th = dict(GOPHER_REPETITION_THRESHOLDS)
     if thresholds:
@@ -1821,57 +1754,38 @@ def gopher_repetition(
         if unknown:
             raise ValueError(f"unknown gopher repetition signals: {sorted(unknown)}")
         th.update(thresholds)
-
-    if engine == "arrow":
-        return _gopher_select(
-            _gopher_doc_signals_arrow(df, id_col, text_col),
-            id_col, th, _gopher_arrow_cov_chars(),
-        )
-    if engine != "explode":
-        raise ValueError(f"unknown gopher engine: {engine!r}")
-    doc_side = _gopher_doc_side(df, id_col, text_col)
-    # positions feed only the n >= 5 duplicated-coverage signals — the
-    # top-gram slices (2..4) shuffle counts alone (guide §2.3)
-    counts = _gram_count_table(
-        df, id_col, text_col, range(2, 11), pos_ns=range(5, 11),
-        engine="explode",
-    )
-    return _gopher_from_counts(counts, doc_side, id_col, th)
+    return _gopher_select(_gopher_doc_signals_arrow(df, id_col, text_col), id_col, th)
 
 
 def _gram_count_table(
-    df: DataFrame, id_col: str, text_col: str, ns, pos_ns=None,
-    engine: str = "arrow",
+    df: DataFrame, id_col: str, text_col: str, ns, pos_ns=None
 ) -> DataFrame:
     """The shared (doc, n, gram) count table behind the n-gram text
     signals (Gopher repetition, n-gram novelty, contamination, span
     dedup): per doc and n in ``ns``, one row per distinct gram with the
     occurrence count and the in-doc position list. :func:`text_signals`
     persists this table and derives all four signals from it so the cost
-    is paid once per pipeline, not once per signal (VERDICT r8 ask 2).
+    is paid once per pipeline, not once per signal.
 
-    ``pos_ns`` (optimization round 14, guide §2.3 — shuffle fewer
-    bytes): the n values whose rows need the position list. Only the
-    duplicated-n-gram coverage signals (n >= 5) and the span window
-    consume ``_poss``; the top-gram (n = 2..4) and novelty slices use
+    ``pos_ns`` (guide §2.3 — shuffle fewer bytes): the n values whose rows
+    need the position list. Only the duplicated-n-gram coverage signals
+    (n >= 5) and the span window consume ``_poss``; the other slices use
     counts alone, so their rows carry an empty list instead of one int
     per occurrence.
 
-    ``engine="arrow"`` (optimization round 14, guide §4.2) counts grams
-    PER DOC in one ``mapInArrow`` pass: every output row is a pure
-    function of its own document (counts never cross docs — ids are the
-    frame's grain), so the old explode -> groupBy(doc, n, gram) exchange
-    moved ~9x corpus tokens only to co-locate rows that already sat in
-    the same task. The Arrow pass tokenizes with :func:`py_tokens` (the
-    pinned JVM-exact mirror) and joins gram tokens with single spaces —
-    byte-identical rows to the expression ladder, proven by
+    Grams are counted PER DOC in one ``mapInArrow`` pass (guide §4.2):
+    every output row is a pure function of its own document (counts never
+    cross docs — ids are the frame's grain), so no exchange is needed to
+    co-locate them. The pass tokenizes with :func:`py_tokens` (the pinned
+    JVM-exact mirror) and joins gram tokens with single spaces, the same
+    gram strings as the DuckDB oracle's ``array_to_string`` (pinned by
     tests/test_gram_table_arrow.py over the real corpus and the edge
-    shapes (empty/whitespace/unicode-ws/None text). Stage-profiled
-    before the change: ~50 s of interpreted-HOF executor CPU at sf0.1
-    against ~2 s of Python for the same counts. Trade (documented, like
-    the minhash signer): transient per-doc Python memory ∝ doc tokens —
-    ``engine="explode"`` keeps the constant-memory expression shape for
-    corpora with multi-million-token documents.
+    shapes). Null text yields no rows. Stage-profiled against the
+    explode -> groupBy(doc, n, gram) shape it replaced: ~2 s of Python
+    against ~50 s of interpreted-HOF executor CPU at sf0.1. Memory: one
+    document's grams are held in Python at a time, about 0.5 GB of
+    Python-worker memory per million tokens in one document (measured on
+    4 cores with :func:`text_signals`).
     """
     from etl_file_loader_spark.operators.skew import fan_out_scan
 
@@ -1880,10 +1794,6 @@ def _gram_count_table(
     df = fan_out_scan(df, key_cols=[id_col])
     ns = sorted(set(ns))
     pos_ns = set(ns) if pos_ns is None else set(pos_ns)
-    if engine == "explode":
-        return _gram_count_table_expr(df, id_col, text_col, ns, pos_ns)
-    if engine != "arrow":
-        raise ValueError(f"unknown gram-table engine: {engine!r}")
 
     import pyarrow as pa
 
@@ -1912,7 +1822,7 @@ def _gram_count_table(
             out_p: list[list[int]] = []
             for row_idx, s in enumerate(texts):
                 if s is None:
-                    continue  # explode of a NULL gram array emits no rows
+                    continue  # null text has no grams
                 tk = py_tokens(s)
                 n_tok = len(tk)
                 prev: list[str] | None = None
@@ -1976,239 +1886,16 @@ def _gram_count_table(
     )
 
 
-def _gram_count_table_expr(
-    df: DataFrame, id_col: str, text_col: str, ns, pos_ns
-) -> DataFrame:
-    """Expression-engine twin of :func:`_gram_count_table`: ONE explode
-    of (n, pos, gram) structs for every n -> groupBy(doc, n, gram) with
-    map-side partial aggregation. Constant task memory (counting happens
-    in the aggregate, never per doc), at the cost of shuffling ~9x corpus
-    tokens; the equivalence test pins it against the arrow engine."""
-    from etl_file_loader_spark.functions import bind_once, tokens
-
-    ns = list(ns)
-    pos_ns = set(ns) if pos_ns is None else set(pos_ns)
-    toks = tokens(F.col(text_col))
-
-    def all_grams(t: Column) -> Column:
-        """Chained gram ladder (optimization round 14, guide §1.2): level
-        n's gram strings extend level n-1's by one token — 2 element_at +
-        1 concat per gram instead of concat_ws over n element_at calls —
-        so per-gram interpreted-HOF work stops growing with n, and the
-        expression tree (whose size drives analysis, codegen-compile and
-        the cold first-run cost of every gram-table consumer) shrinks to
-        ~constant per level. A level whose predecessor is not on the
-        ``ns`` path builds directly (same as the old shape); identical
-        gram strings either way — both forms join the same n tokens with
-        single spaces."""
-        _empty_s = F.array().cast("array<string>")
-        _empty_g = F.array().cast("array<struct<n:int,pos:int,gram:string>>")
-        ns_sorted = sorted(set(ns))
-        want = set(ns_sorted)
-
-        def direct(n: int) -> Column:
-            return F.when(
-                F.size(t) >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - n),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(t, i + j + 1) for j in range(n)]
-                    ),
-                ),
-            ).otherwise(_empty_s)
-
-        def chained(g: Column, n: int) -> Column:
-            # g = level n-1 gram array: g[i] (1-based) covers 1-based
-            # tokens i..i+n-2, so level n's gram i appends token i+n-1
-            return F.when(
-                F.size(g) >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(g) - 1),
-                    lambda i: F.concat(
-                        F.element_at(g, i),
-                        F.lit(" "),
-                        F.element_at(t, i + (n - 1)),
-                    ),
-                ),
-            ).otherwise(_empty_s)
-
-        def structs(g: Column, n: int) -> Column:
-            # 2-arg transform: the second lambda arg is the 0-based array
-            # index == the gram's 0-based token start, the old pos value
-            return F.transform(
-                g,
-                lambda x, i: F.struct(
-                    F.lit(n).alias("n"), i.alias("pos"), x.alias("gram")
-                ),
-            )
-
-        def build_from(idx: int, g_prev: Column | None, n_prev: int) -> Column:
-            n = ns_sorted[idx]
-            g_expr = (
-                chained(g_prev, n)
-                if g_prev is not None and n == n_prev + 1
-                else direct(n)
-            )
-
-            def with_g(g: Column) -> Column:
-                head = structs(g, n)
-                if idx + 1 == len(ns_sorted):
-                    return head
-                return F.concat(head, build_from(idx + 1, g, n))
-
-            return bind_once(g_expr, with_g)
-
-        if not ns_sorted:
-            return _empty_g
-        return build_from(0, None, 0)
-
-    ex = df.select(
-        F.col(id_col), F.explode(bind_once(toks, all_grams)).alias("_g")
-    )
-    return ex.groupBy(
-        F.col(id_col),
-        F.col("_g")["n"].alias("_n"),
-        F.col("_g")["gram"].alias("_gram"),
-    ).agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        # collect_list skips nulls: rows of an n outside pos_ns aggregate
-        # an empty list at no per-occurrence cost
-        F.collect_list(
-            F.when(
-                F.col("_g")["n"].isin(sorted(pos_ns))
-                if pos_ns
-                else F.lit(False),
-                F.col("_g")["pos"],
-            )
-        ).alias("_poss"),
-    )
-
-
-def _gopher_doc_side(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-doc scan branch of the Gopher repetition rules (line/paragraph
-    dup-run stats + token char accounting), expression engine — the
-    constant-task-memory twin used by the ``engine="explode"`` paths
-    (the arrow paths fuse these stats into
-    :func:`_gopher_doc_signals_arrow`). Kept separate from the gram
-    branch — a shared struct would drag the 9x-token gram array through
-    the per-doc branch, because the bind_once encoding hides the struct
-    from SimplifyExtractValueOps — so per-doc stats stay shuffle-free.
-    The fan-out below adds the one exchange a single-split scan needs to
-    parallelize the line/paragraph folds (guide §2.5; no-op at scale)."""
-    from etl_file_loader_spark.functions import bind_once, tokens
-    from etl_file_loader_spark.operators.skew import fan_out_scan
-
-    df = fan_out_scan(df, key_cols=[id_col])
-    text = F.col(text_col)
-    lines = F.filter(F.split(text, "\n", -1), lambda l: F.length(F.trim(l)) > 0)
-    paras = F.filter(F.split(text, r"\n{2,}", -1), lambda p: F.length(F.trim(p)) > 0)
-    toks = tokens(text)
-    return df.select(
-        F.col(id_col),
-        _dup_run_stats(lines).alias("_l"),
-        _dup_run_stats(paras).alias("_p"),
-        bind_once(
-            toks,
-            lambda t: F.struct(
-                F.aggregate(
-                    t, F.lit(0).cast("long"), lambda a, w: a + F.length(w)
-                ).alias("content_chars"),
-                F.transform(t, lambda w: F.length(w).cast("long")).alias("tok_lens"),
-            ),
-        ).alias("_w"),
-    ).select(
-        F.col(id_col),
-        "_l",
-        "_p",
-        F.col("_w")["content_chars"].alias("_content_chars"),
-        F.col("_w")["tok_lens"].alias("_tok_lens"),
-    )
-
-
-def _gopher_from_counts(
-    counts: DataFrame, doc_side: DataFrame, id_col: str, th: dict[str, float]
-) -> DataFrame:
-    """Gopher repetition signals from a prebuilt (doc, n, gram) count
-    table (``_gram_count_table`` shape, n = 2..10 rows only)."""
-    # ONE downstream chain off the count table (computing the top-gram and
-    # coverage reductions as separate frames would re-run the explode +
-    # count shuffle per branch — Spark has no common-plan sharing):
-    # per (doc, n) reduce BOTH signals, then one per-doc pivot.
-    # - top n-gram (n=2..4): arg-min of (-count, gram) = max count, lex-min
-    #   gram; covered word chars = count * (gram length minus its n-1
-    #   spaces)
-    # - duplicated n-grams (n=5..10, count > 1): union of covered token
-    #   positions (overlaps once), word-length summed via the per-doc
-    #   token-length array after the join
-    per_n = counts.groupBy(id_col, "_n").agg(
-        F.min(
-            F.when(
-                F.col("_n") <= 4,
-                F.struct(
-                    (-F.col("_cnt")).alias("negc"),
-                    F.col("_gram").alias("gram"),
-                    (
-                        F.col("_cnt")
-                        * (F.length(F.col("_gram")) - (F.col("_n") - 1))
-                    ).cast("long").alias("covered"),
-                ),
-            )
-        )["covered"].alias("_covered"),
-        F.array_distinct(
-            F.flatten(
-                F.collect_list(
-                    F.when(
-                        (F.col("_n") >= 5) & (F.col("_cnt") > 1),
-                        F.flatten(
-                            F.transform(
-                                F.col("_poss"),
-                                lambda p: F.sequence(p, p + F.col("_n") - 1),
-                            )
-                        ),
-                    )
-                )
-            )
-        ).alias("_idxs"),
-    )
-    pivoted = per_n.groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("_n") == n, F.col("_covered"))).alias(f"_top{n}")
-            for n in (2, 3, 4)
-        ],
-        *[
-            F.max(F.when(F.col("_n") == n, F.col("_idxs"))).alias(f"_idx{n}")
-            for n in range(5, 11)
-        ],
-    )
-
-    joined = doc_side.join(pivoted, id_col, "left")
-
-    lens = F.col("_tok_lens")
-    cov_chars = {
-        n: F.when(
-            F.col(f"_idx{n}").isNull(), F.lit(0).cast("long")
-        ).otherwise(
-            F.aggregate(
-                F.col(f"_idx{n}"),
-                F.lit(0).cast("long"),
-                lambda a, i: a + F.element_at(lens, i + 1),
-            )
-        )
-        for n in range(5, 11)
-    }
-    return _gopher_select(joined, id_col, th, cov_chars)
-
-
 def _gopher_select(
-    joined: DataFrame, id_col: str, th: dict[str, float], cov_chars
+    joined: DataFrame, id_col: str, th: dict[str, float]
 ) -> DataFrame:
-    """Shared signal/threshold tail of the Gopher repetition paths:
-    ``joined`` carries the per-doc integer ingredients (_l/_p dup-run
-    structs, _content_chars, _top{2..4} covered chars); ``cov_chars[n]``
-    is the covered-characters Column for the n>=5 dup-coverage signals.
-    Every fraction/round/threshold is computed HERE, in the expression
-    engine, from exact integers — so the arrow and explode producers
-    yield identical doubles by construction."""
+    """Signal/threshold tail of the Gopher repetition rules: ``joined``
+    (:func:`_gopher_doc_signals_arrow`) carries the per-doc integer
+    ingredients (_l/_p dup-run structs, _content_chars, _top{2..4} and
+    _cov{5..10} covered chars; NULL when the doc is too short for n).
+    Every fraction/round/threshold is computed HERE, in Column
+    expressions, from exact integers, so the doubles are the ones the
+    DuckDB oracle computes."""
 
     def frac(num: Column, den: Column) -> Column:
         return F.round(
@@ -2227,7 +1914,9 @@ def _gopher_select(
             F.coalesce(F.col(f"_top{n}"), F.lit(0)), content
         )
     for n in range(5, 11):
-        sig[f"dup_{n}gram_char_frac"] = frac(cov_chars[n], content)
+        sig[f"dup_{n}gram_char_frac"] = frac(
+            F.coalesce(F.col(f"_cov{n}"), F.lit(0).cast("long")), content
+        )
 
     keep = F.lit(True)
     for name, t in th.items():
@@ -2245,27 +1934,24 @@ def _gopher_select(
 def _gopher_doc_signals_arrow(
     df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """Fused per-doc Gopher pass (optimization round 14, guide §4.2 +
-    §2.4): every one of the thirteen repetition signals is a pure
-    function of its OWN document, so the whole branch — line/paragraph
-    dup-run stats, token char accounting, top-gram covered chars
-    (n=2..4), dup-n-gram covered chars (n=5..10) — comes out of ONE
-    ``mapInArrow`` pass with ZERO shuffle. The explode path moved ~9x
-    corpus tokens through a groupBy(doc, n, gram) exchange, reduced per
-    (doc, n), pivoted per doc and joined back to a separate doc-stats
-    scan, only to co-locate rows that already sat in the same task
-    (stage-profiled at ~50 s of interpreted-HOF executor CPU at sf0.1).
+    """Fused per-doc Gopher pass (guide §4.2 + §2.4): every one of the
+    thirteen repetition signals is a pure function of its OWN document,
+    so the whole branch — line/paragraph dup-run stats, token char
+    accounting, top-gram covered chars (n=2..4), dup-n-gram covered chars
+    (n=5..10) — comes out of ONE ``mapInArrow`` pass with ZERO shuffle.
+    The explode -> groupBy(doc, n, gram) shape it replaced moved ~9x
+    corpus tokens through an exchange only to co-locate rows that already
+    sat in the same task (stage-profiled at ~50 s of interpreted-HOF
+    executor CPU at sf0.1).
 
     Only INTEGERS leave Python — fractions, rounding and thresholds stay
     in :func:`_gopher_select`'s expressions — and tokenization mirrors
     the JVM exactly (:func:`py_tokens`, ASCII-space trim, literal-\\n /
     \\n{2,} splits, code-point lengths, byte-order = code-point-order
-    tie-breaks), so the output is bit-identical to the explode twin
-    (pinned by tests/test_gram_table_arrow.py over the real corpus and
-    the edge shapes). Trade (documented, like the minhash signer):
-    transient per-doc Python memory ∝ doc tokens; ``engine="explode"``
-    on the callers keeps the constant-memory expression shape for
-    corpora with multi-million-token documents."""
+    tie-breaks), pinned against the DuckDB oracle by
+    tests/test_gram_table_arrow.py over the real corpus and the edge
+    shapes. Memory: one document's lines, tokens and grams at a time
+    (see :func:`gopher_repetition` for the measured bound)."""
     import re as _re
     from collections import Counter
 
@@ -2321,8 +2007,8 @@ def _gopher_doc_signals_arrow(
             grams_cols: list[list[int | None]] = [[] for _ in range(9)]
             for s in texts:
                 if s is None:
-                    # explode twin on NULL text: structs with NULL fields
-                    # (size/aggregate of a NULL array), NULL everywhere else
+                    # NULL text: stats structs with NULL fields (so
+                    # n_lines/n_paras are NULL), NULL everywhere else
                     l_rows.append((None, None, None, None))
                     p_rows.append((None, None, None, None))
                     cc.append(None)
@@ -2340,8 +2026,8 @@ def _gopher_doc_signals_arrow(
                 prev: list[str] | None = None
                 for slot, n in enumerate(range(2, 11)):
                     if n_tok < n:
-                        # no n-grams: the explode table had no (doc, n)
-                        # group, so the pivot's left join produced NULL
+                        # no n-grams: NULL, which _gopher_select reads
+                        # as 0 covered chars
                         grams_cols[slot].append(None)
                         prev = None
                         continue
@@ -2393,17 +2079,6 @@ def _gopher_doc_signals_arrow(
     )
 
 
-def _gopher_arrow_cov_chars() -> dict[int, Column]:
-    """cov_chars mapping for :func:`_gopher_select` over the arrow
-    doc-signals frame: the integers are already computed per doc; NULL
-    (doc too short for n) maps to 0 exactly like the explode pivot's
-    missing group."""
-    return {
-        n: F.coalesce(F.col(f"_cov{n}"), F.lit(0).cast("long"))
-        for n in range(5, 11)
-    }
-
-
 def text_signals(
     df: DataFrame,
     id_col: str,
@@ -2412,24 +2087,23 @@ def text_signals(
     n_novel: int = 5,
     window: int = 5,
     thresholds: dict[str, float] | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
-    """ALL FOUR n-gram corpus-hygiene signals off one scan family
-    (VERDICT r8 ask 2): Gopher repetition rules, n-gram novelty,
-    benchmark contamination, and exact-substring span-removal accounting.
+    """ALL FOUR n-gram corpus-hygiene signals off one scan family:
+    Gopher repetition rules, n-gram novelty, benchmark contamination, and
+    exact-substring span-removal accounting.
 
-    ``engine="arrow"`` (default — optimization round 14, guide §4.2 +
-    §2.4): the repetition rules are purely per-doc, so they come out of
-    ONE zero-shuffle ``mapInArrow`` pass; the shared
-    :func:`_gram_count_table` is built (and persisted) ONLY for the n
-    values the CROSS-doc signals need — ``{n_novel, window}`` for
-    novelty/contamination and the span window — instead of 2..10, so
-    the pinned cache that the remaining consumers re-scan shrinks ~8x
-    (128 MB -> ~15 MB at sf0.1). ``engine="explode"`` keeps the previous
-    all-expression shape (full 2..10 table, gopher derived from it) —
-    constant task memory for corpora with multi-million-token docs. At
-    100 TB the persisted table would be a written-out parquet stage
-    instead of a Spark cache — same shape.
+    The repetition rules are purely per-doc, so they come out of
+    :func:`gopher_repetition`'s ONE zero-shuffle ``mapInArrow`` pass
+    (guide §4.2 + §2.4); the shared :func:`_gram_count_table` is built
+    (and persisted) ONLY for the n values the CROSS-doc signals need —
+    ``{n_novel, window}`` for novelty/contamination and the span window —
+    instead of 2..10, so the pinned cache that the remaining consumers
+    re-scan stays ~15 MB at sf0.1. At 100 TB the persisted table would be
+    a written-out parquet stage instead of a Spark cache — same shape.
+    Both Arrow passes hold one document in Python at a time: measured on
+    4 cores, a single document of 1,000,000 tokens peaked at 0.5-0.6 GB of
+    Python-worker memory (about 0.5 GB per million tokens in one
+    document).
 
     Per input doc, one output row:
 
@@ -2455,48 +2129,17 @@ def text_signals(
     """
     from etl_file_loader_spark.functions import tokens
 
-    th = dict(GOPHER_REPETITION_THRESHOLDS)
-    if thresholds:
-        unknown = set(thresholds) - set(th)
-        if unknown:
-            raise ValueError(f"unknown gopher repetition signals: {sorted(unknown)}")
-        th.update(thresholds)
-
-    if engine == "arrow":
-        # gopher is per-doc: one fused zero-shuffle Arrow pass; the
-        # pinned table carries only the cross-doc slices (novelty /
-        # contamination at n_novel, span at window), positions only for
-        # the span window (guide §2.3)
-        counts = pin(
-            _gram_count_table(
-                df, id_col, text_col, sorted({n_novel, window}),
-                pos_ns={window},
-            )
+    gopher = gopher_repetition(df, id_col, text_col, thresholds).withColumnRenamed(
+        "keep", "rep_keep"
+    )
+    # the pinned table carries only the cross-doc slices (novelty /
+    # contamination at n_novel, span at window), positions only for the
+    # span window (guide §2.3)
+    counts = pin(
+        _gram_count_table(
+            df, id_col, text_col, sorted({n_novel, window}), pos_ns={window}
         )
-        gopher = _gopher_select(
-            _gopher_doc_signals_arrow(df, id_col, text_col),
-            id_col, th, _gopher_arrow_cov_chars(),
-        ).withColumnRenamed("keep", "rep_keep")
-    elif engine == "explode":
-        ns = sorted(set(range(2, 11)) | {n_novel, window})
-        # positions feed the n>=5 duplicated-coverage signals and the
-        # span window slice; novelty and the top-gram slices use counts
-        # alone, so their rows shuffle/cache an empty list (guide §2.3)
-        counts = pin(
-            _gram_count_table(
-                df, id_col, text_col, ns,
-                pos_ns=(set(range(5, 11)) & set(ns)) | {window},
-                engine="explode",
-            )
-        )
-        gopher = _gopher_from_counts(
-            counts.filter(F.col("_n").between(2, 10)),
-            _gopher_doc_side(df, id_col, text_col),
-            id_col,
-            th,
-        ).withColumnRenamed("keep", "rep_keep")
-    else:
-        raise ValueError(f"unknown text-signals engine: {engine!r}")
+    )
 
     # novelty: per-doc gram counts are exactly the n == n_novel slice.
     # Corpus counts as ONE window over the gram (guide §2.4: aggregate +

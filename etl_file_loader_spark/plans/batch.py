@@ -62,8 +62,25 @@ def _read_union(spark: SparkSession, paths: list[str], config: SourceConfig) -> 
         df = spark.read.option("multiLine", "true").json(paths)
     else:
         raise ValueError(f"batch mode does not support format {config.file_format}")
-    base = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    return df.withColumn(FILE_COL, base)
+    return with_file_lineage(df)
+
+
+def with_file_lineage(raw: DataFrame) -> DataFrame:
+    """``raw`` plus its source file's basename as ``FILE_COL``. Attach it on
+    the scan: ``input_file_name()`` read after a cache or shuffle is ''."""
+    return raw.withColumn(FILE_COL, F.element_at(F.split(F.input_file_name(), "/"), -1))
+
+
+def latest_file_wins(df: DataFrame, grain: list[str]) -> DataFrame:
+    """One row per grain, from the latest filename: merging several files
+    in one pass gives what sequential per-file merges in filename order
+    give."""
+    w = Window.partitionBy(*grain).orderBy(F.col(FILE_COL).desc())
+    return (
+        df.withColumn("_pick", F.row_number().over(w))
+        .filter(F.col("_pick") == 1)
+        .drop("_pick")
+    )
 
 
 def batch_ingest(
@@ -107,17 +124,7 @@ def batch_ingest(
     good = valid
     if rejected:
         good = good.filter(~F.col(FILE_COL).isin(list(rejected)))
-    # cross-file grain resolution: one row per grain, latest filename wins
-    # (batched files merged in one pass ≡ sequential per-file merges in
-    # filename order)
-    w = Window.partitionBy(*config.grain).orderBy(F.col(FILE_COL).desc())
-    resolved = good.withColumn("_pick", F.row_number().over(w)).filter(
-        F.col("_pick") == 1
-    )
-    drop_cols = ["_pick"]
-    if validate_ops.FILE_ROW_COL in resolved.columns:
-        drop_cols.append(validate_ops.FILE_ROW_COL)
-    resolved = resolved.drop(*drop_cols)
+    resolved = latest_file_wins(good, config.grain).drop(validate_ops.FILE_ROW_COL)
     stage = with_row_hash(resolved, config).withColumn(
         publish_ops.LOG_ID_COL, F.lit(log_id).cast("long")
     )

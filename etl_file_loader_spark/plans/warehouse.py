@@ -159,7 +159,7 @@ class Warehouse:
                 self._overwrite_locked(table, df)
             else:
                 out = self._p(table, f"_v{versions[-1]}")
-                if any("=" in name for name in self._fs.list_names(out)):
+                if self._partition_cols(out):
                     # bare part files at the root of a hive-partitioned dir
                     # are invisible to partition-discovering readers — rows
                     # would be silently lost. Partitioned targets are
@@ -182,14 +182,30 @@ class Warehouse:
         Append-heavy tables (run log, DLQ) accumulate one small part file per
         append; periodic compaction restores scan efficiency — the COW
         equivalent of Delta OPTIMIZE. ``target_files`` defaults to the
-        cluster's parallelism capped by current file count.
+        cluster's parallelism capped by current file count. A snapshot laid
+        out in hive partition directories keeps its partition columns
+        (``BUCKET_COL`` of the earlier layout excepted).
         """
         with self._table_lock(table):
-            if not self.exists(table):
+            versions = self._versions(table)
+            if not versions:
                 return
             raw = self.read_table(table)
             n = target_files or max(1, min(len(raw.inputFiles()), self.spark.sparkContext.defaultParallelism))
-            self._overwrite_locked(table, raw.coalesce(n))
+            parts = self._partition_cols(self._p(table, f"_v{versions[-1]}"))
+            self._overwrite_locked(
+                table, raw.coalesce(n), [c for c in parts if c != BUCKET_COL]
+            )
+
+    def _partition_cols(self, snapshot_dir: str) -> list[str]:
+        """Hive partition columns of a snapshot, outermost first, read off
+        its first chain of ``name=value`` directories."""
+        cols: list[str] = []
+        d = snapshot_dir
+        while part := next((n for n in self._fs.list_names(d) if "=" in n), None):
+            cols.append(part.split("=", 1)[0])
+            d = f"{d}/{part}"
+        return cols
 
     def drop(self, table: str) -> None:
         self._fs.rmtree(self._p(table))

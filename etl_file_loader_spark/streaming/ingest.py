@@ -25,6 +25,7 @@ from etl_file_loader_spark.operators import dlq as dlq_ops
 from etl_file_loader_spark.operators import publish as publish_ops
 from etl_file_loader_spark.operators import validate as validate_ops
 from etl_file_loader_spark.operators.hashing import with_row_hash
+from etl_file_loader_spark.plans.batch import FILE_COL, latest_file_wins, with_file_lineage
 from etl_file_loader_spark.plans.pipeline import DLQ_TABLE, publish
 from etl_file_loader_spark.plans.warehouse import Warehouse
 
@@ -59,29 +60,23 @@ class StreamingIngest:
         self._epoch = 0
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """Validate and publish one micro-batch; ``batch_df`` carries each
+        row's file as ``FILE_COL`` (attached on the scan by ``start``). A
+        micro-batch may hold several files, so a grain they share keeps
+        the latest file's row, as in ``batch_ingest``."""
         cfg = self.config
-        renamed = validate_ops.rename_and_prune(batch_df, cfg)
-        validated = validate_ops.validate(renamed, cfg).cache()
+        renamed = validate_ops.rename_and_prune(batch_df, cfg, passthrough=(FILE_COL,))
+        validated = validate_ops.validate(renamed, cfg, passthrough=(FILE_COL,)).cache()
         try:
             valid, invalid = validate_ops.split(validated)
             log_id = int(epoch_id) + 1
             if not invalid.isEmpty():
                 self.warehouse.append(
                     DLQ_TABLE,
-                    dlq_ops.build_dlq(invalid, cfg, "<stream>", log_id),
+                    dlq_ops.build_dlq(invalid, cfg, F.col(FILE_COL), log_id),
                 )
-            stage = (
-                with_row_hash(valid, cfg)
-                .withColumn(publish_ops.FILENAME_COL, F.input_file_name())
-                .withColumn(publish_ops.LOG_ID_COL, F.lit(log_id).cast("long"))
-            )
-            # input_file_name() resolves to '' after the projection chain in
-            # some plans; coalesce to a stable epoch marker
-            stage = stage.withColumn(
-                publish_ops.FILENAME_COL,
-                F.when(F.col(publish_ops.FILENAME_COL) == "", f"epoch_{epoch_id}").otherwise(
-                    F.col(publish_ops.FILENAME_COL)
-                ),
+            stage = with_row_hash(latest_file_wins(valid, cfg.grain), cfg).withColumn(
+                publish_ops.LOG_ID_COL, F.lit(log_id).cast("long")
             )
             publish(self.warehouse, cfg, stage)
         finally:
@@ -98,7 +93,7 @@ class StreamingIngest:
             reader = reader.option("cleanSource", "archive").option(
                 "sourceArchiveDir", self.archive_dir
             )
-        raw = reader.csv(self.source_dir)
+        raw = with_file_lineage(reader.csv(self.source_dir))
         return (
             raw.writeStream.foreachBatch(self._process_batch)
             .option("checkpointLocation", self.checkpoint_dir)

@@ -116,14 +116,35 @@ ORDER BY 1, 2
 """
 
 
-_SIMHASH_VOTES_SQL = ",\n         ".join(
-    f"sum(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}" for b in range(32)
-)
-
-
-_SIMHASH_ASSEMBLE_SQL = " + ".join(
-    f"CASE WHEN v{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(32)
-)
+def simhash_cte(bits: int) -> str:
+    """The SimHash replay every SimHash oracle builds on: CTEs ending in
+    ``sh(doc_id, simhash)``, the ``bits``-wide fingerprint of each doc's
+    distinct tokens from md5-prefix token hashes (the first 8 hex chars up
+    to 32 bits, ceil(bits/4) beyond)."""
+    n_hex = 8 if bits <= 32 else (bits + 3) // 4
+    votes = ",\n         ".join(
+        f"sum(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
+        for b in range(bits)
+    )
+    assemble = " + ".join(
+        f"CASE WHEN v{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END"
+        for b in range(bits)
+    )
+    return rf"""toks AS (
+  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS tok
+  FROM documents
+),
+th AS (
+  SELECT doc_id, CAST('0x' || substr(md5(tok), 1, {n_hex}) AS BIGINT) AS th FROM toks
+),
+votes AS (
+  SELECT doc_id,
+         {votes}
+  FROM th GROUP BY doc_id
+),
+sh AS (
+  SELECT doc_id, {assemble} AS simhash FROM votes
+)"""
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,21 +153,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_ops.simhash(docs, "doc_id", "text", bits=32)
 
 
-Q_DEDUP_SIMHASH_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS tok
-  FROM documents
-),
-th AS (
-  SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) AS th FROM toks
-),
-votes AS (
-  SELECT doc_id,
-         {_SIMHASH_VOTES_SQL}
-  FROM th GROUP BY doc_id
-)
-SELECT doc_id, {_SIMHASH_ASSEMBLE_SQL} AS simhash
-FROM votes ORDER BY doc_id
+Q_DEDUP_SIMHASH_SQL = f"""
+WITH {simhash_cte(32)}
+SELECT doc_id, simhash FROM sh ORDER BY doc_id
 """
 
 
@@ -428,22 +437,8 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_DEDUP_SIMHASH_PAIRS_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS tok
-  FROM documents
-),
-th AS (
-  SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) AS th FROM toks
-),
-votes AS (
-  SELECT doc_id,
-         {_SIMHASH_VOTES_SQL}
-  FROM th GROUP BY doc_id
-),
-sh AS (
-  SELECT doc_id, {_SIMHASH_ASSEMBLE_SQL} AS simhash FROM votes
-)
+Q_DEDUP_SIMHASH_PAIRS_SQL = f"""
+WITH {simhash_cte(32)}
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
 FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -974,15 +969,6 @@ def q_semantic_contamination_check(spark: SparkSession, sf_dir: str) -> DataFram
 # SimHash end-to-end collapse (blocked candidates, no all-pairs join)
 # ---------------------------------------------------------------------------
 
-_SIMHASH60_VOTES_SQL = ",\n         ".join(
-    f"sum(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}" for b in range(60)
-)
-
-_SIMHASH60_ASSEMBLE_SQL = " + ".join(
-    f"CASE WHEN v{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(60)
-)
-
-
 def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end SimHash near-dedup: corpus minus Hamming<=3 losers on
     60-bit fingerprints, candidates from the 4-block pigeonhole join (exact
@@ -996,22 +982,8 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("doc_id", "source").orderBy("doc_id")
 
 
-Q_SIMHASH_DEDUP_SQL = rf"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS tok
-  FROM documents
-),
-th AS (
-  SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS th FROM toks
-),
-votes AS (
-  SELECT doc_id,
-         {_SIMHASH60_VOTES_SQL}
-  FROM th GROUP BY doc_id
-),
-sh AS (
-  SELECT doc_id, {_SIMHASH60_ASSEMBLE_SQL} AS simhash FROM votes
-),
+Q_SIMHASH_DEDUP_SQL = f"""
+WITH RECURSIVE {simhash_cte(60)},
 pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id

@@ -1032,13 +1032,26 @@ def q_gopher_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GRR_TH = text_ops.GOPHER_REPETITION_THRESHOLDS
 
-Q_GOPHER_REPETITION_RULES_SQL = rf"""
-WITH d AS (
+# the Gopher oracle's token and gram replay: d(doc_id, text, w) with the
+# whitespace tokens w, and g(doc_id, n, pos, gram), one row per word
+# n-gram occurrence for n = 2..10 (pos is the 0-based first token)
+GOPHER_GRAMS_CTE = r"""d AS (
   SELECT doc_id, text,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
               ELSE string_split_regex(trim(text), '\s+') END AS w
   FROM documents
 ),
+g AS (
+  SELECT d.doc_id, tn.n, ti.i - 1 AS pos,
+         array_to_string(w[ti.i:ti.i + tn.n - 1], ' ') AS gram
+  FROM d,
+       unnest([2, 3, 4, 5, 6, 7, 8, 9, 10]) tn(n),
+       unnest(range(1, len(w) - tn.n + 2)) ti(i)
+  WHERE len(w) >= tn.n
+)"""
+
+Q_GOPHER_REPETITION_RULES_SQL = rf"""
+WITH {GOPHER_GRAMS_CTE},
 le AS (
   SELECT doc_id, elem FROM (
     SELECT doc_id, unnest(string_split(text, chr(10))) AS elem FROM d
@@ -1067,14 +1080,6 @@ ws AS (
   SELECT doc_id,
          COALESCE(list_sum(list_transform(w, x -> length(x))), 0) AS content_chars
   FROM d
-),
-g AS (
-  SELECT d.doc_id, tn.n, ti.i - 1 AS pos,
-         array_to_string(w[ti.i:ti.i + tn.n - 1], ' ') AS gram
-  FROM d,
-       unnest([2, 3, 4, 5, 6, 7, 8, 9, 10]) tn(n),
-       unnest(range(1, len(w) - tn.n + 2)) ti(i)
-  WHERE len(w) >= tn.n
 ),
 c AS (SELECT doc_id, n, gram, count(*) AS cnt FROM g GROUP BY 1, 2, 3),
 topg AS (

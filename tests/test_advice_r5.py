@@ -6,22 +6,8 @@ from pyspark.sql import functions as F
 
 from etl_file_loader_spark.functions import py_tokens, tokens
 from etl_file_loader_spark.operators import dedup, text
-
-# texts edged/infixed with non-space whitespace — where Python .strip() +
-# re.split(r"\s+") diverge from Spark trim + Java split
-WS_EDGE_CASES = [
-    "a b",
-    "\ta b",        # leading tab -> leading '' token
-    "a b\n",        # trailing newline -> trailing '' token
-    "trail\n\n",    # one trailing '' per edge RUN, not per char
-    "\t",           # all-delimiter -> ['', '']
-    " \t ",         # trim strips the spaces, not the tab
-    "a\xa0b",       # U+00A0 is NOT whitespace to Java \s
-    "x\x0by",       # \x0b IS whitespace to Java \s
-    "a  b",
-    "",
-    None,
-]
+from etl_file_loader_spark.suite import dedup as suite_dedup
+from tests.text_oracle import WS_EDGE_CASES, WS_ROWS, by_id, minhash_digests, oracle
 
 
 def test_py_tokens_mirror_spark(spark):
@@ -36,30 +22,47 @@ def test_py_tokens_mirror_spark(spark):
         assert py_tokens(c) == expected, repr(c)
 
 
+# MinHash (16 hashes, 5-gram shingles) of empty text, which NULL text
+# signs as well
+EMPTY_TEXT_MINHASH = [
+    322916002, 1358976311, 1148424136, 118004753, 682748664, 1211048109,
+    253801145, 1650354195, 499342193, 712698526, 1612119107, 1411304425,
+    157889893, 1337803800, 1462792760, 940324665,
+]
+
+
 def test_minhash_arrow_expr_identical_on_ws_edged_text(spark):
-    df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(WS_EDGE_CASES)], "doc_id long, text string"
-    )
-    e = {r["doc_id"]: list(r["signature"]) for r in
-         dedup.minhash_signatures(df, "doc_id", "text", 8, 2, engine="expr").collect()}
-    a = {r["doc_id"]: list(r["signature"]) for r in
-         dedup.minhash_signatures(df, "doc_id", "text", 8, 2, engine="arrow").collect()}
-    assert e == a
+    df = spark.createDataFrame(WS_ROWS, "doc_id long, text string")
+    sigs = dedup.minhash_signatures(df, "doc_id", "text", 16, 5)
+    got = minhash_digests(sigs)
+    want = by_id(oracle(suite_dedup.Q_DEDUP_MINHASH_SQL, WS_ROWS))
+    null_id = next(i for i, t in WS_ROWS if t is None)
+    empty_id = next(i for i, t in WS_ROWS if t == "")
+    # the oracle emits no signature for NULL text; the kernel signs it as
+    # empty text
+    assert null_id not in want
+    assert got.pop(null_id) == got[empty_id]
+    assert got == want
+    null_sig = sigs.filter(F.col("doc_id") == null_id).first()["signature"]
+    assert list(null_sig) == EMPTY_TEXT_MINHASH
 
 
 def test_simhash_arrow_expr_identical_on_ws_edged_text(spark):
-    df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(WS_EDGE_CASES)], "doc_id long, text string"
-    )
+    df = spark.createDataFrame(WS_ROWS, "doc_id long, text string")
+    tokenless = {i for i, t in WS_ROWS if not (t or "").strip(" ")}
     for bits in (32, 60):
-        e = {r["doc_id"]: r["simhash"] for r in
-             dedup.simhash(df, "doc_id", "text", bits=bits, engine="expr").collect()}
-        a = {r["doc_id"]: r["simhash"] for r in
-             dedup.simhash(df, "doc_id", "text", bits=bits, engine="arrow").collect()}
-        assert e == a
+        got = by_id(dedup.simhash(df, "doc_id", "text", bits=bits).collect())
+        want = by_id(oracle(
+            f"WITH {suite_dedup.simhash_cte(bits)} SELECT doc_id, simhash FROM sh",
+            WS_ROWS,
+        ))
+        # token-less text has no fingerprint; the oracle votes one '' token
+        # for empty text
+        assert not tokenless & set(got)
+        assert got == {i: v for i, v in want.items() if i not in tokenless}
         # tab-only text tokenizes to ['',''] -> the '' token votes: the doc
-        # MUST be fingerprinted (the old arrow engine dropped it)
-        assert 4 in a and 5 in a
+        # MUST be fingerprinted
+        assert 200004 in got and 200005 in got
 
 
 def test_classifier_null_text_matches_joined(spark):

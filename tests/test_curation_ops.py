@@ -236,21 +236,32 @@ def _allpairs_simhash(df, bits, max_hamming):
 
 
 def test_simhash_engines_bit_identical(spark):
+    """SimHash fingerprints equal the DuckDB oracle's at both widths over a
+    real corpus slice (every doc has tokens)."""
+    import duckdb
+
+    from etl_file_loader_spark.suite import dedup as suite_dedup
+    from tests.text_oracle import SF_DIR, by_id
+
     docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .filter(F.col("doc_id") < 150)
         .select("doc_id", "text")
     )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * "
+        f"FROM '{SF_DIR}/documents.parquet' WHERE doc_id < 150"
+    )
     for bits in (32, 60):
-        arrow = {
-            r["doc_id"]: r["simhash"]
-            for r in dedup.simhash(docs, "doc_id", "text", bits=bits, engine="arrow").collect()
-        }
-        expr = {
-            r["doc_id"]: r["simhash"]
-            for r in dedup.simhash(docs, "doc_id", "text", bits=bits, engine="expr").collect()
-        }
-        assert arrow == expr
+        got = by_id(dedup.simhash(docs, "doc_id", "text", bits=bits).collect())
+        want = by_id(
+            con.execute(
+                f"WITH {suite_dedup.simhash_cte(bits)} SELECT doc_id, simhash FROM sh"
+            ).fetchall()
+        )
+        assert len(got) == 150
+        assert got == want
 
 
 def test_blocked_pairs_equal_all_pairs(spark):

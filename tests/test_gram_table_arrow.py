@@ -1,101 +1,97 @@
-"""Arrow-vs-expression equivalence for the Gopher/text-signals family.
+"""The Gopher/text-signals Arrow passes against their DuckDB oracles.
 
-Optimization round 14 moved the per-doc halves of the n-gram hygiene
-signals into ``mapInArrow`` passes (guide §4.2: hand whole batches to
-Python instead of interpreted JVM HOF folds; §2.4: per-doc counts never
-needed the groupBy(doc, n, gram) exchange). The contract is BIT-IDENTICAL
-output: only integers leave Python, every fraction/round/threshold stays
+The per-doc halves of the n-gram hygiene signals run in ``mapInArrow``
+passes. Only integers leave Python, every fraction/round/threshold stays
 in the shared expression tail, and tokenization mirrors the JVM exactly
 (py_tokens: ASCII-space trim, Java-\\s ASCII-only split, kept edge-empty
-tokens). These tests pin the arrow engines against the expression twins
-over real corpus text plus the edge shapes that distinguish the two
-tokenizer/trim/split semantics.
+tokens). These tests compare the passes with the suite's oracle SQL over
+the real corpus plus the edge shapes that distinguish the tokenizer, trim
+and split semantics (tests/text_oracle.py); NULL text, which the oracle
+treats differently by design, is pinned to literal values.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_file_loader_spark.operators import text as tx
 from etl_file_loader_spark.operators.cache import release_operator_caches
+from etl_file_loader_spark.suite import text as suite_text
+from tests.text_oracle import (
+    EDGE_ROWS,
+    NULL_IDS,
+    WS_ROWS,
+    by_id,
+    oracle,
+    spark_documents,
+)
 
-SF_DIR = "/root/testdata/sf0.001"
+ROWS = WS_ROWS + EDGE_ROWS
 
-# edge shapes: NULL text, empty, ASCII-space only, tab-edged (Spark trim
-# strips only 0x20, so the leading \t survives into the first token),
-# newline-trailing (Java split keeps the trailing empty token), repeated
-# multi-space runs, duplicate lines/paras, unicode NBSP (NOT a Java \s
-# separator), long repetitive docs that exercise every n = 2..10 slice
-EDGE_ROWS = [
-    (100001, None),
-    (100002, ""),
-    (100003, "   "),
-    (100004, "\ta b\n"),
-    (100005, "a b c  d"),
-    (100006, "x\n\ny y\nz\nz\n\n\nx"),
-    (100007, "w1 w2 w1 w2 w1 w2 w1 w2 w1 w2 w1 w2"),
-    (100008, "a\xa0b c a\xa0b c"),
-    (100009, "one two three four five six seven eight nine ten eleven"),
-    (100010, "r s t u v w x y z a r s t u v w x y z a r s t u v w x y z a"),
-]
+# the Gopher row of NULL text: NULL line/paragraph counts, every signal 0,
+# kept (the oracle reports 0 lines and 0 paragraphs instead)
+NULL_GOPHER = (None, None) + (0.0,) * 13 + (1,)
 
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    edge = spark.createDataFrame(EDGE_ROWS, "doc_id long, text string")
-    return docs.unionByName(edge)
+    return spark_documents(spark, ROWS, with_corpus=True)
 
 
-def _rows(df):
-    out = sorted(tuple(r) for r in df.collect())
+def _by_id(df) -> dict:
+    out = by_id(df.collect())
     release_operator_caches()
     return out
 
 
-def test_gram_count_table_engines_identical(corpus):
-    ns = range(2, 11)
-    pos = set(range(5, 11))
-    a = tx._gram_count_table(corpus, "doc_id", "text", ns, pos_ns=pos,
-                             engine="arrow")
-    e = tx._gram_count_table(corpus, "doc_id", "text", ns, pos_ns=pos,
-                             engine="explode")
-    # _poss order is unconstrained (collect_list arrival order on the
-    # explode side) — compare as multisets per row
-    norm = lambda rows: sorted(  # noqa: E731
-        (r[0], r[1], r[2], r[3], tuple(sorted(r[4]))) for r in rows
+def _split_nulls(rows: dict) -> tuple[dict, dict]:
+    return (
+        {k: v for k, v in rows.items() if k in NULL_IDS},
+        {k: v for k, v in rows.items() if k not in NULL_IDS},
     )
-    ra, re_ = norm(a.collect()), norm(e.collect())
-    assert len(ra) > 100_000  # real corpus, not a toy frame
-    assert ra == re_
+
+
+def test_gram_count_table_engines_identical(corpus):
+    table = tx._gram_count_table(
+        corpus, "doc_id", "text", range(2, 11), pos_ns=set(range(5, 11))
+    )
+    # _poss order is unconstrained — compare sorted position lists
+    got = sorted((r[0], r[1], r[2], r[3], sorted(r[4])) for r in table.collect())
+    want = sorted(
+        oracle(
+            f"""WITH {suite_text.GOPHER_GRAMS_CTE}
+            SELECT doc_id, n, gram, count(*),
+                   CASE WHEN n >= 5 THEN list_sort(list(pos)) ELSE [] END
+            FROM g GROUP BY doc_id, n, gram""",
+            ROWS,
+            with_corpus=True,
+        )
+    )
+    assert len(got) > 100_000  # real corpus, not a toy frame
+    assert got == want  # NULL text has no grams on either side
 
 
 def test_gopher_repetition_engines_identical(corpus):
-    a = _rows(tx.gopher_repetition(corpus, "doc_id", "text", engine="arrow"))
-    e = _rows(tx.gopher_repetition(corpus, "doc_id", "text", engine="explode"))
-    assert a == e  # doubles included: same ints through the same exprs
+    nulls, got = _split_nulls(_by_id(tx.gopher_repetition(corpus, "doc_id", "text")))
+    _, want = _split_nulls(
+        by_id(oracle(suite_text.Q_GOPHER_REPETITION_RULES_SQL, ROWS, with_corpus=True))
+    )
+    assert got == want  # doubles included: same ints through the same exprs
+    assert nulls == {i: NULL_GOPHER for i in NULL_IDS}
 
 
 def test_text_signals_engines_identical(corpus):
-    from pyspark.sql import functions as F
-
-    bench = corpus.filter(
-        (F.col("doc_id") < 20) | (F.col("doc_id") >= 100001)
+    # the composed oracle takes docs 0..19 as the contamination benchmark
+    bench = corpus.filter(F.col("doc_id") < 20)
+    nulls, got = _split_nulls(
+        _by_id(tx.text_signals(corpus, "doc_id", "text", benchmark=bench))
     )
-    a = _rows(tx.text_signals(corpus, "doc_id", "text", benchmark=bench,
-                              engine="arrow"))
-    e = _rows(tx.text_signals(corpus, "doc_id", "text", benchmark=bench,
-                              engine="explode"))
-    assert a == e  # includes cleaned_md5: span accounting bit-identical
-
-
-def test_unknown_engine_raises(corpus):
-    with pytest.raises(ValueError, match="engine"):
-        tx.gopher_repetition(corpus, "doc_id", "text", engine="bogus")
-    with pytest.raises(ValueError, match="engine"):
-        tx.text_signals(corpus, "doc_id", "text", engine="bogus")
-    with pytest.raises(ValueError, match="engine"):
-        tx._gram_count_table(corpus, "doc_id", "text", range(2, 4),
-                             engine="bogus")
+    _, want = _split_nulls(
+        by_id(oracle(suite_text.Q_CURATION_TEXT_SIGNALS_SQL, ROWS, with_corpus=True))
+    )
+    assert got == want  # includes cleaned_md5: span accounting exact
+    # NULL text: no grams, no tokens, no rebuilt text
+    assert nulls == {
+        i: NULL_GOPHER + (0, 0, None, None, 0, 0, None, 0) for i in NULL_IDS
+    }

@@ -406,25 +406,29 @@ def test_warehouse_time_travel(spark, warehouse):
         warehouse.read_table("tt", version=999)
 
 
-def test_minhash_engines_bit_identical(spark, docs):
-    """The arrow and expression minhash engines produce identical
-    signatures (pure md5 + int64 modular arithmetic, no floats)."""
-    expr = {r["doc_id"]: list(r["signature"]) for r in
-            dedup.minhash_signatures(docs, "doc_id", "text", 16, 3, engine="expr").collect()}
-    arrow = {r["doc_id"]: list(r["signature"]) for r in
-             dedup.minhash_signatures(docs, "doc_id", "text", 16, 3, engine="arrow").collect()}
-    assert expr == arrow
-    # edge cases: empty text, whitespace-only, short text, null
-    edge = spark.createDataFrame(
-        [(1, ""), (2, "   "), (3, "two words"), (4, None)],
-        "doc_id long, text string",
+def test_minhash_engines_bit_identical(spark):
+    """MinHash signatures equal the DuckDB oracle's (pure md5 + int64
+    modular arithmetic, no floats) over the real corpus plus the edge
+    shapes; NULL text, which the oracle drops, signs as empty text."""
+    from etl_file_loader_spark.suite import dedup as suite_dedup
+    from tests.text_oracle import (
+        EDGE_ROWS,
+        by_id,
+        minhash_digests,
+        oracle,
+        spark_documents,
     )
-    e = {r["doc_id"]: list(r["signature"]) for r in
-         dedup.minhash_signatures(edge, "doc_id", "text", 8, 5, engine="expr").collect()}
-    a = {r["doc_id"]: list(r["signature"]) for r in
-         dedup.minhash_signatures(edge, "doc_id", "text", 8, 5, engine="arrow").collect()}
-    assert e == a
-    assert a[4] == a[1]  # null text ≡ empty text (one "" shingle) in both
+
+    df = spark_documents(spark, EDGE_ROWS, with_corpus=True)
+    sigs = dedup.minhash_signatures(df, "doc_id", "text", 16, 5)
+    got = minhash_digests(sigs)
+    want = by_id(oracle(suite_dedup.Q_DEDUP_MINHASH_SQL, EDGE_ROWS, with_corpus=True))
+    assert len(want) > 500  # real corpus, not a toy frame
+    null_id = next(i for i, t in EDGE_ROWS if t is None)
+    empty_id = next(i for i, t in EDGE_ROWS if t == "")
+    assert null_id not in want
+    assert got.pop(null_id) == got[empty_id]  # null text ≡ empty text
+    assert got == want
 
 
 def test_hash_split_stable_disjoint_and_rated(spark):

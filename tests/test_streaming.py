@@ -59,6 +59,42 @@ def test_streaming_invalid_rows_to_dlq(spark, warehouse, stream_dirs):
     assert "oops" in dlq[0]["validation_errors"]
 
 
+def test_micro_batch_resolves_grains_and_keeps_file_lineage(
+    spark, warehouse, stream_dirs
+):
+    """One trigger over two files that share a grain writes the grain once,
+    with the later file's row, and every row names the file it came from;
+    a later file re-sending the grain updates that one row."""
+    src, checkpoint = stream_dirs
+    row = "TXN{:03d},CUST01,SKU-1,{},1.00,1.00,2024-01-05,alice"
+    (src / "sales_1.csv").write_text(
+        f"{CSV_HEADER}\n{row.format(1, 1)}\n{row.format(2, 1)}\n"
+    )
+    (src / "sales_2.csv").write_text(f"{CSV_HEADER}\n{row.format(1, 5)}\n")
+    ingest = StreamingIngest(
+        spark, transactions_source(), warehouse, str(src), checkpoint
+    )
+
+    def target_rows():
+        return sorted(
+            (r["transaction_id"], r["quantity"], r["source_filename"])
+            for r in warehouse.read_table("transactions").collect()
+        )
+
+    ingest.start().awaitTermination(120)
+    assert target_rows() == [
+        ("TXN001", 5, "sales_2.csv"),
+        ("TXN002", 1, "sales_1.csv"),
+    ]
+
+    (src / "sales_3.csv").write_text(f"{CSV_HEADER}\n{row.format(1, 9)}\n")
+    ingest.start().awaitTermination(120)
+    assert target_rows() == [
+        ("TXN001", 9, "sales_3.csv"),
+        ("TXN002", 1, "sales_1.csv"),
+    ]
+
+
 def test_micro_batch_publish_keeps_a_concurrent_commit(
     spark, warehouse, stream_dirs, tmp_path, monkeypatch
 ):
@@ -105,9 +141,10 @@ def test_micro_batch_publish_keeps_a_concurrent_commit(
         return real_merge(*args, **kwargs)
 
     monkeypatch.setattr(publish_ops, "merge_upsert", merge_after_concurrent_commit)
+    # a micro-batch as start() delivers it: raw columns plus file lineage
     batch = spark.createDataFrame(
         [row.format(i, 1).split(",") for i in range(300, 600)], raw_stream_schema(cfg)
-    )
+    ).withColumn(publish_ops.FILENAME_COL, F.lit("sales_3.csv"))
     StreamingIngest(spark, cfg, warehouse, str(src), checkpoint)._process_batch(batch, 0)
     threads[0].join(120)
     assert not threads[0].is_alive()

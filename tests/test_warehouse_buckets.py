@@ -159,3 +159,25 @@ def test_append_refused_on_bucketed_table(spark, tmp_path):
     with pytest.raises(ValueError, match="partitioned"):
         wh.append("p", spark.createDataFrame([(10, 0)], "id long, k long"))
     assert wh.read_table("p").count() == 10
+
+
+def test_compact_keeps_partition_layout(spark, tmp_path):
+    """``compact`` of a table written with ``partition_by`` rewrites it in
+    the same hive layout, so readers still prune on those columns."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(i, i % 2, i % 3) for i in range(12)], "id long, k long, j long"
+    )
+    wh.overwrite("parted", df, partition_by=["k", "j"])
+    wh.compact("parted")
+
+    versions = wh.table_versions("parted")
+    current = tmp_path / "wh" / "parted" / f"_v{versions[-1]}"
+    assert versions[-1] == 1
+    assert sorted(p.name for p in current.iterdir() if "=" in p.name) == ["k=0", "k=1"]
+    assert sorted(p.name for p in (current / "k=0").iterdir() if "=" in p.name) == [
+        "j=0", "j=1", "j=2"
+    ]
+    assert sorted(tuple(r) for r in wh.read_table("parted").collect()) == sorted(
+        tuple(r) for r in df.collect()
+    )
