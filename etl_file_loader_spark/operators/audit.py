@@ -2,7 +2,9 @@
 
  - grain uniqueness: COUNT(*) vs COUNT(DISTINCT grain) in one aggregate pass
    (reference audit/postgresql.py:20-26 and dialect twins). Composite grain is
-   native — no string-concat hacks needed.
+   native — no string-concat hacks needed. The per-file pipeline adds
+   :func:`distinct_grains` to its validation aggregate, so the check itself
+   runs no job unless it fails.
  - duplicate examples: top-5 duplicated grains (reference db_utils.py:331-351)
  - custom audit contract: user SQL over ``{table}``; single-row result; every
    column is a named boolean audit, value 0 => failed (reference
@@ -10,17 +12,17 @@
  - validation threshold: errors/records >= threshold => fail, first-5 samples
    (reference validator.py:45, 130-169)
 
-Scale: the grain check is one hash-aggregate shuffle on the grain key —
-map-side partial aggregation makes the shuffled data proportional to distinct
-grains, not rows. The duplicate-examples query reuses the same shuffle shape;
-`limit(5)` keeps the driver transfer bounded.
+Scale: the distinct-grain count is one hash-aggregate shuffle on the grain
+key — map-side partial aggregation makes the shuffled data proportional to
+distinct grains, not rows. The duplicate-examples query, run only on failure,
+reuses the same shuffle shape; `limit(5)` keeps the driver transfer bounded.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_file_loader_spark.config import sanitize_identifier
@@ -31,11 +33,20 @@ from etl_file_loader_spark.exceptions import (
 )
 
 
+def distinct_grains(grain: list[str], where: Column | None = None) -> Column:
+    """COUNT(DISTINCT grain) over the rows where ``where`` holds; a row
+    with a null grain column counts for no grain."""
+    cols = [F.col(g) for g in grain]
+    if where is not None:
+        cols = [F.when(where, c) for c in cols]
+    return F.count_distinct(*cols)
+
+
 def grain_counts(df: DataFrame, grain: list[str]) -> DataFrame:
     """Single-row frame: total_rows, distinct_grains, is_unique (0/1)."""
     agg = df.agg(
         F.count(F.lit(1)).alias("total_rows"),
-        F.count_distinct(*[F.col(g) for g in grain]).alias("distinct_grains"),
+        distinct_grains(grain).alias("distinct_grains"),
     )
     return agg.withColumn(
         "is_unique", (F.col("total_rows") == F.col("distinct_grains")).cast("int")
@@ -53,10 +64,16 @@ def duplicate_grain_examples(df: DataFrame, grain: list[str], limit: int = 5) ->
     )
 
 
-def check_grain(df: DataFrame, grain: list[str], filename: str | None = None) -> None:
-    """Raise GrainValidationError with top-5 examples if the grain duplicates."""
-    row = grain_counts(df, grain).collect()[0]
-    if row["is_unique"] != 1:
+def check_grain(
+    df: DataFrame,
+    grain: list[str],
+    total_rows: int,
+    n_distinct: int,
+    filename: str | None = None,
+) -> None:
+    """Raise GrainValidationError with the top-5 duplicated grains of
+    ``df`` when its ``total_rows`` rows hold only ``n_distinct`` grains."""
+    if n_distinct != total_rows:
         examples = [r.asDict() for r in duplicate_grain_examples(df, grain).collect()]
         raise GrainValidationError(grain, examples, filename)
 

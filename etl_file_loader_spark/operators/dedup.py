@@ -92,8 +92,7 @@ def minhash_signatures(
     in numpy: no explode and no shuffle, so signature generation is a
     narrow projection. Everything is md5 + int64 modular arithmetic (no
     floats), so the DuckDB oracle reproduces the signatures; it differs
-    only on null text (no signature there) and on text split by a
-    vertical tab (RE2's \\s leaves it out, Java's includes it).
+    only on null text (no signature there).
 
     Tokenization goes through ``functions.py_tokens`` (Spark trim = ASCII
     space only; Java split keeps leading/trailing '' tokens for
@@ -403,9 +402,7 @@ def simhash(
     One Arrow-batched pandas UDF does tokenize -> md5 -> vectorized bit
     votes in numpy: no explode and no shuffle, so fingerprinting is a
     narrow projection. md5 + integer votes (no floats), so the DuckDB
-    oracle reproduces the fingerprints; it differs only on token-less
-    text (it votes one '' token) and on text split by a vertical tab
-    (RE2's \\s leaves it out, Java's includes it). Tokenization goes through
+    oracle reproduces the fingerprints. Tokenization goes through
     ``functions.py_tokens`` (JVM trim/split semantics: ASCII-space trim,
     leading/trailing '' tokens kept on tab/newline-edged text, ASCII-only
     \\s) -> distinct tokens -> int64 of the first ceil(bits/4) md5 hex

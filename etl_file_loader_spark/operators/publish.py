@@ -19,9 +19,10 @@ join on the merge condition + per-column conditional projection).
 
 Scale: one shuffle on the grain key for both sides. On a real cluster, bucket
 the target table by grain (``write.bucketBy(n, *grain)``) so repeated loads
-shuffle only the (much smaller) stage side. The insert/update counts reuse
-the same join shape (left_anti / inner+hash-filter) — Catalyst broadcasts the
-stage side automatically when a single file's rows are << the target.
+shuffle only the (much smaller) stage side. The insert/update/unchanged
+counts (reference publish/base.py:40-74) cost no join of their own: each
+joined row already knows its outcome, so ``merge_upsert`` sums the outcomes
+in an ``Observation`` that the write of the merged frame fills.
 
 Skew: the grain is unique on BOTH sides by construction (the grain-uniqueness
 audit gates publish), so the full-outer join is 1:1 per key — no per-key row
@@ -41,7 +42,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl_file_loader_spark.operators.hashing import HASH_COL
@@ -77,6 +78,7 @@ def merge_upsert(
     business_cols: list[str],
     now: Column | None = None,
     salt_buckets: int | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Full-outer-join MERGE rewrite; returns the new target contents.
 
@@ -88,6 +90,10 @@ def merge_upsert(
     ``salt_buckets`` adds a deterministic grain-derived salt as an extra
     equi-join key (see module docstring: redistributes hash-partition
     collision clusters; semantics unchanged).
+
+    ``observation`` receives ``inserts``, ``updates`` and ``unchanged``,
+    the fields of :class:`PublishCounts`, once an action such as the write
+    of the returned frame has run.
     """
     now = now if now is not None else F.current_timestamp()
     data_cols = [c for c in business_cols if c not in grain]
@@ -120,6 +126,13 @@ def merge_upsert(
     # publish/postgresql.py:24-43); matched-but-unchanged rows keep every
     # target value including source_filename / file_load_log_id
     take_stage = changed | (s_exists & ~t_exists)
+    if observation is not None:
+        joined = joined.observe(
+            observation,
+            F.count_if(s_exists & ~t_exists).alias("inserts"),
+            F.count_if(changed).alias("updates"),
+            F.count_if(s_exists & t_exists & ~changed).alias("unchanged"),
+        )
 
     def pick(c: str) -> Column:
         return F.when(take_stage, F.col(f"s_{c}")).otherwise(F.col(f"t_{c}")).alias(c)
@@ -137,31 +150,6 @@ class PublishCounts:
     inserts: int
     updates: int
     unchanged: int
-
-
-def publish_counts(target: DataFrame, stage: DataFrame, grain: list[str]) -> PublishCounts:
-    """Insert/update/unchanged counts (reference publish/base.py:40-74).
-
-    inserts   = stage rows with no grain match in target   (left_anti)
-    updates   = grain-matched rows whose etl_row_hash differs (inner + filter)
-    unchanged = grain-matched rows with equal hash
-
-    The reference computes matched via EXISTS then inserts = total - matched
-    ("EXISTS is more efficient than NOT EXISTS", publish/base.py:51-57);
-    Catalyst plans left_semi/left_anti from the same join, so we write the
-    intent directly and count all three in one pass over the inner join plus
-    one anti-join.
-    """
-    t = target.select(*grain, F.col(HASH_COL).alias("_t_hash"))
-    matched = stage.join(t, on=grain, how="inner")
-    agg = matched.agg(
-        F.count(F.lit(1)).alias("matched"),
-        F.sum((F.col(HASH_COL) != F.col("_t_hash")).cast("long")).alias("updates"),
-    ).collect()[0]
-    matched_n = agg["matched"] or 0
-    updates = int(agg["updates"] or 0)
-    inserts = stage.join(t, on=grain, how="left_anti").count()
-    return PublishCounts(inserts=inserts, updates=updates, unchanged=matched_n - updates)
 
 
 def is_file_loaded(target: DataFrame, filename: str) -> bool:

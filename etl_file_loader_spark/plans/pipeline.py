@@ -7,16 +7,25 @@ Reference run plan, fixed per file (reference runner.py:213-221):
 
 Spark re-expression: the read->rename->validate->split chain is ONE lazy plan;
 "stage" is never materialized (it stays a cached DataFrame — reference's stage
-table is an artifact of row-at-a-time DB loading). Actions, in order:
+table is an artifact of row-at-a-time DB loading). Every count the load
+reports or checks comes from an action it runs anyway. Actions, in order:
 
-    1. duplicate-file check     filter+limit on target        (J1)
-    2. validate + cache; one groupBy(_is_valid).count() pass  (P1-P9, A4)
-    3. DLQ append for invalid rows                            (K2, P5)
-    4. threshold check -> maybe fail                          (A4)
-    5. grain audit + custom audit SQL on the valid side       (A1-A3)
-    6. MERGE into target + insert/update counts               (J2-J4, A5)
-    7. DLQ cleanup of earlier runs for this file              (J5)
+    1. log id                   max over the run log
+    2. duplicate-file check     filter+limit on target           (J1)
+    3. validate + cache; one scalar aggregate counts rows,
+       invalid rows and distinct valid grains                    (P1-P9, A1, A4)
+       -> no rows: NoDataInFileError
+    4. DLQ append for invalid rows                               (K2, P5)
+    5. threshold check -> maybe fail                             (A4)
+    6. grain check on the step-3 counts (a job only on failure,
+       for the examples) + custom audit SQL on the valid side    (A1-A3)
+    7. MERGE write into target; insert/update/unchanged counts
+       observed on it                                            (J2-J4, A5)
+    8. DLQ stale probe, rewrite only if earlier runs left rows   (J5)
+    9. run-log append
 
+A CSV that scans as one partition runs no job while it is read, and each
+committed snapshot's schema is inferred once per ``Warehouse``.
 Failure at any step raises the taxonomy error; the run log records per-stage
 timings either way. Multi-file parallelism: the reference uses a thread pool
 over physical cores (processor.py:49-51); in Spark each file is already
@@ -29,11 +38,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_file_loader_spark.config import SourceConfig
-from etl_file_loader_spark.exceptions import DuplicateFileError, FileError
+from etl_file_loader_spark.exceptions import (
+    DuplicateFileError,
+    FileError,
+    NoDataInFileError,
+)
 from etl_file_loader_spark.operators import audit as audit_ops
 from etl_file_loader_spark.operators import dlq as dlq_ops
 from etl_file_loader_spark.operators import publish as publish_ops
@@ -54,22 +67,16 @@ from etl_file_loader_spark.sources import read_source
 DLQ_TABLE = "file_load_dlq"
 
 
-def publish(
-    warehouse: Warehouse,
-    cfg: SourceConfig,
-    stage: DataFrame,
-    n_stage: int | None = None,
-) -> PublishCounts:
+def publish(warehouse: Warehouse, cfg: SourceConfig, stage: DataFrame) -> PublishCounts:
     """MERGE ``stage`` into ``cfg.target_table`` as one new snapshot
     (reference publish/base.py:80-97).
 
     The table's lock is held for the whole read-merge-write, so no other
     publish to the table commits between this read and this write. A first
-    load writes the stage as it is, and every stage row is an insert:
-    ``n_stage`` is the stage's row count when the caller already has it,
-    and the stage is counted otherwise. A later load reads the whole current
-    snapshot, merges the stage into it with ``merge_upsert`` and commits the
-    result.
+    load writes the stage as it is, and every stage row is an insert. A
+    later load reads the whole current snapshot, merges the stage into it
+    with ``merge_upsert`` and commits the result. Either way the counts are
+    observed on the write itself, so they cost no Spark job of their own.
 
     Additive schema evolution (Delta mergeSchema analogue): business
     columns the config gained since the target was created join in as typed
@@ -78,31 +85,31 @@ def publish(
     drop from the new snapshot: the config is the schema of record.
     """
     table = cfg.target_table
+    # one Observation per write; read only after the write returned, since
+    # ``get`` waits for an action that a failed write never completes
+    obs = Observation()
     with warehouse.mutate(table):
         if not warehouse.exists(table):
-            counts = PublishCounts(
-                inserts=stage.count() if n_stage is None else n_stage,
-                updates=0,
-                unchanged=0,
-            )
-            merged = stage.withColumn(CREATED_COL, F.current_timestamp()).withColumn(
-                UPDATED_COL, F.lit(None).cast("timestamp")
+            merged = (
+                stage.withColumn(CREATED_COL, F.current_timestamp())
+                .withColumn(UPDATED_COL, F.lit(None).cast("timestamp"))
+                .observe(obs, F.count(F.lit(1)).alias("inserts"))
             )
         else:
             target = warehouse.read_table(table)
             for f in cfg.fields:
                 if f.name not in target.columns:
                     target = target.withColumn(f.name, F.lit(None).cast(f.dtype))
-            counts = publish_ops.publish_counts(target, stage, cfg.grain)
             merged = publish_ops.merge_upsert(
                 target,
                 stage,
                 cfg.grain,
                 cfg.business_columns,
                 salt_buckets=cfg.merge_salt_buckets,
+                observation=obs,
             )
         warehouse.overwrite(table, merged, partition_by=cfg.target_partition_by)
-    return counts
+    return PublishCounts(**{"updates": 0, "unchanged": 0, **obs.get})
 
 
 @dataclass
@@ -204,16 +211,19 @@ class PipelineRunner:
                 # cache: the audit and publish stages each re-read the
                 # validated frame (and the DLQ build when rows fail) —
                 # recomputing the validation projection per pass measures
-                # ~40% slower than materializing once. Counts come from one
-                # scalar aggregate (no groupBy shuffle).
+                # ~40% slower than materializing once. One aggregate fills
+                # the cache and counts rows, invalid rows and the distinct
+                # grains of the valid rows (for the grain audit).
                 validated = validate_ops.validate(renamed, cfg).cache()
+                is_valid = F.col(validate_ops.VALID_COL)
                 c = validated.agg(
                     F.count(F.lit(1)).alias("_n"),
-                    F.sum(
-                        F.when(F.col(validate_ops.VALID_COL), 0).otherwise(1)
-                    ).alias("_bad"),
+                    F.sum(F.when(is_valid, 0).otherwise(1)).alias("_bad"),
+                    audit_ops.distinct_grains(cfg.grain, where=is_valid).alias("_grains"),
                 ).first()
                 n_total = c["_n"] or 0
+                if not n_total:
+                    raise NoDataInFileError("no data rows in file", self.path)
                 n_invalid = int(c["_bad"] or 0)
                 n_valid = n_total - n_invalid
                 st.row_count = n_total
@@ -247,16 +257,16 @@ class PipelineRunner:
             with self.log.stage("audit_data"):
                 from etl_file_loader_spark.config import stage_table_name
 
-                audit_ops.check_grain(stage, cfg.grain, self.filename)
+                audit_ops.check_grain(
+                    stage, cfg.grain, n_valid, c["_grains"], self.filename
+                )
                 audit_ops.check_audits(
                     self.spark, stage, cfg.audit_query, self.filename,
                     view_name=stage_table_name(self.filename),
                 )
 
             with self.log.stage("publish_data") as st:
-                # check_grain rejected duplicate grains, so on a first load
-                # every valid row is one insert
-                pub_counts = publish(self.warehouse, cfg, stage, n_stage=n_valid)
+                pub_counts = publish(self.warehouse, cfg, stage)
                 st.row_count = pub_counts.inserts + pub_counts.updates
 
             with self.log.stage("cleanup_dlq_records"):

@@ -9,6 +9,10 @@ commit marker is in place. Readers list committed snapshots only, so a
 crash at any step of a write leaves the previous snapshot current, and a
 re-run of the same write reaches the result a run without the crash would
 have. Older snapshots are pruned to ``keep_versions`` only after the commit.
+A ``Warehouse`` infers each committed snapshot's schema once: it keys the
+schema by the snapshot's directory and its marker's token, which a snapshot
+re-created at the same path (after ``drop``, or by another ``Warehouse``)
+does not share.
 A MERGE builds its snapshot from a plan that reads the previous one, so the
 "read your own input while overwriting it" parquet hazard cannot arise.
 
@@ -66,6 +70,8 @@ class Warehouse:
         # lock-free (snapshot isolation via versioned dirs).
         self._locks: dict[str, threading.RLock] = {}
         self._meta = threading.Lock()
+        # snapshot directory -> (marker token, schema inferred from it)
+        self._schemas: dict[str, tuple[str, T.StructType]] = {}
 
     def _p(self, *parts: str) -> str:
         return "/".join([self._root, *parts])
@@ -86,6 +92,7 @@ class Warehouse:
         snapshots.commit(self._fs, self._p(table), "_v", new_v, write)
         for v in [*versions, new_v][: -max(self.keep_versions, 1)]:
             self._fs.rmtree(self._p(table, f"_v{v}"))
+            self._schemas.pop(self._p(table, f"_v{v}"), None)
 
     def exists(self, table: str) -> bool:
         return bool(self._versions(table))
@@ -116,15 +123,21 @@ class Warehouse:
                     f"table {table} version {version} not retained "
                     f"(available: {versions})"
                 )
-            return self._drop_internal(
-                self.spark.read.parquet(self._p(table, f"_v{version}"))
-            )
-        return self._drop_internal(
-            self.spark.read.parquet(self._p(table, f"_v{versions[-1]}"))
-        )
+            return self._read_snapshot(self._p(table, f"_v{version}"))
+        return self._read_snapshot(self._p(table, f"_v{versions[-1]}"))
 
-    @staticmethod
-    def _drop_internal(df: DataFrame) -> DataFrame:
+    def _read_snapshot(self, path: str) -> DataFrame:
+        """The committed snapshot at ``path``, reusing the schema inferred
+        for it when its marker still holds the same token (an empty marker,
+        written by another tool, is never trusted)."""
+        token = self._fs.read_text(f"{path}/{snapshots.MARKER}")
+        known = self._schemas.get(path)
+        if token and known and known[0] == token:
+            df = self.spark.read.schema(known[1]).parquet(path)
+        else:
+            df = self.spark.read.parquet(path)
+            if token:
+                self._schemas[path] = (token, df.schema)
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
     def overwrite(
@@ -168,7 +181,11 @@ class Warehouse:
                         f"append not supported on partitioned table "
                         f"{table!r}; use overwrite"
                     )
-                df.write.mode("append").parquet(out)
+                # no _SUCCESS from this write: the snapshot's marker, and
+                # its token, stay the commit's
+                df.write.mode("append").option(
+                    "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+                ).parquet(out)
 
     def mutate(self, table: str):
         """Context manager serializing a multi-step read-modify-write on ONE
@@ -209,4 +226,7 @@ class Warehouse:
 
     def drop(self, table: str) -> None:
         self._fs.rmtree(self._p(table))
+        for path in list(self._schemas):
+            if path.startswith(self._p(table, "")):
+                self._schemas.pop(path, None)
 

@@ -4,7 +4,9 @@ A snapshot chain is a directory ``root`` holding versions ``<prefix><N>``:
 warehouse tables (``_v<N>``), index state (``snapshot_v<N>``), streaming
 state (``state_v<N>``, ``state_e<N>``) and corpus deltas (``delta_v<N>``).
 A version is *committed* when its directory holds a ``_SUCCESS`` marker;
-readers list committed versions only.
+readers list committed versions only. The marker :func:`commit` writes holds
+a token unique to the attempt, so a reader can tell a version re-created at
+the same path from the one it read before.
 
 A writer never writes into a version's directory. :func:`commit` stages the
 whole version in a directory unique to the attempt (``_tmp_<prefix><N>.<id>``,
@@ -52,11 +54,12 @@ def commit(
     """
     root = root.rstrip("/")
     final = f"{root}/{prefix}{n}"
-    staging = f"{root}/_tmp_{prefix}{n}.{uuid.uuid4().hex[:12]}"
+    token = uuid.uuid4().hex
+    staging = f"{root}/_tmp_{prefix}{n}.{token[:12]}"
     write(staging)
     fs.mkdirs(staging)
-    if not fs.exists(f"{staging}/{MARKER}"):
-        fs.write_text(f"{staging}/{MARKER}", "")
+    fs.write_text(f"{staging}/{MARKER}", token)
+    fs.delete(f"{staging}/.{MARKER}.crc")  # the checksum of the writer's own marker
     if fs.exists(final) and not fs.exists(f"{final}/{MARKER}"):
         fs.rmtree(final)  # husk of a writer that wrote in place
     try:

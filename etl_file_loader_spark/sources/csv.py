@@ -11,11 +11,14 @@ supplies the within-partition counter, a count-per-partition job supplies the
 partition offsets (partition order = byte-offset order for splittable text,
 single partition for .gz — matching the reference's single-stream semantics),
 then parsed with ``from_csv`` into all-string columns so cast failures are
-captured by the validator, never silently nulled.
+captured by the validator, never silently nulled. A scan of one partition
+(a file below ``spark.sql.files.maxPartitionBytes``, or any .gz) has offset
+0 and runs no job here. A file with no data rows reads as an empty frame;
+the pipeline's validation count raises ``NoDataInFileError`` for it.
 
 Scale: text scan + from_csv + row numbering all stay in whole-stage codegen —
 no per-row Python serialization anywhere; the offset lookup is one extra
-count-per-partition job. Quoted embedded newlines break the
+count-per-partition job for a multi-partition scan. Quoted embedded newlines break the
 line-based path — set ``SourceConfig.multiline=True`` to switch to Spark's
 multiLine CSV reader (whole-file, non-splittable — the reference's
 DictReader is equally single-stream) with window-derived row numbers.
@@ -31,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_file_loader_spark.config import SourceConfig
-from etl_file_loader_spark.exceptions import MissingHeaderError, NoDataInFileError
+from etl_file_loader_spark.exceptions import MissingHeaderError
 from etl_file_loader_spark.operators.validate import FILE_ROW_COL
 from etl_file_loader_spark.sources.base import check_required_columns
 
@@ -64,12 +67,9 @@ def _read_csv_multiline(spark: SparkSession, path: str, config: SourceConfig) ->
     check_required_columns(df.columns, config, path)
     w = Window.orderBy(F.monotonically_increasing_id())
     first_data_row = 2 + config.skip_rows
-    out = df.withColumn(
+    return df.withColumn(
         FILE_ROW_COL, (F.row_number().over(w) + 1).cast("long")
     ).filter(F.col(FILE_ROW_COL) >= first_data_row)
-    if out.isEmpty():
-        raise NoDataInFileError("no data rows after header/skip_rows", path)
-    return out
 
 
 def read_csv(spark: SparkSession, path: str, config: SourceConfig) -> DataFrame:
@@ -90,18 +90,21 @@ def read_csv(spark: SparkSession, path: str, config: SourceConfig) -> DataFrame:
     # monotonically_increasing_id encodes (scan_partition_id << 33 | row-in-
     # partition), and text-file scan partitions are byte-offset-ordered splits,
     # so global row = per-partition offset + within-partition counter. The
-    # offsets come from one tiny count-per-partition job (numPartitions rows
-    # collected), mirroring zipWithIndex's extra job without its per-row
-    # JVM->Python->JVM serialization.
-    lines = spark.read.text(path).select(
+    # offsets of a multi-partition scan come from one tiny count-per-partition
+    # job (numPartitions rows collected), mirroring zipWithIndex's extra job
+    # without its per-row JVM->Python->JVM serialization.
+    text = spark.read.text(path)
+    lines = text.select(
         "value",
         F.spark_partition_id().alias("_pid"),
         F.monotonically_increasing_id().alias("_mid"),
     )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in lines.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
+    counts = {}
+    if text.rdd.getNumPartitions() > 1:
+        counts = {
+            r["_pid"]: r["cnt"]
+            for r in lines.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
+        }
     offsets: dict[int, int] = {}
     running = 0
     for pid in sorted(counts):
@@ -121,8 +124,6 @@ def read_csv(spark: SparkSession, path: str, config: SourceConfig) -> DataFrame:
     )
     first_data_row = 2 + config.skip_rows
     data = indexed.filter(F.col(FILE_ROW_COL) >= first_data_row)
-    if data.isEmpty():
-        raise NoDataInFileError("no data rows after header/skip_rows", path)
 
     schema_ddl = ", ".join(f"`{h}` string" for h in headers)
     parsed = data.select(

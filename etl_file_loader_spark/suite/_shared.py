@@ -35,6 +35,11 @@ from etl_file_loader_spark.operators import validate as validate_ops
 from etl_file_loader_spark.operators.hashing import HASH_COL
 
 
+# Java's \s, which the engine's tokenizers split on; RE2's \s, which the
+# DuckDB oracles' regexes use, leaves out the vertical tab \x0B
+JAVA_WS = r"[ \t\n\x0B\f\r]+"
+
+
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Suite queries may run under the DRIVER's SparkSession (entry/queries
     contract), which won't have our builder configs — set the two that

@@ -11,7 +11,13 @@ from etl_file_loader_spark.functions import local_rows_df
 from etl_file_loader_spark.operators import dedup as dedup_ops
 from etl_file_loader_spark.operators import similarity as sim_ops
 from etl_file_loader_spark.operators import text as text_ops
-from etl_file_loader_spark.suite._shared import ORACLES, QUERIES, _suite_ckpt_dir, _t
+from etl_file_loader_spark.suite._shared import (
+    JAVA_WS,
+    ORACLES,
+    QUERIES,
+    _suite_ckpt_dir,
+    _t,
+)
 from etl_file_loader_spark.suite.similarity import _recall_flag
 
 
@@ -33,9 +39,9 @@ FROM documents GROUP BY md5(text) ORDER BY 1
 
 
 # shared oracle CTEs: 5-gram shingles + 32-bit portable hash
-_SHINGLE_CTE = r"""
+_SHINGLE_CTE = rf"""
 words AS (
-  SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS w FROM documents
+  SELECT doc_id, lang, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
 ),
 sh AS (
   SELECT doc_id, lang, unnest(list_distinct(
@@ -120,7 +126,8 @@ def simhash_cte(bits: int) -> str:
     """The SimHash replay every SimHash oracle builds on: CTEs ending in
     ``sh(doc_id, simhash)``, the ``bits``-wide fingerprint of each doc's
     distinct tokens from md5-prefix token hashes (the first 8 hex chars up
-    to 32 bits, ceil(bits/4) beyond)."""
+    to 32 bits, ceil(bits/4) beyond). Token-less text (NULL, empty or
+    spaces only) gets no fingerprint."""
     n_hex = 8 if bits <= 32 else (bits + 3) // 4
     votes = ",\n         ".join(
         f"sum(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
@@ -131,8 +138,9 @@ def simhash_cte(bits: int) -> str:
         for b in range(bits)
     )
     return rf"""toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS tok
+  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '{JAVA_WS}'))) AS tok
   FROM documents
+  WHERE trim(text) <> ''
 ),
 th AS (
   SELECT doc_id, CAST('0x' || substr(md5(tok), 1, {n_hex}) AS BIGINT) AS th FROM toks
@@ -255,7 +263,7 @@ def q_dedup_minhash_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ORDERS_SHINGLE_CTE = rf"""
 words AS (
-  SELECT o_orderkey AS doc_id, string_split_regex(trim({_ORDERS_CORPUS_SQL_TEXT}), '\s+') AS w
+  SELECT o_orderkey AS doc_id, string_split_regex(trim({_ORDERS_CORPUS_SQL_TEXT}), '{JAVA_WS}') AS w
   FROM orders
 ),
 sh AS (
@@ -468,11 +476,11 @@ def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_DEDUP_FINGERPRINT_SQL = r"""
+Q_DEDUP_FINGERPRINT_SQL = rf"""
 WITH fp AS (
   SELECT doc_id,
          md5(array_to_string(list_sort(list_distinct(
-             list_transform(string_split_regex(trim(text), '\s+'), w -> lower(w))
+             list_transform(string_split_regex(trim(text), '{JAVA_WS}'), w -> lower(w))
          )), ' ')) AS fp
   FROM documents
 )
@@ -494,11 +502,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_ops.incremental_dedup(new, corpus, "doc_id", "text").orderBy("doc_id")
 
 
-Q_DEDUP_INCREMENTAL_SQL = r"""
+Q_DEDUP_INCREMENTAL_SQL = rf"""
 WITH fp AS (
   SELECT doc_id,
          md5(array_to_string(list_sort(list_distinct(
-             list_transform(string_split_regex(trim(text), '\s+'), w -> lower(w))
+             list_transform(string_split_regex(trim(text), '{JAVA_WS}'), w -> lower(w))
          )), ' ')) AS fp
   FROM documents
 ),
@@ -1179,9 +1187,9 @@ def q_jaccard_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_JACCARD_JOIN_PREFIX_SQL = r"""
+Q_JACCARD_JOIN_PREFIX_SQL = rf"""
 WITH words AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
 ),
 sh AS (
   SELECT doc_id, unnest(list_distinct(
@@ -1230,7 +1238,7 @@ def q_jaccard_prefix_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multiply with the identical IEEE value
 Q_JACCARD_PREFIX_CANDIDATES_SQL = rf"""
 WITH words AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
 ),
 sh AS (
   SELECT doc_id, unnest(list_distinct(
@@ -1396,9 +1404,9 @@ def q_jaccard_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_JACCARD_JOIN_DOCS_SQL = r"""
+Q_JACCARD_JOIN_DOCS_SQL = rf"""
 WITH words AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
 ),
 sh AS (
   SELECT doc_id, unnest(list_distinct(
@@ -1764,9 +1772,9 @@ def q_near_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_NEAR_DEDUP_EXACT_SQL = r"""
+Q_NEAR_DEDUP_EXACT_SQL = rf"""
 WITH RECURSIVE words AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
 ),
 sh AS (
   SELECT doc_id, unnest(list_distinct(

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from etl_file_loader_spark.operators import text as text_ops
-from etl_file_loader_spark.suite._shared import ORACLES, QUERIES, _t
+from etl_file_loader_spark.suite._shared import JAVA_WS, ORACLES, QUERIES, _t
 
 
 def q_skewed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,11 +126,11 @@ def q_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling_ops.shard_manifest(packed, "n_tokens", ["lang"])
 
 
-Q_SHARD_PACKING_SQL = r"""
+Q_SHARD_PACKING_SQL = rf"""
 WITH toks AS (
   SELECT doc_id, lang,
          CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n_tokens
+              ELSE len(string_split_regex(trim(text), '{JAVA_WS}')) END AS BIGINT) AS n_tokens
   FROM documents
 ),
 packed AS (
@@ -291,11 +291,11 @@ def q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed.select("doc_id", "lang", "shard_id").orderBy("doc_id")
 
 
-Q_TRAINING_ORDER_SQL = r"""
+Q_TRAINING_ORDER_SQL = rf"""
 WITH toks AS (
   SELECT doc_id, lang,
          CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n_tokens,
+              ELSE len(string_split_regex(trim(text), '{JAVA_WS}')) END AS BIGINT) AS n_tokens,
          ('0x' || substr(md5('shuffle|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS sk
   FROM documents
 )
@@ -321,11 +321,11 @@ def q_sequence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "chunk_idx")
 
 
-Q_SEQUENCE_CHUNKS_SQL = r"""
+Q_SEQUENCE_CHUNKS_SQL = rf"""
 WITH d AS (
   SELECT doc_id,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS toks
   FROM documents
 ),
 s AS (SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) > 0)
@@ -351,12 +351,12 @@ def q_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang", "seq_idx")
 
 
-Q_PACKED_SEQUENCES_SQL = r"""
+Q_PACKED_SEQUENCES_SQL = rf"""
 WITH d AS (
   SELECT doc_id, lang,
          list_append(
            CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(text), '\s+') END,
+                ELSE string_split_regex(trim(text), '{JAVA_WS}') END,
            '<|endofdoc|>') AS t2
   FROM documents
 ),
@@ -1210,7 +1210,7 @@ def _dsir_oracle_sql() -> str:
 WITH base AS (
   SELECT doc_id, lang,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS w
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS w
   FROM documents
 ),
 rawf AS ({feats}),
@@ -1311,7 +1311,7 @@ sen0 AS MATERIALIZED (
 sen AS MATERIALIZED (
   SELECT doc_id, s,
          row_number() OVER (PARTITION BY doc_id ORDER BY k) AS k,
-         len(string_split_regex(trim(s), '\s+')) AS tc
+         len(string_split_regex(trim(s), '{JAVA_WS}')) AS tc
   FROM sen0
 ),
 cum AS MATERIALIZED (
@@ -1382,11 +1382,11 @@ def q_length_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_LENGTH_BUCKETED_SQL = r"""
+Q_LENGTH_BUCKETED_SQL = rf"""
 WITH t AS (
   SELECT doc_id, lang,
          CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n_tokens
+              ELSE len(string_split_regex(trim(text), '{JAVA_WS}')) END AS BIGINT) AS n_tokens
   FROM documents
 ),
 b AS (
@@ -1453,11 +1453,11 @@ def q_mixture_waterfill_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_MIXTURE_WATERFILL_SQL = r"""
+Q_MIXTURE_WATERFILL_SQL = rf"""
 WITH toks AS (
   SELECT lang,
          CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n_tokens
+              ELSE len(string_split_regex(trim(text), '{JAVA_WS}')) END AS BIGINT) AS n_tokens
   FROM documents
 ),
 avail AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS avail FROM toks GROUP BY lang),

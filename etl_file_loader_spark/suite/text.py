@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from etl_file_loader_spark.operators import text as text_ops
 from etl_file_loader_spark.suite._shared import (
+    JAVA_WS,
     ORACLES,
     QUERIES,
     _epoch_snapshot,
@@ -64,7 +65,7 @@ Q_TEXT_STATS_SQL = rf"""
 WITH base AS (
   SELECT doc_id, text,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS toks
   FROM documents
 )
 SELECT doc_id,
@@ -92,12 +93,12 @@ def q_kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.kn_bigram_logprob(docs, "doc_id", "text").orderBy("doc_id")
 
 
-Q_KN_BIGRAM_LOGPROB_SQL = r"""
+Q_KN_BIGRAM_LOGPROB_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
          list_transform(
            CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(text), '\s+') END,
+                ELSE string_split_regex(trim(text), '{JAVA_WS}') END,
            t -> lower(t)) AS toks
   FROM documents
 ),
@@ -160,7 +161,7 @@ WITH base AS (
   SELECT doc_id, text,
          list_transform(
            CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(text), '\s+') END,
+                ELSE string_split_regex(trim(text), '{JAVA_WS}') END,
            w -> lower(w)) AS toks,
          length(text) AS n
   FROM documents
@@ -261,11 +262,11 @@ WITH scored AS (
                            ELSE greatest(0.2, 5000.0 / length(text)) END)
                + 0.3 * greatest(0.0, 1.0 - (CASE WHEN length(text) = 0 THEN 0.0
                      ELSE round((length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))) / length(text), 6) END) / 0.3)
-               + 0.3 * (CASE WHEN (CASE WHEN len(string_split_regex(trim(text), '\s+')) = 0 THEN 0.0
-                     ELSE round(len(list_filter(list_transform(string_split_regex(trim(text), '\s+'), w -> lower(w)),
-                                                w -> w IN ({_STOPWORDS_SQL}))) / len(string_split_regex(trim(text), '\s+')), 6) END)
+               + 0.3 * (CASE WHEN (CASE WHEN len(string_split_regex(trim(text), '{JAVA_WS}')) = 0 THEN 0.0
+                     ELSE round(len(list_filter(list_transform(string_split_regex(trim(text), '{JAVA_WS}'), w -> lower(w)),
+                                                w -> w IN ({_STOPWORDS_SQL}))) / len(string_split_regex(trim(text), '{JAVA_WS}')), 6) END)
                      BETWEEN 0.02 AND 0.6 THEN 1.0 ELSE 0.5 END), 6) AS q,
-         CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
+         CAST(len(string_split_regex(trim(text), '{JAVA_WS}')) AS BIGINT) AS n_tokens
   FROM documents
 ),
 reps AS (
@@ -386,9 +387,9 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-Q_GOPHER_REPETITION_SQL = r"""
+Q_GOPHER_REPETITION_SQL = rf"""
 WITH d AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
 ),
 g AS (
   SELECT doc_id, len(w) AS n_tokens, w[i] || ' ' || w[i+1] AS gram
@@ -429,9 +430,9 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_CONTAMINATION_SQL = r"""
+Q_CONTAMINATION_SQL = rf"""
 WITH d AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
 ),
 grams AS (
   SELECT doc_id, array_to_string(w[i:i+4], ' ') AS g
@@ -458,11 +459,11 @@ def q_duplicated_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_DUPLICATED_WINDOWS_SQL = r"""
+Q_DUPLICATED_WINDOWS_SQL = rf"""
 WITH d AS (
   SELECT doc_id,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS w
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS w
   FROM documents
 ),
 base AS (
@@ -506,7 +507,7 @@ Q_GOPHER_QUALITY_SQL = rf"""
 WITH d AS (
   SELECT doc_id, text,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS w,
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS w,
          list_filter(string_split(text, chr(10)), l -> length(trim(l)) > 0) AS ls
   FROM documents
 ),
@@ -560,11 +561,11 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_SPAN_DEDUP_SQL = r"""
+Q_SPAN_DEDUP_SQL = rf"""
 WITH d AS (
   SELECT doc_id,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS w
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS w
   FROM documents
 ),
 occ AS (
@@ -710,7 +711,7 @@ WITH w AS (SELECT {_CLF_WEIGHTS_SQL} AS wts),
 base AS (
   SELECT doc_id,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS toks
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS toks
   FROM documents
 ),
 f AS (
@@ -742,12 +743,12 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_UNIGRAM_LOGPROB_SQL = r"""
+Q_UNIGRAM_LOGPROB_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
          list_transform(
            CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(text), '\s+') END,
+                ELSE string_split_regex(trim(text), '{JAVA_WS}') END,
            t -> lower(t)) AS toks
   FROM documents
 ),
@@ -790,12 +791,12 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.bigram_logprob(docs, "doc_id", "text").orderBy("doc_id")
 
 
-Q_BIGRAM_LOGPROB_SQL = r"""
+Q_BIGRAM_LOGPROB_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
          list_transform(
            CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(text), '\s+') END,
+                ELSE string_split_regex(trim(text), '{JAVA_WS}') END,
            t -> lower(t)) AS toks
   FROM documents
 ),
@@ -845,12 +846,12 @@ def q_trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONE fixed left-to-right double expression, and the per-doc sum folds over
 # the (c3, x3, c2, x2, c1 -> m) profile in ascending sorted order — the
 # canonical fold that keeps 1-ulp ln() engine drift inside the round(6) grid.
-Q_TRIGRAM_LOGPROB_SQL = r"""
+Q_TRIGRAM_LOGPROB_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
          list_transform(
            CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(text), '\s+') END,
+                ELSE string_split_regex(trim(text), '{JAVA_WS}') END,
            t -> lower(t)) AS toks
   FROM documents
 ),
@@ -1035,10 +1036,10 @@ _GRR_TH = text_ops.GOPHER_REPETITION_THRESHOLDS
 # the Gopher oracle's token and gram replay: d(doc_id, text, w) with the
 # whitespace tokens w, and g(doc_id, n, pos, gram), one row per word
 # n-gram occurrence for n = 2..10 (pos is the 0-based first token)
-GOPHER_GRAMS_CTE = r"""d AS (
+GOPHER_GRAMS_CTE = rf"""d AS (
   SELECT doc_id, text,
          CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE string_split_regex(trim(text), '\s+') END AS w
+              ELSE string_split_regex(trim(text), '{JAVA_WS}') END AS w
   FROM documents
 ),
 g AS (
@@ -1209,7 +1210,7 @@ WITH d AS (
   SELECT doc_id,
          list_transform(
            CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-                ELSE string_split_regex(trim(text), '\s+') END,
+                ELSE string_split_regex(trim(text), '{JAVA_WS}') END,
            t -> lower(t)) AS w
   FROM documents {where}
 ),
@@ -1308,7 +1309,7 @@ def q_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.c4_filter(docs, "doc_id", "text").orderBy("doc_id")
 
 
-Q_C4_FILTER_SQL = r"""
+Q_C4_FILTER_SQL = rf"""
 WITH d AS (
   SELECT doc_id, text,
          list_filter(string_split(text, chr(10)), l -> length(trim(l)) > 0) AS ls
@@ -1319,7 +1320,7 @@ k AS (
          list_filter(ls, l ->
            (ends_with(trim(l), '.') OR ends_with(trim(l), '!')
             OR ends_with(trim(l), '?') OR ends_with(trim(l), '"'))
-           AND len(string_split_regex(trim(l), '\s+')) >= 5
+           AND len(string_split_regex(trim(l), '{JAVA_WS}')) >= 5
            AND NOT contains(lower(l), 'javascript')) AS kept
   FROM d
 ),
@@ -1336,13 +1337,13 @@ SELECT doc_id, n_lines, n_kept_lines,
          AS n_sentences,
        CAST(CASE WHEN contains(lower(text), 'lorem ipsum') THEN 1 ELSE 0 END AS BIGINT)
          AS has_lorem_ipsum,
-       CAST(CASE WHEN contains(text, '{') THEN 1 ELSE 0 END AS BIGINT)
+       CAST(CASE WHEN contains(text, '{{') THEN 1 ELSE 0 END AS BIGINT)
          AS has_curly_brace,
        md5(kept_text) AS kept_md5,
        CAST(CASE WHEN length(kept_text)
                       - length(regexp_replace(kept_text, '[.!?]', '', 'g')) >= 3
                   AND NOT contains(lower(text), 'lorem ipsum')
-                  AND NOT contains(text, '{')
+                  AND NOT contains(text, '{{')
             THEN 1 ELSE 0 END AS BIGINT) AS keep
 FROM s
 ORDER BY doc_id
@@ -1495,7 +1496,7 @@ def _phrase_sql() -> str:
     u = "\n  UNION ALL".join(branches)
     return rf"""
 WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS ws FROM documents
 ),
 w AS (
   SELECT doc_id, ws, i FROM t, unnest(range(1, len(ws) + 1)) u(i)
@@ -1552,9 +1553,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.ngram_novelty(docs, "doc_id", "text", n=5).orderBy("doc_id")
 
 
-Q_NGRAM_NOVELTY_SQL = r"""
+Q_NGRAM_NOVELTY_SQL = rf"""
 WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS ws FROM documents
 ),
 g AS (
   SELECT doc_id, array_to_string(ws[i : i + 4], ' ') AS gram
@@ -1618,10 +1619,10 @@ LEFT JOIN ("""
     + """) nv USING (doc_id)
 JOIN ("""
     + Q_SPAN_DEDUP_SQL
-    + r""") sp USING (doc_id)
+    + rf""") sp USING (doc_id)
 LEFT JOIN (
   WITH d AS (
-    SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+    SELECT doc_id, string_split_regex(trim(text), '{JAVA_WS}') AS w FROM documents
   ),
   grams AS (
     SELECT doc_id, array_to_string(w[i:i+4], ' ') AS g

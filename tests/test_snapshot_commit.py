@@ -232,3 +232,26 @@ def test_registry_layout_corpus_is_refused_not_overwritten(spark, tmp_path):
     with pytest.raises(RuntimeError, match="_versions"):
         vc.ingest(docs)
     assert spark.read.parquet(str(root / "delta_v1" / "docs")).count() == 1
+
+
+def test_recreated_table_never_reads_a_stale_schema(spark, tmp_path):
+    """A warehouse reuses the schema it inferred for a committed snapshot,
+    keyed by the marker's token: a table dropped and re-created at the same
+    version with another schema reads the new schema, through the same
+    ``Warehouse`` and through one that did not write it."""
+    root = str(tmp_path / "wh")
+    wh, other = Warehouse(spark, root), Warehouse(spark, root)
+    wh.overwrite("t", spark.createDataFrame([(1,)], "a long"))
+    assert wh.read_table("t").columns == ["a"]
+    assert wh.read_table("t").columns == ["a"]  # from the memo
+    wh.drop("t")
+    wh.overwrite("t", spark.createDataFrame([("x",)], "b string"))
+    assert wh.read_table("t").collect() == [("x",)]
+    other.drop("t")
+    other.overwrite("t", spark.createDataFrame([(2.5, 1)], "c double, d int"))
+    assert wh.table_versions("t") == [0]
+    assert wh.read_table("t").columns == ["c", "d"]
+    assert wh.read_table("t").collect() == [(2.5, 1)]
+    # appends keep the commit's marker, so the memo still applies
+    wh.append("t", spark.createDataFrame([(3.5, 2)], "c double, d int"))
+    assert sorted(wh.read_table("t").collect()) == [(2.5, 1), (3.5, 2)]
